@@ -49,7 +49,7 @@ final class TableFormat(val root: String) {
     val dir = s"${tableDir(name)}/snapshot=$snapshotId"
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dir)
-    val n = df.sparkSession.read.parquet(dir).count()
+    val n = Tables.parquet(df.sparkSession, dir).count()
     val snap = Snapshot(name, snapshotId, inputSnapshot, n, partitionCols, System.currentTimeMillis())
     Files.createDirectories(Paths.get(tableDir(name)))
     val line =
@@ -60,7 +60,7 @@ final class TableFormat(val root: String) {
   }
 
   def readTable(spark: SparkSession, name: String, snapshotId: String): DataFrame =
-    spark.read.parquet(s"${tableDir(name)}/snapshot=$snapshotId")
+    Tables.parquet(spark, s"${tableDir(name)}/snapshot=$snapshotId")
 
   /** Latest committed snapshot id for `name`, if any. */
   def latestSnapshot(name: String): Option[String] = {

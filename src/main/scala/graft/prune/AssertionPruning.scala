@@ -96,11 +96,17 @@ object AssertionPruning {
       .drop("subj_prefixes", "obj_prefixes", "functional")
 
     // degree feature join. `degJoin` strategies:
-    //  - "auto" (default): plain equi-join; AQE picks a broadcast-hash
-    //    join from the RUNTIME size of the degree aggregate (entities ≪
-    //    triples, so this is the usual outcome and zero extra shuffle)
-    //    and splits skewed SMJ partitions otherwise. No driver-side
-    //    probe job — round 1 paid an extra count() here per call.
+    //  - "auto" (default): plain equi-join. When planning cannot show
+    //    the degree aggregate small (the pipeline's inputs), it plans a
+    //    sort-merge join, and AQE switches to a broadcast-hash join from
+    //    the aggregate's RUNTIME size (entities ≪ triples, the usual
+    //    outcome) or splits skewed SMJ partitions otherwise. The switch
+    //    comes after the typed rows were shuffled for the sort-merge
+    //    join: the final plan writes them to `Exchange
+    //    hashpartitioning(subject)` and reads them back through
+    //    `AQEShuffleRead local` into the broadcast-hash join, so the big
+    //    side still pays one shuffle. No driver-side probe job — round 1
+    //    paid an extra count() here per call.
     //  - "broadcast": force the broadcast (planning-time hint).
     //  - "salted": the explicitly salted sort-merge join, spreading hub
     //    entities (~40% of edges) over saltBuckets reducers — the

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** One driver-contract query: Spark implementation + (optionally) the
   * exactly-equivalent DuckDB SQL oracle over the same parquet tables.
   * Oracle-less queries get the driver's weaker rows-only check.
@@ -15,7 +17,7 @@ final case class QueryDef(
 object Q {
 
   def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(s, s"$dir/$name.parquet")
 
   /** Derived triple view over the events table — the shared KG-shaped
     * input for operator queries (subject/predicate/object + provenance).

@@ -56,6 +56,7 @@ print(f"{'query':28s} {'sf0.1':>8s} {'sf1':>8s} {'ratio':>7s}")
 for r, q, ta, tb in rows:
     flag = "  <-- superlinear" if r > 13.0 else ""
     print(f"{q:28s} {ta:8.2f} {tb:8.2f} {r:7.2f}{flag}")
-ta, tb = sum(a.values()), sum(b.values())
+# over the queries both runs have, like the rows above
+ta, tb = sum(r[2] for r in rows), sum(r[3] for r in rows)
 print(f"{'TOTAL':28s} {ta:8.2f} {tb:8.2f} {tb/ta:7.2f}")
 EOF
