@@ -2,13 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Dumps `.explain("formatted")` for named driver-contract queries to
   * plans/<dir>/<query>_<suffix>.txt — the r08 optimization-evidence
-  * artifacts. Session config mirrors Bench (same shuffle-partition /
-  * AQE / broadcast settings) so the captured plans are the benched
-  * plans, not a differently-configured approximation.
+  * artifacts. The session is Bench's configuration ([[Session]]), so the
+  * captured plans are the benched plans.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <query...>
   */
@@ -17,19 +16,7 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query...>")
     val (outDir, suffix, names) = (args(0), args(1), args.drop(2))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .getOrCreate()
+    val spark = Session.builder("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

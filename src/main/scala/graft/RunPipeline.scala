@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.TableFormat
+import graft.core.{Session, TableFormat}
 import graft.fixtures.Fixtures
 import graft.pipeline.KgPipeline
 
@@ -31,19 +29,9 @@ object RunPipeline {
     }
     val tablesDir = args(1)
     val runId = if (args.length > 2) args(2) else "run1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
+    val cpus = Session.cpus
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-kg-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .getOrCreate()
+    val spark = Session.builder("graft-kg-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Session
 
 /** Deterministic scale-up of the driver testdata ladder (TESTDATA.md):
   * replicate every fact table `factor` times with each copy's keys
@@ -28,14 +30,7 @@ object ScaleUp {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder("graft-scaleup").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def src(name: String): DataFrame =

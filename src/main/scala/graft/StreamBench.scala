@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.core.Session
 import graft.fixtures.Fixtures
 import graft.pipeline.KgPipeline
 import graft.streaming.StreamOps
@@ -12,9 +13,10 @@ import graft.streaming.StreamOps
   * as file-source micro-batches through
   * [[StreamOps.incrementalLinked]] (stateful exact dedup -> extract ->
   * stream-static link) and measure per-trigger throughput + state size.
-  * Prints ONE JSON line and appends it to BENCH/stream_bench.jsonl.
+  * Prints ONE JSON line and appends it to BENCH/stream_bench.jsonl
+  * under the working directory.
   *
-  * Env knobs: SPARK_GRAFT_CPUS (default 32),
+  * Env knobs: SPARK_GRAFT_CPUS (default: every core),
   * SPARK_GRAFT_KG_SCALE (tiny|small|bench, default small),
   * SPARK_GRAFT_TRIGGER_FILES (files per trigger, default 4),
   * SPARK_GRAFT_STATE_PROVIDER (hdfs|rocksdb, default hdfs) — rocksdb
@@ -40,8 +42,24 @@ object StreamBench {
       case c => c.toString
     }
 
+  /** Prints `json` and appends it to BENCH/stream_bench.jsonl under the
+    * working directory; a failed append is reported, not fatal.
+    */
+  private def record(json: String): Unit = {
+    println(json)
+    try {
+      val p = java.nio.file.Paths.get("BENCH", "stream_bench.jsonl")
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, (json + "\n").getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
+    } catch { case e: Throwable =>
+      System.err.println(s"[stream-bench] record append failed: ${e.getMessage}")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     val kgScale = sys.env.getOrElse("SPARK_GRAFT_KG_SCALE", "small")
     val filesPerTrigger = sys.env.getOrElse("SPARK_GRAFT_TRIGGER_FILES", "4").toInt
     val stateProvider = sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER", "hdfs")
@@ -68,18 +86,8 @@ object StreamBench {
         (kv.substring(0, i).trim, kv.substring(i + 1).trim)
       }.toSeq
     val nFiles = 16
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
+    val builder0 = Session.builder("graft-stream-bench")
       .config("spark.sql.streaming.stateStore.providerClass", providerClass)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
     val spark = stateConfPairs
       .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
@@ -105,8 +113,7 @@ object StreamBench {
     val pages = gen.pages.select("url", "text", "lang")
     // restage when missing OR when the staged row count disagrees with
     // the current fixture config — a _SUCCESS-only guard silently
-    // replays stale pages after a fixture change (the Microbench
-    // cache-corruption class)
+    // replays stale pages after a fixture change
     val staged = java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$inDir/pages/_SUCCESS")) &&
       spark.read.parquet(s"$inDir/pages").count() == cfg.nPages
@@ -161,16 +168,7 @@ object StreamBench {
         s""""stub_fallback_rows":${graft.multimodal.Multimodal
           .stubFallbackCounter(spark.sparkContext).value},""" +
         s""""triggers":$perTrigger}"""
-    println(json)
-    try {
-      val p = java.nio.file.Paths.get("/root/repo/BENCH/stream_bench.jsonl")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (json + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Throwable =>
-      System.err.println(s"[stream-bench] record append failed: ${e.getMessage}")
-    }
+    record(json)
     spark.stop()
   }
 
@@ -191,7 +189,7 @@ object StreamBench {
     * bound the event-time timeout exists to enforce — not grow with
     * ever-seen users).
     */
-  private def benchSessions(spark: SparkSession, cpus: String,
+  private def benchSessions(spark: SparkSession, cpus: Int,
       stateProvider: String, filesPerTrigger: Int,
       stateConf: String = ""): Unit = {
     import spark.implicits._
@@ -301,15 +299,6 @@ object StreamBench {
         s""""state_rows":${lastState.map(_.numRowsTotal).getOrElse(0L)},""" +
         s""""state_bytes":${lastState.map(_.memoryUsedBytes).getOrElse(0L)},""" +
         s""""triggers":$perTrigger}"""
-    println(json)
-    try {
-      val p = java.nio.file.Paths.get("/root/repo/BENCH/stream_bench.jsonl")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (json + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Throwable =>
-      System.err.println(s"[stream-bench] record append failed: ${e.getMessage}")
-    }
+    record(json)
   }
 }

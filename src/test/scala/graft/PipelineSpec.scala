@@ -35,7 +35,9 @@ class PipelineSpec extends AnyFunSuite {
     val tf = new TableFormat(root)
     val r1 = KgPipeline.run(spark, cfg, Some(tf), runId = "rA")
     val out1 = KgPipeline.outputTriples(r1).count()
-    assert(r1.metrics.nonEmpty) // stages actually ran
+    assert(r1.metrics.map(_.stage) == Seq("assertions", "linked",
+      "canonical_map", "canonical_triples", "scored", "triples",
+      "review_queue", "entity_dict", "relation_dict", "adjacency"))
     val r2 = KgPipeline.run(spark, cfg, Some(tf), runId = "rA")
     assert(r2.metrics.isEmpty, "resume must skip every stage")
     assert(KgPipeline.outputTriples(r2).count() == out1)

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main class directly against the sbt-compiled classes and
-# the Spark jars — no sbt lock, ~10s faster startup. Compile first with
-# `sbt -batch compile`.
+# the jars of the Spark install at $SPARK_HOME — no sbt lock, ~10s faster
+# startup. Compile first with `sbt -batch compile`.
 # Usage: tools/run_class.sh [-mem 12g] [-opts "-XX:..."] graft.Bench [args...]
 set -eu
 cd "$(dirname "$0")/.."
@@ -29,4 +29,4 @@ ADD_OPENS="$ADD_OPENS --add-opens=java.base/sun.security.action=ALL-UNNAMED"
 ADD_OPENS="$ADD_OPENS --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 exec java -Xmx"$MEM" $ADD_OPENS $EXTRA \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "target/scala-2.13/classes:${SPARK_HOME:-/opt/spark}/jars/*" "$@"
