@@ -31,86 +31,22 @@ object Ids {
     * unique row keys); ties within a partition would rank
     * nondeterministically.
     */
-  def globalRowNumber(df: DataFrame, orderCol: String, rnCol: String = "rn"): DataFrame =
-    globalOrdered(df, Seq(col(orderCol)), rnCol)
-
-  /** Generalization of [[globalRowNumber]]: global row_number (1..n)
-    * over a MULTI-column total order, plus optional exact running sums
-    * over the same order — everything a metric-style global window
-    * (`Window.orderBy(...)` with no partitioning) provides, without the
-    * single-partition sort that WindowExec would use (it moves the
-    * whole input to one task — the 100TB scale-killer this exists to
-    * avoid).
-    *
-    * Same partition-offset machinery as before, now two prefix sums per
-    * running-sum column: range-partition on the order columns, compute
-    * local rank / local cumsum per partition, then add the broadcast
-    * per-partition (count, sum) prefix totals. Range partitions are
-    * ordered by the key tuple, so offset + local value == global value
-    * exactly; deterministic and retry-stable regardless of where the
-    * sampled range boundaries fall.
-    *
-    * `orderCols` tuples must be distinct (callers append a unique
-    * tiebreak column); ties within a partition would rank
-    * nondeterministically.
-    *
-    * `runningSums`: (input column, output name) pairs; each output is
-    * sum(input) over rows 1..rn in the global order (inclusive running
-    * total, LONG input/output — callers scale doubles to exact integers
-    * first, the engine's cross-engine hash discipline).
-    */
-  def globalOrdered(df: DataFrame, orderCols: Seq[Column], rnCol: String = "rn",
-      runningSums: Seq[(Column, String)] = Nil): DataFrame = {
+  def globalRowNumber(df: DataFrame, orderCol: String, rnCol: String = "rn"): DataFrame = {
     val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sumIns = runningSums.zipWithIndex.map { case ((c, _), i) => c.as(s"__si$i") }
-    // enforce the documented LONG contract up front: the offsets collect
-    // below reads the per-partition totals with getLong, so a double (or
-    // any non-long) running-sum column would otherwise surface as an
-    // opaque ClassCastException deep in the offset pass
-    if (runningSums.nonEmpty) {
-      val sumSchema = df.select(sumIns: _*).schema
-      runningSums.zipWithIndex.foreach { case ((_, name), i) =>
-        val dt = sumSchema(s"__si$i").dataType
-        require(dt == org.apache.spark.sql.types.LongType,
-          s"globalOrdered running-sum '$name' must be LONG " +
-            s"(exact-integer contract: scale doubles to integers first), got $dt")
-      }
-    }
     val ranged = df
-      .select(col("*") +: sumIns: _*)
-      .repartitionByRange(parts, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
+      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col(orderCol))
+      .sortWithinPartitions(col(orderCol))
       .withColumn("__pid", spark_partition_id())
       .localCheckpoint(true)
-    val aggs = count(lit(1)).as("__n") +:
-      runningSums.indices.map(i => sum(col(s"__si$i")).as(s"__s$i"))
-    val totals = ranged.groupBy(col("__pid")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1),
-        runningSums.indices.map(i => if (r.isNullAt(2 + i)) 0L else r.getLong(2 + i))))
-      .sortBy(_._1)
-    var accN = 0L
-    val accS = Array.fill(runningSums.size)(0L)
-    val offsets = totals.map { case (pid, n, ss) =>
-      val o = (pid, accN, accS.toSeq)
-      accN += n; ss.zipWithIndex.foreach { case (s, i) => accS(i) += s }
-      o
-    }.toSeq
+    val counts = ranged.groupBy(col("__pid")).count()
+      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    val offsets = counts.map(_._1).zip(counts.scanLeft(0L)(_ + _._2))
     import spark.implicits._
-    val offDf = offsets.map { case (pid, off, soffs) => (pid, off, soffs) }
-      .toDF("__pid", "__off", "__soffs")
-    val w = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
-    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sumOuts = runningSums.zipWithIndex.map { case ((_, name), i) =>
-      (coalesce(sum(col(s"__si$i")).over(cum), lit(0L)) +
-        element_at(col("__soffs"), i + 1)).as(name)
-    }
+    val offDf = offsets.toSeq.toDF("__pid", "__off")
+    val w = Window.partitionBy(col("__pid")).orderBy(col(orderCol))
     ranged.join(broadcast(offDf), Seq("__pid"))
-      .select(col("*") +:
-        (row_number().over(w).cast("long") + col("__off")).as(rnCol) +:
-        sumOuts: _*)
-      .drop("__pid" +: "__off" +: "__soffs" +: runningSums.indices.map(i => s"__si$i"): _*)
+      .withColumn(rnCol, row_number().over(w).cast("long") + col("__off"))
+      .drop("__pid", "__off")
   }
 
   /** (key -> dense long id) dictionary, deterministic: ids follow the

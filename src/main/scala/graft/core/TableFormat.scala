@@ -62,21 +62,6 @@ final class TableFormat(val root: String) {
   def readTable(spark: SparkSession, name: String, snapshotId: String): DataFrame =
     Tables.parquet(spark, s"${tableDir(name)}/snapshot=$snapshotId")
 
-  /** Latest committed snapshot id for `name`, if any. */
-  def latestSnapshot(name: String): Option[String] = {
-    val p = manifestPath(name)
-    if (!Files.exists(p)) None
-    else {
-      val lines = Files.readAllLines(p)
-      if (lines.isEmpty) None
-      else {
-        val last = lines.get(lines.size - 1)
-        val m = """"snapshotId":"([^"]*)"""".r.findFirstMatchIn(last)
-        m.map(_.group(1))
-      }
-    }
-  }
-
   /** True iff `name` has a committed snapshot `snapshotId` produced from
     * `inputSnapshot` — the stage-skip predicate for resume.
     */

@@ -36,15 +36,12 @@ object PageDedup {
       .select(col("url"))
   }
 
-  def exact(pages: DataFrame): DataFrame =
-    pages.join(exactDropped(pages), Seq("url"), "left_anti")
-
   /** (url, band) rows: 2 bands of 3 over a 6-component minhash
     * signature — per-band collision probability is jaccard^3, steep
     * enough that merely-templated pages don't collide.
     *
     * Signatures come from the native Catalyst expression
-    * [[graft.functions.MinHashSignature]] — one compiled loop per row.
+    * [[graft.functions.TextMinHash]] — one compiled loop per row.
     * The equivalent `transform`+`aggregate` higher-order-function form
     * is interpreted per array element by Catalyst's lambda evaluator and
     * measured ~200 core-seconds per million pages; the expression is
@@ -89,9 +86,6 @@ object PageDedup {
     near.unionAll(shortExact).distinct()
   }
 
-  def minhash(pages: DataFrame): DataFrame =
-    pages.join(minhashDropped(pages), Seq("url"), "left_anti")
-
   /** Dropped-url set for the given mode; empty for "none". The pipeline
     * applies this to EXTRACTED assertions (url-keyed small rows), never
     * to the page table itself — anti-joining the pages would shuffle
@@ -102,11 +96,5 @@ object PageDedup {
     case "exact" => exactDropped(pages)
     case "minhash" => minhashDropped(pages)
     case other => throw new IllegalArgumentException(s"unknown dedup mode: $other")
-  }
-
-  /** Page-table form (convenience / tests). */
-  def apply(pages: DataFrame, mode: String): DataFrame = mode match {
-    case "none" => pages
-    case _ => pages.join(droppedUrls(pages, mode), Seq("url"), "left_anti")
   }
 }

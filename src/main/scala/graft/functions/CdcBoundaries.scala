@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -24,19 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * ~100x cheaper than interpreted HOF dispatch).
   */
 case class CdcBoundaries(child: Expression, window: Int, mod: Long)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "cdc_boundaries"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cdc_boundaries expects string, got $other")
-    }
 
   @transient private lazy val pow: Array[Long] =
     Array.tabulate(window)(j =>

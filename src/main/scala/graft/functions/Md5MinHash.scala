@@ -3,7 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -31,20 +31,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * same rows as a `size(split(text,' ')) >= n` filter.
   */
 case class Md5MinHash(child: Expression, n: Int, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "md5_minhash"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"md5_minhash expects string, got $other")
-    }
 
   // per-component digest prefixes: "0:", "1:", ... (ASCII bytes)
   @transient private lazy val prefixes: Array[Array[Byte]] =
@@ -158,19 +150,11 @@ object Md5MinHash {
   * returns an empty array), so the result is never null.
   */
 case class Md5SimHash(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "md5_simhash"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"md5_simhash expects string, got $other")
-    }
 
   @transient private lazy val mdLocal: ThreadLocal[MessageDigest] =
     new ThreadLocal[MessageDigest] {

@@ -1,124 +1,42 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
-/** MinHash signature over an n-gram shingling of a token array, as a
-  * native Catalyst expression.
+import graft.core.Ids.mix64
+
+/** k-permutation MinHash signature over the n-token shingles of a text,
+  * as a native Catalyst expression: out[kk] = min over shingles s of
+  * H_kk(s), H_kk a seeded 64-bit mix.
   *
   * Why a custom Expression (builder-guide preference (b)): the same
   * computation written with `transform` + `aggregate` higher-order
   * functions is interpreted per array element by Catalyst's lambda
-  * evaluator — measured ~200 core-seconds per 10^6 pages; this
-  * expression runs one compiled Scala loop per row (~10x-100x less).
-  * Token hashes are computed once and shingle hashes are mixes of n
-  * consecutive token hashes — no shingle strings are materialized.
-  *
-  * Semantics: out[k] = min over shingles s of H_k(s), H_k = seeded
-  * 64-bit mix — the classic k-permutation MinHash estimator.
-  */
-case class MinHashSignature(child: Expression, n: Int, k: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_signature expects array<string>, got $other")
-    }
-
-  // splitmix64 finalizer (pure, fast)
-  @inline private def mix64(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val nTok = arr.numElements()
-    val mins = Array.fill(k)(Long.MaxValue)
-    if (nTok >= n) {
-      // one hash per token
-      val th = new Array[Long](nTok)
-      var i = 0
-      while (i < nTok) {
-        val s = arr.getUTF8String(i)
-        val h32 =
-          if (s == null) 0
-          else Murmur3_x86_32.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 42)
-        th(i) = mix64(h32.toLong)
-        i += 1
-      }
-      // shingle hash = mix of n consecutive token hashes; k components
-      i = 0
-      val last = nTok - n
-      while (i <= last) {
-        var sh = 0L
-        var j = 0
-        while (j < n) { sh = mix64(sh ^ th(i + j)); j += 1 }
-        var kk = 0
-        while (kk < k) {
-          val hk = mix64(sh ^ (kk * 0xd6e8feb86659fd93L))
-          if (hk < mins(kk)) mins(kk) = hk
-          kk += 1
-        }
-        i += 1
-      }
-    }
-    new GenericArrayData(mins)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-/** MinHash signature computed DIRECTLY from the text bytes — tokenizes
-  * on single spaces inside the compiled loop, hashing each token as a
-  * byte slice of the input UTF8String. Unlike `split(text) |>
-  * MinHashSignature`, this allocates no per-token UTF8String objects and
-  * no token array: at 32 cores the banding stage is allocation-bound
-  * (young-gen GC scales with threads, the heap doesn't), so the
-  * zero-allocation form is what keeps the dedup stage scaling.
+  * evaluator — measured ~200 core-seconds per 10^6 pages; this is one
+  * compiled loop per row. It tokenizes on single spaces inside that
+  * loop, hashing each token as a byte slice of the input UTF8String, and
+  * shingle hashes are mixes of n consecutive token hashes: no per-token
+  * strings, no token array and no shingle strings are allocated. The
+  * banding stage is allocation-bound at high core counts (young-gen GC
+  * scales with threads, the heap doesn't), so the zero-allocation form
+  * is what keeps the dedup stage scaling.
   *
   * Returns NULL when the text has fewer than n tokens (no shingle
   * exists) — callers route those rows to exact-fingerprint dedup
   * instead of the sentinel-signature trap fixed in round 2.
   */
 case class TextMinHash(child: Expression, n: Int, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "text_minhash"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"text_minhash expects string, got $other")
-    }
-
-  @inline private def mix64(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
 
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String]
@@ -166,13 +84,6 @@ case class TextMinHash(child: Expression, n: Int, k: Int)
 }
 
 object MinHash {
-  /** Column form: minhash signature (array<long> of k components) of the
-    * n-gram shingles of a token array column.
-    */
-  def signature(tokens: Column, n: Int = 3, k: Int = 6): Column =
-    org.apache.spark.sql.GraftExpressionBridge.column(
-      MinHashSignature(org.apache.spark.sql.GraftExpressionBridge.expression(tokens), n, k))
-
   /** Column form of [[TextMinHash]]: signature straight from the text,
     * NULL when fewer than n tokens.
     */

@@ -3,48 +3,23 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** SimHash document fingerprinting over token arrays, as pure Column
-  * expressions (codegen'd higher-order functions — no UDF).
+/** 32-bit SimHash near-duplicate detection (Charikar'02 / Manku et al.
+  * WWW'07 — the standard web-dedup construction): bit b of a document's
+  * fingerprint is the strict-majority vote of bit b over its tokens'
+  * hashes; two documents are near-duplicates iff the Hamming distance of
+  * their fingerprints is <= k.
   *
-  * 32-bit simhash: for each bit b, sum +1/-1 votes of xxhash64(token)
-  * bit b over all tokens; fingerprint bit = sign. Near-duplicate iff
-  * hamming distance <= k. (Charikar'02 / Manku et al. WWW'07 — the
-  * standard web-dedup construction.)
+  * The queries fingerprint with the native [[Md5SimHash]] expression;
+  * [[fingerprintsPortable]] is the same computation in relational form,
+  * the reference the tests compare it against.
   */
 object SimHash {
 
   val bits = 32
 
-  /** token array -> 32-bit simhash as a long (0..2^32). */
-  def simhash(tokens: Column): Column = {
-    // votes: per token, its 64-bit hash; bit b contributes +1 if set
-    // else -1. Accumulate all 32 counters in one aggregate pass using a
-    // packed array of ints.
-    val zero = array((0 until bits).map(_ => lit(0)): _*)
-    val votes = aggregate(
-      tokens,
-      zero,
-      (acc, t) => {
-        val h = xxhash64(t)
-        val upd = (0 until bits).map { b =>
-          element_at(acc, b + 1) +
-            when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, lit(1)).otherwise(lit(-1))
-        }
-        array(upd: _*)
-      })
-    // fingerprint = sum over bits of (vote>0) << b
-    (0 until bits).map { b =>
-      when(element_at(votes, b + 1) > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   /** Hamming distance between two simhash longs. */
   def hamming(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
-
-  // ------------------------------------------------------------------
-  // Engine-portable relational form (oracle-checkable + the scale path)
-  // ------------------------------------------------------------------
 
   /** Relational 32-bit simhash: bit b of token t = (hex char b of
     * md5(t)) >= '8'; fingerprint bit = strict-majority vote over tokens.

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -91,19 +92,11 @@ final case class BroadcastCentroids(
   * per row — and centroid norms are precomputed at the same point.
   */
 case class CentroidRanks(child: Expression, centroids: CentroidSource)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "centroid_ranks"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"centroid_ranks expects array<double>, got $other")
-    }
 
   @transient private lazy val mat: Array[Array[Double]] = centroids.matrix
 
@@ -147,19 +140,11 @@ case class CentroidRanks(child: Expression, centroids: CentroidSource)
 }
 
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cosine_sim expects (array<double>, array<double>), got $other")
-    }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -186,19 +171,11 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 case class LshBuckets(child: Expression, tables: Int, planes: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "lsh_buckets"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lsh_buckets expects array<double>, got $other")
-    }
 
   // per-(table, plane) seed; sign(t, p, d) = mix64(seed ^ d) bit 0
   @transient private lazy val seeds: Array[Array[Long]] =

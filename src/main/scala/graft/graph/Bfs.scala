@@ -181,14 +181,4 @@ object Bfs {
       .unionAll(edges.select(d.as("src"), s.as("dst")))
       .distinct()
   }
-
-  /** Append transposed relations: each (src, dst, rel) also as
-    * (dst, src, rel + nRels) — the reference's both-direction message
-    * passing (/root/reference/src/gnn/lcilp/subgraph_extraction/
-    * datasets.py:245-251, test_ranking.py:78-81).
-    */
-  def withInverseRelations(adjacency: DataFrame, nRels: Int): DataFrame =
-    adjacency.select(col("src"), col("dst"), col("rel"))
-      .unionAll(adjacency.select(col("dst").as("src"), col("src").as("dst"),
-        (col("rel") + nRels).as("rel")))
 }

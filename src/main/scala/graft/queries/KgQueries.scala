@@ -13,6 +13,17 @@ import graft.queries.Q._
   */
 object KgQueries {
 
+  /** Width of the event_id chunks q15 and q55 rank within: one task
+    * sorts each (event_id % 100, event_id DIV RankChunk) group, so the
+    * width bounds a task's sort. Results are exact for any width.
+    */
+  private val RankChunk = 1L << 26
+
+  /** Width of the event_id buckets whose counts q64 collects to the
+    * driver; exact for any width.
+    */
+  private val Chunk64Bucket = 1L << 16
+
   val all: Seq[QueryDef] = Seq(
 
     // ---------------------------------------------- scans / projections
@@ -229,30 +240,25 @@ object KgQueries {
       // positive rank-sum, and the AUC in micro-units via integral
       // division — U = rank_sum - p(p+1)/2, auc_micro = U*1e6 div (p*n).
       (s, d) => {
-        // r8: single-pass deterministic-bucket ranking replaces the
-        // globalOrdered machinery (range-sample pass + localCheckpoint
-        // materialization + offsets collect + join-back — 4 jobs). The
-        // order key (score, event_id) is DERIVED: score = (event_id %
-        // 100)/100.0 is strictly monotone in event_id % 100, so
-        // bucketing by __b = event_id % 100 (refined by __g = event_id
-        // DIV chunk for bounded per-task sorts at scale) is an exact,
-        // deterministic, sample-free prefix of the total order — two
-        // passes over the same data always agree, no checkpoint needed
-        // (guide §8: use what the optimizer cannot know). rank(row) =
-        // (rows in earlier groups) + (local rank), and since the output
-        // is aggregates only, the per-group offsets fold in WITHOUT a
-        // join-back: rank_sum_pos = SUM_g[pos_rank_sum_g + pos_cnt_g *
-        // offset_g]. Plan: ONE data shuffle (hash by (__b,__g), window
-        // + partial agg in the same stage), then a metadata-sized
-        // single-partition window over the per-group totals (#groups =
-        // 100 * ceil(max_id/chunk) — bounded rows of longs, the same
-        // scale class as globalOrdered's offsets collect).
-        val chunkW = sys.env.getOrElse("GRAFT_RANK_CHUNK", "67108864").toLong
+        // Single-pass deterministic-bucket ranking: no range-sample
+        // pass, checkpoint or join-back. The order key (score, event_id)
+        // is DERIVED: score = (event_id % 100)/100.0 is strictly monotone
+        // in event_id % 100, so bucketing by __b = event_id % 100
+        // (refined by __g = event_id DIV RankChunk for bounded per-task
+        // sorts at scale) is an exact, deterministic, sample-free prefix
+        // of the total order — two passes over the same data always
+        // agree. rank(row) = (rows in earlier groups) + (local rank), and
+        // since the output is aggregates only, the per-group offsets fold
+        // in WITHOUT a join-back: rank_sum_pos = SUM_g[pos_rank_sum_g +
+        // pos_cnt_g * offset_g]. Plan: ONE data shuffle (hash by
+        // (__b,__g), window + partial agg in the same stage), then a
+        // metadata-sized single-partition window over the per-group
+        // totals (#groups = 100 * ceil(max_id / RankChunk) rows of longs).
         val base = triples(s, d).select(
           (col("value") > 100.0).cast("int").as("pos"),
           col("event_id"),
           expr("event_id % 100").as("__b"),
-          expr(s"event_id DIV ${chunkW}L").as("__g"))
+          expr(s"event_id DIV ${RankChunk}L").as("__g"))
         val w = Window.partitionBy(col("__b"), col("__g")).orderBy(col("event_id"))
         val grp = base
           .withColumn("__rk", row_number().over(w).cast("long"))
@@ -300,24 +306,22 @@ object KgQueries {
       // integers (same discipline as q15): per-positive precision in
       // micro-units via integral division, AP = their sum DIV p.
       (s, d) => {
-        // r8: deterministic-bucket ranking (see q15) replaces
-        // globalOrdered's sample + localCheckpoint + collect machinery.
-        // Order here is (score DESC, event_id ASC) = (__b DESC, __g ASC,
-        // event_id ASC) — same exact derived buckets, descending bucket
-        // order. prec_micro = (cum_pos*1e6) DIV rnk is nonlinear PER
-        // POSITIVE ROW, so unlike q15 the global offsets must reach the
-        // rows: pass 1 aggregates per-group (count, pos_count) —
-        // map-side partial agg, metadata-sized shuffle — into prefix
+        // Deterministic-bucket ranking (see q15). Order here is
+        // (score DESC, event_id ASC) = (__b DESC, __g ASC, event_id ASC)
+        // — same exact derived buckets, descending bucket order.
+        // prec_micro = (cum_pos*1e6) DIV rnk is nonlinear PER POSITIVE
+        // ROW, so unlike q15 the global offsets must reach the rows:
+        // pass 1 aggregates per-group (count, pos_count) — map-side
+        // partial agg, metadata-sized shuffle — into prefix
         // offsets; pass 2 re-scans (2 narrow columns, no checkpoint
         // needed because the bucketing is deterministic), computes local
         // rank + local running positive count per group in one window,
         // and a broadcast join shifts both by the group offsets.
-        val chunkW = sys.env.getOrElse("GRAFT_RANK_CHUNK", "67108864").toLong
         val base = triples(s, d).select(
           (col("value") > 100.0).cast("int").as("pos"),
           col("event_id"),
           expr("event_id % 100").as("__b"),
-          expr(s"event_id DIV ${chunkW}L").as("__g"))
+          expr(s"event_id DIV ${RankChunk}L").as("__g"))
         val offW = Window.orderBy(col("__b").desc, col("__g"))
           .rowsBetween(Window.unboundedPreceding, -1)
         val offs = base.groupBy(col("__b"), col("__g"))
@@ -366,14 +370,13 @@ object KgQueries {
       // the values hash identically across engines: index(q) =
       // (cnt-1)*q DIV 100 + 1 over the (score, edge_id)-sorted ranking.
       (s, d) => {
-        // r8: exact-rank selection without ranking the whole table.
+        // Exact-rank selection without ranking the whole table.
         // score = k/100.0 with k = min(event_id % 100) of the edge group,
         // so round(score*100) recovers k exactly and bucket __b = k is a
         // deterministic prefix of the (score, edge_id) total order (see
         // q15; <= 100 buckets by construction). The distinct-edge frame
         // is checkpointed ONCE (narrow: score + edge_id) and consumed
-        // twice: (1) per-bucket counts — a bounded <=100-row collect,
-        // the same metadata class as globalOrdered's offsets collect —
+        // twice: (1) per-bucket counts — a bounded <=100-row collect —
         // from which the 5 target ranks resolve ON THE DRIVER to
         // (bucket, local rank) pairs; (2) a window over ONLY the <=5
         // buckets that contain a target rank, i.e. ~5% of rows ranked
@@ -1010,25 +1013,20 @@ object KgQueries {
     QueryDef("q64_row_chunk",
       // seeded contiguous row chunk (Edge_Assignor.ipynb cell 5
       // l.17-22: random start index + chunk_size contiguous rows):
-      // global row_number over the stable event_id order — computed via
-      // the distributed partition-offset ranking, NOT a one-task window
-      // — then rows (start, start + chunk]. start = md5-hex-prefix
+      // global row_number over the stable event_id order — computed per
+      // event_id bucket, NOT as a one-task window — then rows (start, start + chunk]. start = md5-hex-prefix
       // integer of the seed mod (n - chunk + 1), portable to DuckDB.
       (s, d) => {
-        // r8: bucket-pruned extraction replaces ranking the WHOLE table
-        // to keep 500 rows (globalRowNumber = sample pass + checkpoint
-        // + offsets + window over 100% of rows, then crossJoin(count)
-        // re-aggregated the base again). event_id DIV bucket is a
+        // Bucket-pruned extraction: ranks ~2 buckets instead of the
+        // whole table to keep 500 rows. event_id DIV bw is a
         // deterministic prefix of the event_id order, so: pass 1
-        // aggregates per-bucket counts (bounded collect, the metadata
-        // class globalRowNumber's offsets collect was already in; the
-        // bucket width is the scale knob), the seeded start rank and
-        // the covering CONTIGUOUS bucket run resolve on the driver, and
-        // pass 2 re-scans ONLY that event_id range — a parquet
-        // min/max-pruned pushdown filter (guide §6) — ranking ~2
-        // buckets instead of the corpus.
+        // aggregates per-bucket counts (a driver collect of
+        // max(event_id) / bw rows), the seeded start rank and the
+        // covering CONTIGUOUS bucket run resolve on the driver, and pass
+        // 2 re-scans ONLY that event_id range — a parquet min/max-pruned
+        // pushdown filter.
         val chunk = 500
-        val bw = sys.env.getOrElse("GRAFT_CHUNK64_BUCKET", "65536").toLong
+        val bw = Chunk64Bucket
         val base = table(s, d, "events").select("event_id", "event_type")
         val cnts = base.groupBy(expr(s"event_id DIV ${bw}L").as("__g"))
           .agg(count(lit(1)).as("__c"))

@@ -29,13 +29,6 @@ object StreamOps {
       .select(col("window.start").as("w_start"), col("event_type"),
         col("n"), col("total"))
 
-  /** Streaming triple extraction: the extract stage is stateless Column
-    * logic, so the SAME TripleExtract.assertions transform runs on a
-    * readStream of pages unchanged — continuous crawl ingestion.
-    */
-  def assertionsStream(pagesStream: DataFrame): DataFrame =
-    graft.extract.TripleExtract.assertions(pagesStream)
-
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
   final case class SessionUpdate(user_id: Long, n_events: Long, total: Double)

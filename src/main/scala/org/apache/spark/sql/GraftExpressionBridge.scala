@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into the private[sql] Column<->Expression converters of Spark
   * 4's classic API, for registering custom Catalyst expressions (e.g.
-  * graft.functions.MinHashSignature) as Columns. Standard extension
+  * graft.functions.TextMinHash) as Columns. Standard extension
   * technique: the only Spark-internal surface touched is this pair of
   * converters.
   */

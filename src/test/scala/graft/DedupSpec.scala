@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Page
@@ -15,13 +16,20 @@ class DedupSpec extends AnyFunSuite {
   def page(url: String, text: String): Page =
     Page(url, new Timestamp(0L), text.getBytes("UTF-8"), text, "en")
 
+  /** Urls the pipeline keeps under `mode`: the pages' urls minus
+    * [[PageDedup.droppedUrls]].
+    */
+  def kept(pages: DataFrame, mode: String): Set[String] =
+    pages.select("url").as[String].collect().toSet --
+      PageDedup.droppedUrls(pages, mode).as[String].collect()
+
   test("exact dedup: smallest url survives per identical text") {
     val pages = Seq(
       page("https://a/1", "alpha beta gamma delta epsilon zeta eta"),
       page("https://b/2", "alpha beta gamma delta epsilon zeta eta"), // dup
       page("https://c/3", "unique content entirely different here now"))
       .toDF()
-    val out = PageDedup.exact(pages).select("url").as[String].collect().toSet
+    val out = kept(pages, "exact")
     assert(out == Set("https://a/1", "https://c/3"))
   }
 
@@ -35,7 +43,7 @@ class DedupSpec extends AnyFunSuite {
       page("https://c/3", near), // near dup: most shingles shared
       page("https://d/4", far))
       .toDF()
-    val out = PageDedup.minhash(pages).select("url").as[String].collect().toSet
+    val out = kept(pages, "minhash")
     assert(out.contains("https://a/1") && out.contains("https://d/4"))
     assert(!out.contains("https://b/2"), "exact dup must collide in every band")
   }
@@ -50,19 +58,19 @@ class DedupSpec extends AnyFunSuite {
       page("https://s/4", "gamma delta"), // exact dup of s/2
       page("https://t/1", "one two three four five six seven eight nine ten"))
       .toDF()
-    val out = PageDedup.minhash(pages).select("url").as[String].collect().toSet
+    val out = kept(pages, "minhash")
     assert(out == Set("https://s/1", "https://s/2", "https://s/3", "https://t/1"))
   }
 
   test("dedup modes: none is identity; exact drops the fixture's true dups") {
     val cfg = Fixtures.tiny
     val pages = Fixtures.pages(spark, cfg).toDF()
-    assert(PageDedup(pages, "none").count() == 200)
+    assert(kept(pages, "none").size == 200)
     // the fixture embeds true duplicates (srcOf: j%7==3 republishes j-1)
     val nDups = (0L until cfg.nPages).count(j => Fixtures.srcOf(j) != j)
     assert(nDups > 20)
-    assert(PageDedup(pages, "exact").count() == 200 - nDups)
-    assertThrows[IllegalArgumentException](PageDedup(pages, "bogus"))
+    assert(kept(pages, "exact").size == 200 - nDups)
+    assertThrows[IllegalArgumentException](PageDedup.droppedUrls(pages, "bogus"))
   }
 
   test("pipeline P/R unchanged with minhash dedup on the fixture") {

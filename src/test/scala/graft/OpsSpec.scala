@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.Fixtures
-import graft.functions.SimHash
+import graft.functions.{Md5SimHash, SimHash}
 import graft.multimodal.Multimodal
 
 class OpsSpec extends AnyFunSuite {
@@ -18,7 +18,7 @@ class OpsSpec extends AnyFunSuite {
       (3L, "the quick brown fox leaps over the lazy dog again and again"),
       (4L, "completely different content about spark shuffles and joins"))
       .toDF("id", "text")
-      .select(col("id"), SimHash.simhash(split(col("text"), " ")).as("sh"))
+      .select(col("id"), Md5SimHash.of(col("text")).as("sh"))
     val m = docs.as[(Long, Long)].collect().toMap
     assert(m(1L) == m(2L))
     val near = java.lang.Long.bitCount(m(1L) ^ m(3L))
@@ -457,5 +457,29 @@ class OpsSpec extends AnyFunSuite {
       .select(graft.functions.CdcBoundaries.of(col("text"), w, 64L).as("b"))
       .as[Seq[Int]].head()
     assert(natA == hofA, s"astral divergence: native $natA vs hof $hofA")
+  }
+
+  test("custom expressions reject a wrong input type and evaluate on the right one") {
+    import org.apache.spark.sql.{AnalysisException, Column}
+    import graft.functions.{CdcBoundaries, Md5MinHash, MinHash, VectorOps}
+    val df = Seq(("a b c d", Seq(3.0, 4.0))).toDF("s", "v")
+    val m = Array(Array(1.0, 0.0), Array(0.0, 1.0))
+    // (prettyName, column form, the input column of the right type)
+    val cases: Seq[(String, Column => Column, String)] = Seq(
+      ("text_minhash", MinHash.signatureFromText(_), "s"),
+      ("md5_minhash", Md5MinHash.of(_), "s"),
+      ("md5_simhash", Md5SimHash.of(_), "s"),
+      ("cdc_boundaries", CdcBoundaries.of(_), "s"),
+      ("centroid_ranks", VectorOps.centroidRanks(_, m), "v"),
+      ("cosine_sim", c => VectorOps.cosine(c, c), "v"),
+      ("lsh_buckets", VectorOps.lshBuckets(_, 2, 3), "v"))
+    cases.foreach { case (name, f, right) =>
+      val wrong = if (right == "s") "v" else "s"
+      val e = intercept[AnalysisException](df.select(f(col(wrong))))
+      assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE" &&
+        e.getMessage.contains(name), s"$name on $wrong: ${e.getMessage}")
+      val row = df.select(f(col(right))).head()
+      assert(!row.isNullAt(0), s"$name on $right evaluated to NULL")
+    }
   }
 }

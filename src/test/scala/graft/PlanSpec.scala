@@ -108,35 +108,6 @@ class PlanSpec extends AnyFunSuite {
       "encodeEdges funnels the node set through one task")
   }
 
-  test("Ids.globalOrdered: multi-col rank + running sum == global window, distributed") {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // tie-heavy scores (50 distinct values over 4000 rows) with a
-    // unique tiebreak, DESC order — the q55 shape
-    val rows = (0 until 4000).map { i =>
-      val h = graft.core.Ids.mix64(i.toLong)
-      (i.toLong, (math.abs(h) % 50).toDouble / 50.0, (h & 1L).toInt)
-    }.toDF("event_id", "score", "pos")
-    val got = graft.core.Ids.globalOrdered(rows,
-      Seq(col("score").desc, col("event_id")), "rnk",
-      Seq(col("pos").cast("long") -> "cum_pos"))
-    // no single-partition stage anywhere in the distributed form
-    val plan = got.queryExecution.executedPlan.toString
-    assert(!plan.contains("SinglePartition"),
-      s"globalOrdered funnels through one task:\n$plan")
-    // bit parity with the WindowExec global-window form
-    val ord = Window.orderBy(col("score").desc, col("event_id"))
-    val want = rows
-      .withColumn("rnk", row_number().over(ord).cast("long"))
-      .withColumn("cum_pos", sum(col("pos").cast("long")).over(
-        ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val gotS = got.select("event_id", "rnk", "cum_pos")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val wantS = want.select("event_id", "rnk", "cum_pos")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(gotS == wantS, "distributed rank/cumsum diverges from the global window")
-  }
-
   test("q57 ranking protocol: hash-indexed picks, no test x entities cross join") {
     import spark.implicits._
     val edges = (0 until 500).map(i =>

@@ -7,23 +7,36 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The mains build their Spark session through [[graft.core.Session]];
-  * only the frozen Bench and Verify mains keep inline copies.
+  * only the frozen Bench and Verify mains keep inline copies. Engine code
+  * reads no environment variables: only the session factory and the
+  * mains do.
   */
 class SessionSpec extends AnyFunSuite {
 
-  test("SparkSession.builder appears only in core/Session, Bench and Verify") {
+  /** Paths under src/main/scala (relative) whose text contains `needle`. */
+  private def mainFilesContaining(needle: String): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root not found")
-    val allowed = Set("graft/core/Session.scala", "graft/Bench.scala", "graft/Verify.scala")
     val files = Files.walk(root)
-    val offenders =
-      try files.iterator.asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map(p => root.relativize(p).toString)
-        .filterNot(allowed)
-        .toList.sorted
-      finally files.close()
+    try files.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains(needle))
+      .map(p => root.relativize(p).toString)
+      .toList.sorted
+    finally files.close()
+  }
+
+  test("SparkSession.builder appears only in core/Session, Bench and Verify") {
+    val allowed = Set("graft/core/Session.scala", "graft/Bench.scala", "graft/Verify.scala")
+    val offenders = mainFilesContaining("SparkSession.builder").filterNot(allowed)
     assert(offenders.isEmpty, s"build the session with graft.core.Session: $offenders")
+  }
+
+  test("sys.env is read only by core/Session and the mains") {
+    val allowed = Set("graft/core/Session.scala", "graft/Bench.scala", "graft/Verify.scala",
+      "graft/PlanDump.scala", "graft/StreamBench.scala")
+    val offenders = mainFilesContaining("sys.env").filterNot(allowed)
+    assert(offenders.isEmpty,
+      s"engine code takes its settings as arguments or constants, not env vars: $offenders")
   }
 }

@@ -62,7 +62,7 @@ class StreamingSpec extends AnyFunSuite {
     val pages = Fixtures.pages(spark, Fixtures.tiny).toDF()
     pages.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(pages.schema).parquet(dir)
-    val q = StreamOps.assertionsStream(stream)
+    val q = graft.extract.TripleExtract.assertions(stream)
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("assert_out")
       .start()
