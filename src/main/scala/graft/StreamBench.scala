@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.core.Session
+import graft.core.{Session, TableFormat}
 import graft.fixtures.Fixtures
 import graft.pipeline.KgPipeline
 import graft.streaming.StreamOps
@@ -28,19 +28,6 @@ import graft.streaming.StreamOps
   * deterministic 2M-event feed instead of the KG front half.
   */
 object StreamBench {
-
-  /** JSON string-escape for values interpolated into the hand-built
-    * record: a conf value carrying a quote/backslash (or a control
-    * char) would otherwise emit a malformed jsonl row that silently
-    * breaks downstream bench-history parsing.
-    */
-  private[graft] def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
 
   /** Prints `json` and appends it to BENCH/stream_bench.jsonl under the
     * working directory; a failed append is reported, not fatal.
@@ -160,7 +147,7 @@ object StreamBench {
       .flatMap(_.stateOperators.headOption).map(_.memoryUsedBytes).getOrElse(0L)
     val json =
       s"""{"metric":"stream_kg","scale":"$kgScale","cpus":$cpus,""" +
-        s""""state_provider":"$stateProvider","state_conf":"${jsonEscape(stateConf)}",""" +
+        s""""state_provider":"$stateProvider","state_conf":"${TableFormat.jsonEscape(stateConf)}",""" +
         s""""pages":$nPages,"linked_rows":$linkedRows,"wall_sec":$wall,""" +
         s""""pages_per_sec":${nPages / wall},"n_triggers":${triggers.size},""" +
         s""""files_per_trigger":$filesPerTrigger,"state_rows":$stateRowsFinal,""" +
@@ -291,7 +278,7 @@ object StreamBench {
     val lastState = triggers.lastOption.flatMap(_.stateOperators.headOption)
     val json =
       s"""{"metric":"stream_sessions","cpus":$cpus,""" +
-        s""""state_provider":"$stateProvider","state_conf":"${jsonEscape(stateConf)}",""" +
+        s""""state_provider":"$stateProvider","state_conf":"${TableFormat.jsonEscape(stateConf)}",""" +
         s""""events":$nEvents,""" +
         s""""users":$users,"sessions_out":$sessionsOut,"wall_sec":$wall,""" +
         s""""events_per_sec":${nEvents / wall},"n_triggers":${triggers.size},""" +

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -93,11 +93,4 @@ object Ids {
 
   /** Uniform double in [0,1) from a long, pure. */
   def unitDouble(x: Long): Double = (mix64(x) >>> 11).toDouble / (1L << 53).toDouble
-
-  /** Column form: deterministic per-row salt in [0, buckets) derived from
-    * the given key columns — used for skew salting (north_star "salted
-    * sort-merge join") so the salt is stable under retries, unlike rand().
-    */
-  def saltCol(buckets: Int, cols: Column*): Column =
-    pmod(xxhash64(cols: _*), lit(buckets.toLong)).cast("int")
 }

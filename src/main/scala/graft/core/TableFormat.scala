@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions._
   * [[graft.pipeline.KgPipeline]].
   */
 final class TableFormat(val root: String) {
+  import TableFormat.jsonEscape
+
 
   private def tableDir(name: String) = s"$root/$name"
   private def manifestPath(name: String) = Paths.get(tableDir(name), "_manifest.jsonl")
@@ -35,9 +37,6 @@ final class TableFormat(val root: String) {
       rowCount: Long,
       partitionCols: Seq[String],
       committedAtMs: Long)
-
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
 
   /** Write `df` as snapshot `snapshotId`; append a manifest row on success. */
   def writeTable(
@@ -53,7 +52,7 @@ final class TableFormat(val root: String) {
     val snap = Snapshot(name, snapshotId, inputSnapshot, n, partitionCols, System.currentTimeMillis())
     Files.createDirectories(Paths.get(tableDir(name)))
     val line =
-      s"""{"table":"${esc(name)}","snapshotId":"${esc(snapshotId)}","inputSnapshot":"${esc(inputSnapshot)}","rowCount":$n,"partitionCols":"${esc(partitionCols.mkString(","))}","committedAtMs":${snap.committedAtMs}}""" + "\n"
+      s"""{"table":"${jsonEscape(name)}","snapshotId":"${jsonEscape(snapshotId)}","inputSnapshot":"${jsonEscape(inputSnapshot)}","rowCount":$n,"partitionCols":"${jsonEscape(partitionCols.mkString(","))}","committedAtMs":${snap.committedAtMs}}""" + "\n"
     Files.write(manifestPath(name), line.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     snap
@@ -68,7 +67,7 @@ final class TableFormat(val root: String) {
   def hasSnapshot(name: String, snapshotId: String, inputSnapshot: String): Boolean = {
     val p = manifestPath(name)
     Files.exists(p) && {
-      val needle = s""""snapshotId":"${esc(snapshotId)}","inputSnapshot":"${esc(inputSnapshot)}""""
+      val needle = s""""snapshotId":"${jsonEscape(snapshotId)}","inputSnapshot":"${jsonEscape(inputSnapshot)}""""
       Files.readAllLines(p).stream().anyMatch(l => l.contains(needle))
     }
   }
@@ -84,10 +83,25 @@ final class TableFormat(val root: String) {
       .collect()
     val ts = System.currentTimeMillis()
     val lines = rows.map { r =>
-      s"""{"stage":"${esc(stage)}","snapshot_id":"${esc(snapshotId)}","partition_id":${r.getInt(0)},"rows":${r.getLong(1)},"wall_ms":$wallMs,"ts":$ts}""" + "\n"
+      s"""{"stage":"${jsonEscape(stage)}","snapshot_id":"${jsonEscape(snapshotId)}","partition_id":${r.getInt(0)},"rows":${r.getLong(1)},"wall_ms":$wallMs,"ts":$ts}""" + "\n"
     }.mkString
     Files.createDirectories(Paths.get(root))
     Files.write(Paths.get(root, "_lineage.jsonl"), lines.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
+}
+
+object TableFormat {
+
+  /** JSON string-escape for values interpolated into hand-built
+    * records: quote, backslash and control characters escaped, so a
+    * value carrying them cannot break the jsonl row.
+    */
+  private[graft] def jsonEscape(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
 }

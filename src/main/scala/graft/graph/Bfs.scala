@@ -1,154 +1,166 @@
 package graft.graph
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Level-synchronous k-hop BFS as iterative frontier joins
-  * (reference: /root/reference/src/gnn/lcilp/utils/dgl_utils.py:8-31).
+/** The graph layer's one BFS: level-synchronous k-hop walks
+  * (reference code: src/gnn/lcilp/utils/dgl_utils.py:8-31),
+  * as frontier joins over Spark ([[kHop]]) and as its driver twin over
+  * an adjacency map ([[kHopLocal]]). Every walk in `Bfs` and
+  * [[Subgraphs]] is one of these two with its own keys, cap and blocked
+  * node, so the two forms reach the same nodes at the same levels.
   *
   * `maxNodesPerHop` reproduces the reference's per-level down-sampling
-  * (dgl_utils.py:26-27) — the supernode/skew guard — but with a
-  * deterministic hash order instead of np.random.choice, so results are
+  * (dgl_utils.py:26-27) — the supernode/skew guard — but keeps the
+  * md5(node)-smallest nodes instead of np.random.choice, so results are
   * retry-stable (SURVEY.md §7.4).
   */
 object Bfs {
 
   /** edges(src,dst) directed as given (pass the symmetrized edge list
-    * for undirected semantics); seeds(node). Returns (node, dist) for
-    * all nodes within <= h hops, dist = BFS level (seeds at 0).
+    * for undirected semantics). Walks one BFS per distinct value of the
+    * `keys` columns, all keys in the same level-synchronous job.
+    *
+    * seeds carries `keys`, the optional `blocked` column and `node`; its
+    * distinct rows are the level-0 nodes. Returns those columns plus
+    * `dist` (the BFS level, seeds at 0) for every node within h hops of
+    * its key's seeds — the first level that reaches a node is its
+    * shortest distance, enforced by the visited anti-join.
+    *  - `maxNodesPerHop` keeps, per key and level, the nodes with the
+    *    smallest md5(node);
+    *  - `blocked` names a seed column holding a node the walk never
+    *    enters (the enclosing subgraph's "other root removed" rule).
     */
   def kHop(
       edges: DataFrame,
       seeds: DataFrame,
       h: Int,
-      maxNodesPerHop: Option[Int] = None): DataFrame = {
-    var visited = seeds.select(col("node"), lit(0).as("dist")).distinct()
+      maxNodesPerHop: Option[Int] = None,
+      keys: Seq[String] = Nil,
+      blocked: Option[String] = None): DataFrame = {
+    val carried = (keys ++ blocked).map(col)
+    var visited = seeds.select(carried :+ col("node"): _*).distinct()
+      .withColumn("dist", lit(0))
       .localCheckpoint(true)
     var frontier = visited
     var level = 0
     while (level < h && frontier.limit(1).count() > 0) {
       level += 1
-      var next = frontier
-        .join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node"))
+      val stepped = frontier.join(edges, frontier("node") === edges("src"))
+      var next = blocked.fold(stepped)(b => stepped.filter(col("dst") =!= col(b)))
+        .select(carried :+ col("dst").as("node"): _*)
         .distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti")
+        .join(visited.select((keys :+ "node").map(c => col(c).as(s"__v_$c")): _*),
+          (keys :+ "node").map(c => col(c) === col(s"__v_$c")).reduce(_ && _),
+          "left_anti")
       maxNodesPerHop.foreach { cap =>
-        next = next.orderBy(md5(col("node").cast("string"))).limit(cap)
+        next = next.withColumn("__rn", row_number().over(
+          Window.partitionBy(keys.map(col): _*).orderBy(md5(col("node").cast("string")))))
+          .filter(col("__rn") <= cap)
+          .drop("__rn")
       }
-      frontier = next.select(col("node"), lit(level).as("dist")).localCheckpoint(true)
-      visited = visited.unionAll(frontier).localCheckpoint(true)
+      frontier = next.withColumn("dist", lit(level)).localCheckpoint(true)
+      // a union of checkpointed frames: the next anti-join re-reads
+      // cached blocks, so visited needs no eager job of its own
+      visited = visited.unionAll(frontier)
     }
     visited
   }
 
+  /** Driver twin of [[kHop]] for one key: the same levels, md5 cap
+    * (over `node.toString`, as the distributed cast to string) and
+    * blocked node, over an in-memory adjacency map. Returns node -> dist.
+    */
+  def kHopLocal[N: ClassTag](
+      adj: Map[N, Array[N]],
+      seeds: Seq[N],
+      h: Int,
+      maxNodesPerHop: Option[Int] = None,
+      blocked: Option[N] = None): Map[N, Int] = {
+    lazy val md = java.security.MessageDigest.getInstance("MD5")
+    def md5hex(n: N): String =
+      java.util.HexFormat.of().formatHex(md.digest(n.toString.getBytes("UTF-8")))
+    val dist = scala.collection.mutable.Map.empty[N, Int]
+    var frontier = seeds.distinct
+    frontier.foreach(dist(_) = 0)
+    var level = 0
+    while (level < h && frontier.nonEmpty) {
+      level += 1
+      val next = frontier
+        .flatMap(n => adj.getOrElse(n, Array.empty[N]))
+        .filter(n => !blocked.contains(n) && !dist.contains(n))
+        .distinct
+      frontier = maxNodesPerHop.fold(next)(cap => next.sortBy(md5hex).take(cap))
+      frontier.foreach(dist(_) = level)
+    }
+    dist.toMap
+  }
+
   /** All-pairs shortest-path distances within components, bounded by
-    * maxDepth (reference eccentricity/diameter/radius stats,
-    * /root/reference/src/gnn/lcilp/utils/graph_utils.py:163-180 —
-    * networkx single-process; here one BFS frontier DataFrame keyed by
-    * source node, so every source expands in the same level-synchronous
-    * job). und(src,dst) must be symmetric. Returns (a, node, dist) for
-    * every node within maxDepth of a (dist is the exact shortest path:
-    * first level reached = minimum, enforced by the visited anti-join).
+    * maxDepth (the reference's eccentricity/diameter/radius stats,
+    * src/gnn/lcilp/utils/graph_utils.py:163-180 —
+    * networkx single-process; here one [[kHop]] keyed by source node
+    * `a`, so every source expands in the same level-synchronous job).
+    * und(src,dst) must be symmetric. Returns (a, node, dist) for every
+    * node within maxDepth of a.
     *
     * This op is inherently O(V*E): every node seeds a BFS. It is a
     * STATS op for dictionary-sized graphs (the reference runs networkx
     * eccentricity on subgraphs), NOT a full-graph operator — `maxNodes`
     * makes misapplication a hard error instead of a runaway job.
     *
-    * Small inputs (< `driverThreshold` edges) short-circuit to a
-    * driver-side BFS — the same adaptivity as ConnectedComponents.run:
-    * maxDepth distributed rounds of 3 jobs each cost ~15 job launches
-    * for work a collect finishes in microseconds at stats-subgraph
-    * size. BFS distances depend only on id EQUALITY (no ordering), so
-    * the string-cast round trip is type-safe. Pass driverThreshold=0 to
-    * force the distributed rounds (tests do).
+    * `requireConverged` walks one level past maxDepth and throws if any
+    * node lands there: truncated distances would silently fragment
+    * every per-component stat downstream.
+    *
+    * Small inputs (< `driverThreshold` edges) run [[kHopLocal]] on the
+    * driver instead: a bounded collect answers "is it small?" and
+    * already is the adjacency input, where the distributed walk pays ~3
+    * jobs per level. BFS distances depend only on id EQUALITY, so the
+    * string-cast round trip is type-safe. driverThreshold=0 forces the
+    * distributed walk (tests do).
     */
   def allPairsDistances(und: DataFrame, maxDepth: Int,
       maxNodes: Int = 10000, driverThreshold: Long = 1 << 16,
-      // default TRUE: silently truncated distances poison any
-      // downstream stat; a caller doing intentionally-bounded k-hop
-      // exploration opts out explicitly
       requireConverged: Boolean = true): DataFrame = {
     def guard(nNodes: Long): Unit = require(nNodes <= maxNodes,
       s"allPairsDistances seeds a BFS from EVERY node (O(V*E)); refusing a graph " +
         s"with > $maxNodes nodes — raise maxNodes only for bounded stats subgraphs")
-    def failTruncated(): Unit = throw new IllegalStateException(
+    def failTruncated(): Nothing = throw new IllegalStateException(
       s"allPairsDistances: BFS still had a non-empty frontier at maxDepth=$maxDepth " +
         "— distances are truncated and downstream per-component stats would " +
         "silently fragment; raise maxDepth above the true diameter")
+    val depth = if (requireConverged) maxDepth + 1 else maxDepth
     if (driverThreshold > 0) {
-      // the fast path collects the edges anyway — the node-count guard
-      // runs for free on the collected array instead of as an extra
-      // distributed distinct+count job. r8: probe BY collecting (the
-      // Subgraphs/CC dispatch discipline) — limit(th).collect answers
-      // the size question and already is the adjacency input, one job
-      // instead of the old limit+count probe plus a second full collect.
       val spark = und.sparkSession
       import spark.implicits._
       val idType = und.schema(und.columns(0)).dataType
       val edges = und.select(col("src").cast("string"), col("dst").cast("string"))
         .limit(driverThreshold.toInt).collect()
         .map(r => (r.getString(0), r.getString(1)))
-      if (edges.length >= driverThreshold.toInt) ()
-      else {
-      val adj = edges.groupBy(_._1).map { case (s, es) => (s, es.map(_._2)) }
-      val allNodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      guard(allNodes.length.toLong)
-      val out = Seq.newBuilder[(String, String, Int)]
-      allNodes.foreach { a =>
-        val dist = scala.collection.mutable.Map(a -> 0)
-        var frontier = Seq(a)
-        var d = 0
-        while (d < maxDepth && frontier.nonEmpty) {
-          d += 1
-          frontier = frontier
-            .flatMap(n => adj.getOrElse(n, Array.empty[String]))
-            .distinct.filterNot(dist.contains)
-          frontier.foreach(n => dist(n) = d)
+      if (edges.length < driverThreshold) {
+        val adj = edges.groupBy(_._1).map { case (s, es) => (s, es.map(_._2)) }
+        val allNodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+        guard(allNodes.length.toLong)
+        val out = allNodes.toSeq.flatMap { a =>
+          val dist = kHopLocal(adj, Seq(a), depth)
+          if (dist.valuesIterator.exists(_ > maxDepth)) failTruncated()
+          dist.map { case (n, d) => (a, n, d) }
         }
-        // truncation = one MORE level would still discover nodes (a
-        // non-empty final frontier alone just means diameter == maxDepth)
-        if (requireConverged && frontier.nonEmpty &&
-            frontier.iterator.flatMap(n => adj.getOrElse(n, Array.empty[String]))
-              .exists(n => !dist.contains(n))) failTruncated()
-        dist.foreach { case (n, dd) => out += ((a, n, dd)) }
-      }
-      return spark.createDataset(out.result()).toDF("a", "node", "dist")
-        .select(col("a").cast(idType).as("a"),
-          col("node").cast(idType).as("node"), col("dist"))
+        return spark.createDataset(out).toDF("a", "node", "dist")
+          .select(col("a").cast(idType).as("a"),
+            col("node").cast(idType).as("node"), col("dist"))
       }
     }
     val nodes = und.select(col("src").as("a"))
       .unionAll(und.select(col("dst").as("a"))).distinct()
     guard(nodes.limit(maxNodes + 1).count())
-    var dist = nodes
-      .select(col("a"), col("a").as("node"), lit(0).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dist
-    var d = 0
-    while (d < maxDepth && frontier.limit(1).count() > 0) {
-      d += 1
-      val next = frontier
-        .join(und, frontier("node") === und("src"))
-        .select(col("a"), col("dst").as("node")).distinct()
-        .join(dist.select(col("a").as("__va"), col("node").as("__vn")),
-          col("a") === col("__va") && col("node") === col("__vn"), "left_anti")
-        .select(col("a"), col("node"), lit(d).as("dist"))
-      frontier = next.localCheckpoint(true)
-      dist = dist.unionAll(frontier).localCheckpoint(true)
-    }
-    // truncation check mirrors the driver path: expand the final
-    // frontier once more and fail only if unseen nodes remain (an extra
-    // join job, paid only when the last frontier is non-empty)
-    if (requireConverged && frontier.limit(1).count() > 0) {
-      val more = frontier
-        .join(und, frontier("node") === und("src"))
-        .select(col("a"), col("dst").as("node")).distinct()
-        .join(dist.select(col("a").as("__va"), col("node").as("__vn")),
-          col("a") === col("__va") && col("node") === col("__vn"), "left_anti")
-      if (more.limit(1).count() > 0) failTruncated()
-    }
+    val dist = kHop(und, nodes.withColumn("node", col("a")), depth, keys = Seq("a"))
+    if (requireConverged && dist.filter(col("dist") > maxDepth).limit(1).count() > 0)
+      failTruncated()
     dist
   }
 
@@ -157,11 +169,11 @@ object Bfs {
     * min node id reachable (graph_utils.py:163-180).
     *
     * CONTRACT: `maxDepth` must be >= the true diameter of every
-    * component — ENFORCED: a BFS whose frontier is still non-empty at
-    * maxDepth throws (IllegalStateException) instead of silently
-    * fragmenting components into rows keyed by inconsistent
-    * min-reachable ids. Use ConnectedComponents.run for component ids
-    * when the diameter is unknown.
+    * component — ENFORCED: a BFS that still reaches nodes past maxDepth
+    * throws (IllegalStateException) instead of silently fragmenting
+    * components into rows keyed by inconsistent min-reachable ids. Use
+    * ConnectedComponents.run for component ids when the diameter is
+    * unknown.
     */
   def eccentricityStats(und: DataFrame, maxDepth: Int,
       driverThreshold: Long = 1 << 16): DataFrame = {

@@ -1,31 +1,40 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Enclosing-subgraph extraction + double-radius node labeling for
-  * candidate edges, batched over ALL candidates in one job
-  * (reference semantics:
-  * /root/reference/src/gnn/lcilp/subgraph_extraction/graph_sampler.py:300-391 —
-  * per-link python workers in an mp.Pool; here one edge_id-keyed frontier
-  * DataFrame per BFS level, so a million candidates are just more rows).
+  * candidate edges, batched over ALL candidates
+  * (reference semantics: src/gnn/lcilp/subgraph_extraction/graph_sampler.py:300-391 —
+  * per-link python workers in an mp.Pool; here every walk is one
+  * [[Bfs.kHop]] keyed by edge_id, so a million candidates are just more
+  * rows, or its driver twin [[Bfs.kHopLocal]] per candidate when the
+  * input is small).
   *
   * Semantics reproduced exactly:
   *  - nodes = {head, tail} ∪ (N_h(head) ∩ N_h(tail))   (enclosing mode)
   *  - d(v, head) is computed with tail REMOVED from the graph, and
-  *    d(v, tail) with head removed (graph_sampler.py:365-391);
+  *    d(v, tail) with head removed (graph_sampler.py:365-391) — the
+  *    walk's blocked node;
   *  - roots keep labels (0,1)/(1,0);
-  *  - prune to nodes with max(d_head, d_tail) <= h;
+  *  - only nodes within h of both roots are kept;
   *  - optional per-level frontier cap `maxNodesPerHop` mirroring the
   *    reference's down-sampling knob (utils/dgl_utils.py:26-27) with a
   *    deterministic md5 order instead of np.random.choice — without it a
   *    hub entity in the candidate set grows the frontier by
   *    candidates x hub-degree rows per level.
   *
-  * [[encloseAndLabelCommunity]] additionally reproduces the reference's
-  * ALWAYS-ON multicom community pruning (graph_sampler.py:319-325) as a
-  * mapGroups beam per candidate.
+  * Union mode and [[encloseAndLabelCommunity]] (the reference's
+  * ALWAYS-ON multicom community pruning, graph_sampler.py:319-325) share
+  * one assembly: gather the union neighborhood, collect its induced
+  * edges behind a per-candidate marker row, and label inside one beam
+  * body per candidate ([[communityLabelBeam]]).
+  *
+  * Small inputs (both under `driverThreshold` rows, read by one bounded
+  * collect each) run on the driver with the same walks and the same
+  * beam body: the distributed form costs ~3 jobs per BFS level, pure
+  * overhead at dictionary-sized graphs. driverThreshold=0 forces the
+  * distributed form; GraphSpec asserts both emit identical rows.
   */
 object Subgraphs {
 
@@ -34,13 +43,12 @@ object Subgraphs {
     * (edge_id, node, d_head, d_tail).
     *
     * `mode` mirrors the reference's `enclosing_sub_graph` switch
-    * (graph_sampler.py:327-331): "enclosing" (default — the driver
-    * path, unchanged) intersects the per-root root-removed
-    * neighborhoods; "union" takes roots + N_h(head) ∪ N_h(tail)
-    * gathered WITHOUT root removal (get_neighbor_nodes,
-    * graph_sampler.py:283-297 removes no roots) and then labels within
-    * the induced subgraph with the other root removed (node_label,
-    * graph_sampler.py:365-391).
+    * (graph_sampler.py:327-331): "enclosing" (default) intersects the
+    * per-root root-removed neighborhoods; "union" takes roots +
+    * N_h(head) ∪ N_h(tail) gathered WITHOUT root removal
+    * (get_neighbor_nodes, graph_sampler.py:283-297 removes no roots)
+    * and then labels within the induced subgraph with the other root
+    * removed (node_label, graph_sampler.py:365-391).
     *
     * Equivalence note (proved in GraphSpec "uncapped modes coincide"):
     * with NO per-hop cap the two modes emit identical rows — any ≤ h
@@ -53,6 +61,10 @@ object Subgraphs {
     * frontier, union per unremoved frontier (the reference's
     * np.random.choice domains differ the same way), so different nodes
     * survive the cap.
+    *
+    * The driver path engages only for BIGINT node ids and a string
+    * edge_id: the local body reads them without casts, and a cast would
+    * silently canonicalize "0123"-style string ids.
     */
   def encloseAndLabel(
       edges: DataFrame,
@@ -63,316 +75,12 @@ object Subgraphs {
       driverThreshold: Long = 1 << 16): DataFrame = {
     require(mode == "enclosing" || mode == "union",
       s"encloseAndLabel mode must be enclosing|union, got '$mode'")
-    // Small inputs short-circuit to a driver loop with the SAME BFS /
-    // cap / label semantics (the encloseAndLabelCommunity discipline:
-    // the distributed scaffolding is h levels x ~3 fixed jobs per mode,
-    // pure overhead at dictionary-sized graphs; driverThreshold=0
-    // forces the distributed path — tests assert both paths emit
-    // identical rows). Engages only for the long-id + string-edge_id
-    // shape the local body computes on; other schemas keep the fully
-    // type-generic distributed path.
-    if (driverThreshold > 0 && localShape(edges, candidates)) {
-      // r8 (verdict nit 4): the probe used to run limit(th).count() on
-      // each input — two jobs whose scan work encloseLocal's collects
-      // then immediately redid. Probe BY collecting: a bounded
-      // limit(th) collect answers "is it small?" and, when yes, already
-      // IS the local input — 2 jobs instead of 4, nothing read twice.
-      // (A not-small input wastes one bounded th-row collect and falls
-      // through to the distributed path — the same bound the count
-      // probe paid.) Null endpoints are dropped pre-limit; they never
-      // contribute rows on either path, so the size gate only tightens.
-      val th = driverThreshold.toInt
-      val eRows = edges.select(col("src"), col("dst"))
-        .filter(col("src").isNotNull && col("dst").isNotNull)
-        .limit(th).collect()
-      if (eRows.length < th) {
-        val cRows = candidates.select(col("edge_id"), col("head"), col("tail"))
-          .limit(th).collect()
-        if (cRows.length < th)
-          return encloseLocal(edges.sparkSession,
-            eRows.map(r => (r.getLong(0), r.getLong(1))),
-            cRows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
-            h, maxNodesPerHop, mode)
-      }
-    }
-    if (mode == "union")
-      return unionExtract(edges, candidates, h, maxNodesPerHop)
-
-    // BFS from both roots per candidate (side 0 = head, 1 = tail), the
-    // OTHER root removed per side. The two per-root walks are
-    // independent, so running them as one side-keyed frontier halves
-    // the fixed per-level job count (each level = join + anti-join +
-    // localCheckpoint) without changing a single emitted row — the
-    // dedup, cap window and root-removal filter are all keyed by
-    // (edge_id, side). frontier rows: (edge_id, side, other, node, dist)
-    def bfsBoth(): DataFrame = {
-      var visited = candidates.select(
-        col("edge_id"), lit(0).as("side"), col("tail").as("other"),
-        col("head").as("node"), lit(0).as("dist"))
-        .unionAll(candidates.select(
-          col("edge_id"), lit(1).as("side"), col("head").as("other"),
-          col("tail").as("node"), lit(0).as("dist")))
-        .localCheckpoint(true)
-      var frontier = visited
-      var level = 0
-      while (level < h && frontier.limit(1).count() > 0) {
-        level += 1
-        var next = frontier
-          .join(edges, frontier("node") === edges("src"))
-          .filter(col("dst") =!= col("other")) // other root removed
-          .select(col("edge_id"), col("side"), col("other"), col("dst").as("node"))
-          .distinct()
-          .join(visited.select(col("edge_id").as("v_eid"),
-              col("side").as("v_side"), col("node").as("v_node")),
-            col("edge_id") === col("v_eid") && col("side") === col("v_side") &&
-              col("node") === col("v_node"),
-            "left_anti")
-        // per-candidate per-side per-level cap (dgl_utils.py:26-27):
-        // bounded frontier even when a candidate touches a hub node
-        maxNodesPerHop.foreach { cap =>
-          next = next.withColumn("__rn", row_number().over(
-            Window.partitionBy("edge_id", "side")
-              .orderBy(md5(col("node").cast("string")))))
-            .filter(col("__rn") <= cap)
-            .drop("__rn")
-        }
-        frontier = next
-          .select(col("edge_id"), col("side"), col("other"), col("node"),
-            lit(level).as("dist"))
-          .localCheckpoint(true)
-        // visited needs no checkpoint of its own: it is a union of
-        // already-checkpointed frames, so the anti-join re-reads cached
-        // blocks instead of paying one more eager job per level
-        visited = visited.unionAll(frontier)
-      }
-      visited.drop("other")
-    }
-
-    val walked = bfsBoth()
-    val fromHead = walked.filter(col("side") === 0).drop("side")
-      .withColumnRenamed("dist", "d_head")
-    val fromTail = walked.filter(col("side") === 1).drop("side")
-      .withColumnRenamed("dist", "d_tail")
-
-    // enclosing: nodes reached from BOTH roots (inner join) …
-    val both = fromHead.join(fromTail, Seq("edge_id", "node"))
-    // … plus the roots themselves with the reference's fixed labels
-    val roots = candidates.select(col("edge_id"),
-      col("head").as("node"), lit(0).as("d_head"), lit(1).as("d_tail"))
-      .unionAll(candidates.select(col("edge_id"),
-        col("tail").as("node"), lit(1).as("d_head"), lit(0).as("d_tail")))
-
-    val nonRoots = both
-      .join(candidates, Seq("edge_id"))
-      .filter(col("node") =!= col("head") && col("node") =!= col("tail"))
-      .select(col("edge_id"), col("node"), col("d_head"), col("d_tail"))
-      .filter(greatest(col("d_head"), col("d_tail")) <= h)
-
-    roots.unionAll(nonRoots)
-  }
-
-  /** The driver fast path engages only when the local beam body's id
-    * contract holds exactly: BIGINT node ids everywhere and a string
-    * edge_id (no cast round-trips — "0123"-style string ids would
-    * silently canonicalize, so anything else stays distributed).
-    */
-  private def localShape(edges: DataFrame, candidates: DataFrame): Boolean = {
     import org.apache.spark.sql.types.{LongType, StringType}
-    candidates.schema("edge_id").dataType == StringType &&
+    val localShape = candidates.schema("edge_id").dataType == StringType &&
       Seq(candidates.schema("head"), candidates.schema("tail"),
-        edges.schema("src"), edges.schema("dst"))
-        .forall(_.dataType == LongType)
-  }
-
-  /** Driver fast path for [[encloseAndLabel]], both modes: collect the
-    * (sub-64k) edge list once, then run the per-candidate walks
-    * in-process. Every semantic knob mirrors the distributed twin
-    * verbatim — root-removed per-side BFS + per-(edge_id, side) md5
-    * cap for enclosing; unremoved gather (joint seeds uncapped,
-    * per-root seeds when the cap binds) + the shared
-    * [[communityLabelBeam]] body with community off for union — so
-    * both paths emit identical rows (GraphSpec parity, threshold
-    * forced to 0 for the distributed side).
-    */
-  private def encloseLocal(
-      spark: org.apache.spark.sql.SparkSession,
-      e: Array[(Long, Long)],
-      cands: Array[(String, Long, Long)],
-      h: Int,
-      maxNodesPerHop: Option[Int],
-      mode: String): DataFrame = {
-    import spark.implicits._
-    // inputs arrive pre-collected (null endpoints already dropped) from
-    // the dispatch probe — the probe's bounded collect IS the edge list
-    val adjAll: Map[Long, Array[Long]] = e.groupBy(_._1)
-      .map { case (k, v) => k -> v.map(_._2) }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def md5hex(n: Long): String = {
-      md.reset()
-      md.digest(n.toString.getBytes("UTF-8"))
-        .map(b => f"${b & 0xff}%02x").mkString
-    }
-
-    val out: Seq[LabeledNode] =
-      if (mode == "enclosing") cands.iterator.flatMap { case (eid, head, tail) =>
-        // per-side root-removed BFS, per-level md5 cap per side —
-        // bfsBoth()'s (edge_id, side)-keyed frontier, localized
-        def walk(root: Long, other: Long): Map[Long, Int] = {
-          val d = scala.collection.mutable.Map(root -> 0)
-          var frontier = Set(root)
-          var level = 0
-          while (level < h && frontier.nonEmpty) {
-            level += 1
-            var next = frontier
-              .flatMap(n => adjAll.getOrElse(n, Array.empty[Long]))
-              .filter(n => n != other && !d.contains(n))
-            maxNodesPerHop.foreach { cap =>
-              next = next.toSeq.sortBy(md5hex).take(cap).toSet
-            }
-            next.foreach(n => d(n) = level)
-            frontier = next
-          }
-          d.toMap
-        }
-        val dh = walk(head, tail)
-        val dt = walk(tail, head)
-        Iterator(LabeledNode(eid, head, 0, 1), LabeledNode(eid, tail, 1, 0)) ++
-          dh.iterator.flatMap { case (n, a) =>
-            dt.get(n) match {
-              // intersection of the two root-removed reaches, roots
-              // excluded, max(d) <= h prune — the distributed
-              // roots/nonRoots assembly exactly
-              case Some(b) if n != head && n != tail && math.max(a, b) <= h =>
-                Iterator(LabeledNode(eid, n, a, b))
-              case _ => Iterator.empty
-            }
-          }
-      }.toSeq
-      else cands.iterator.flatMap { case (eid, head, tail) =>
-        // union gather: NO root removal; joint seeds when uncapped
-        // (visited set of a multi-seed BFS == union of per-seed sets),
-        // per-root seeds + per-root cap when the cap binds — exactly
-        // unionExtract's gather() dispatch
-        def gatherLocal(seeds: Seq[Long]): Set[Long] = {
-          var visited = seeds.toSet
-          var frontier = visited
-          var level = 0
-          while (level < h && frontier.nonEmpty) {
-            level += 1
-            var next = frontier
-              .flatMap(n => adjAll.getOrElse(n, Array.empty[Long]))
-              .diff(visited)
-            maxNodesPerHop.foreach { cap =>
-              next = next.toSeq.sortBy(md5hex).take(cap).toSet
-            }
-            frontier = next
-            visited ++= next
-          }
-          visited
-        }
-        val u =
-          if (maxNodesPerHop.isEmpty) gatherLocal(Seq(head, tail))
-          else gatherLocal(Seq(head)) ++ gatherLocal(Seq(tail))
-        // marker row first (as the distributed unionAll guarantees),
-        // then the induced edges enumerated off the visited set's
-        // adjacency lists; src_deg = 0 mirrors unionExtract's lit(0L)
-        // (the beam ignores degrees with community off)
-        val induced = Iterator((head, head, 0)) ++
-          u.iterator.flatMap { a =>
-            adjAll.getOrElse(a, Array.empty[Long]).iterator
-              .filter(u)
-              .map(b => (a, b, 0))
-          }
-        communityLabelBeam(eid, head, tail, induced, 0.0, h,
-          community = false)
-      }.toSeq
-    spark.createDataset(out).toDF()
-  }
-
-  /** Union-mode extraction (graph_sampler.py:331 `else` branch):
-    * per-root BFS WITHOUT root removal (get_neighbor_nodes semantics,
-    * with the per-level md5 cap applied per root exactly as the
-    * reference applies np.random.choice per root), nodes = roots ∪
-    * N_h(head) ∪ N_h(tail), then double-radius labels within the
-    * induced subgraph (other root removed) and the max(d) <= h prune —
-    * the same shared beam body as the community path, community
-    * pruning off.
-    */
-  private def unionExtract(
-      edges: DataFrame,
-      candidates: DataFrame,
-      h: Int,
-      maxNodesPerHop: Option[Int]): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    // BFS with NO other-root removal (the union gather may
-    // legitimately pass through the other root — such nodes are later
-    // pruned by the root-removed labeling, but they belong to U).
-    // Seeds: per root when the per-level cap binds (the reference
-    // applies np.random.choice per root's own BFS, so the sampling
-    // domains must stay separate); BOTH roots jointly when uncapped —
-    // the visited set of a multi-seed BFS equals the union of the
-    // per-seed visited sets, and one frontier loop costs half the
-    // fixed per-level jobs of two.
-    def gather(rootCols: Seq[String]): DataFrame = {
-      var visited = rootCols.map(rc =>
-          candidates.select(col("edge_id"), col(rc).as("node")))
-        .reduce(_ unionAll _).distinct()
-        .localCheckpoint(true)
-      var frontier = visited
-      var level = 0
-      while (level < h && frontier.limit(1).count() > 0) {
-        level += 1
-        var next = frontier
-          .join(edges, frontier("node") === edges("src"))
-          .select(col("edge_id"), col("dst").as("node"))
-          .distinct()
-          .join(visited.select(col("edge_id").as("v_eid"), col("node").as("v_node")),
-            col("edge_id") === col("v_eid") && col("node") === col("v_node"),
-            "left_anti")
-          .select("edge_id", "node")
-        maxNodesPerHop.foreach { cap =>
-          next = next.withColumn("__rn", row_number().over(
-            Window.partitionBy("edge_id").orderBy(md5(col("node").cast("string")))))
-            .filter(col("__rn") <= cap)
-            .drop("__rn")
-        }
-        frontier = next.localCheckpoint(true)
-        // visited needs no checkpoint of its own: it is a union of
-        // already-checkpointed frames, so the anti-join re-reads cached
-        // blocks instead of paying one more eager job per level
-        visited = visited.unionAll(frontier)
-      }
-      visited
-    }
-
-    val u =
-      if (maxNodesPerHop.isEmpty) gather(Seq("head", "tail"))
-      else gather(Seq("head")).unionAll(gather(Seq("tail"))).distinct()
-
-    // induced edges per candidate + per-candidate marker row (the
-    // community path's shape; src_deg is unused without the sweep)
-    val n1 = u.select(col("edge_id"), col("node").as("__s"))
-    val n2 = u.select(col("edge_id").as("__e2"), col("node").as("__d"))
-    val induced = edges
-      .join(n1, edges("src") === n1("__s"))
-      .join(n2, col("edge_id") === col("__e2") && edges("dst") === n2("__d"))
-      .select(col("edge_id"), col("src"), col("dst"))
-    val markers = candidates.select(col("edge_id"),
-      col("head").as("src"), col("head").as("dst"))
-    val beam = induced.unionAll(markers)
-      .join(candidates, Seq("edge_id"))
-      .select(col("edge_id"), col("head"), col("tail"),
-        col("src"), col("dst"), lit(0L).as("src_deg"))
-      .as[BeamEdge]
-
-    beam.groupByKey(_.edge_id).flatMapGroups { (eid, rows) =>
-      val buf = rows.toArray
-      communityLabelBeam(eid, buf.head.head, buf.head.tail,
-        buf.iterator.map(r => (r.src, r.dst, r.src_deg.toInt)), 0.0, h,
-        community = false)
-    }.toDF()
+        edges.schema("src"), edges.schema("dst")).forall(_.dataType == LongType)
+    label(edges, candidates, h, maxNodesPerHop, mode,
+      if (localShape) driverThreshold else 0)
   }
 
   /** One gathered beam row: an induced edge of a candidate's h-hop
@@ -390,7 +98,8 @@ object Subgraphs {
   /** Community-pruned enclosing subgraphs — the reference's ALWAYS-ON
     * flow (graph_sampler.py:319-325):
     *
-    *   1. union neighborhood U = N_h(head) ∪ N_h(tail) (per-level caps);
+    *   1. union neighborhood U = N_h(head) ∪ N_h(tail) (per-level caps
+    *      over the joint frontier of both roots);
     *   2. multicom: approximate PPR from seeds {head, tail} + conductance
     *      sweep cut -> community C (multicom.py:52-141);
     *   3. nodes = {head, tail} ∪ ((C \ roots) ∩ U);
@@ -399,18 +108,16 @@ object Subgraphs {
     *      (node_label, graph_sampler.py:365-391);
     *   5. prune to max(d_head, d_tail) <= h.
     *
-    * Distributed shape: the neighborhood gather and induced-edge
-    * collection are batched frontier joins over ALL candidates (rows
-    * keyed by edge_id); the PPR + sweep + local BFS run inside ONE
-    * mapGroups beam per candidate over its gathered (small, capped)
-    * subgraph — the reference runs the same per-link computation in an
-    * mp.Pool worker. Deviation (documented): the reference evaluates PPR
-    * on the full graph; the beam evaluates it on the gathered h-hop
-    * neighborhood — the push algorithm's mass outside the seeds'
-    * neighborhood is below eps by construction.
+    * Steps 2-5 run in the per-candidate beam over the gathered (small,
+    * capped) subgraph — the reference runs the same per-link computation
+    * in an mp.Pool worker. Deviation (documented): the reference
+    * evaluates PPR on the full graph; the beam evaluates it on the
+    * gathered h-hop neighborhood — the push algorithm's mass outside the
+    * seeds' neighborhood is below eps by construction.
     *
     * edges(src,dst) symmetric with LONG node ids (dictionary-encode
-    * upstream); candidates(edge_id, head, tail).
+    * upstream; the driver path casts ids to long and edge_id to string);
+    * candidates(edge_id, head, tail).
     * Returns (edge_id, node, d_head, d_tail).
     */
   def encloseAndLabelCommunity(
@@ -418,145 +125,155 @@ object Subgraphs {
       candidates: DataFrame,
       h: Int,
       maxNodesPerHop: Option[Int] = None,
-      driverThreshold: Long = 1 << 16): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
+      driverThreshold: Long = 1 << 16): DataFrame =
+    label(edges, candidates, h, maxNodesPerHop, "community", driverThreshold)
 
-    // Small inputs short-circuit to a driver loop over the SAME
-    // per-candidate beam body (communityLabelBeam) — the distributed
-    // scaffolding costs h BFS rounds of ~3 jobs each plus the induced
-    // join, all fixed overhead at stats-subgraph size (the CC /
-    // dictionary / all-pairs-BFS adaptivity discipline). Pass
-    // driverThreshold=0 to force the distributed path (tests assert
-    // both paths emit identical rows).
-    if (driverThreshold > 0 &&
-        edges.limit(driverThreshold.toInt).count() < driverThreshold &&
-        candidates.limit(driverThreshold.toInt).count() < driverThreshold) {
-      // null endpoints dropped explicitly — the distributed path drops
-      // them via join misses, and Row.getLong would NPE
+  /** Dispatch for both entry points; mode is enclosing|union|community.
+    * The size probe IS the driver input: a bounded limit(th) collect
+    * answers "is it small?" and, when yes, is what the local walks run
+    * on — nothing is read twice. Null endpoints are dropped before the
+    * limit; they never contribute rows on either path.
+    */
+  private def label(edges: DataFrame, candidates: DataFrame, h: Int,
+      maxNodesPerHop: Option[Int], mode: String, driverThreshold: Long): DataFrame = {
+    if (driverThreshold > 0) {
+      val th = driverThreshold.toInt
       val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
         .filter(col("src").isNotNull && col("dst").isNotNull)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val adjAll: Map[Long, Array[Long]] = e.groupBy(_._1)
-        .map { case (k, v) => k -> v.map(_._2) }
-      val degAll: Map[Long, Int] = adjAll.map { case (k, v) => k -> v.length }
-      val totalVol = e.length.toDouble
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def md5hex(n: Long): String = {
-        md.reset()
-        md.digest(n.toString.getBytes("UTF-8"))
-          .map(b => f"${b & 0xff}%02x").mkString
+        .limit(th).collect()
+      if (e.length < th) {
+        val c = candidates.select(col("edge_id").cast("string"),
+          col("head").cast("long"), col("tail").cast("long"))
+          .limit(th).collect()
+        if (c.length < th)
+          return labelLocal(edges.sparkSession,
+            e.map(r => (r.getLong(0), r.getLong(1))),
+            c.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
+            h, maxNodesPerHop, mode)
       }
-      val cands = candidates.select(col("edge_id").cast("string"),
-        col("head").cast("long"), col("tail").cast("long"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val out = cands.iterator.flatMap { case (eid, head, tail) =>
-        // union neighborhood, both roots seeded, per-level md5 cap —
-        // the same gather semantics as the distributed frontier joins
-        var visited = Set(head, tail)
-        var frontier = Set(head, tail)
-        var level = 0
-        while (level < h && frontier.nonEmpty) {
-          level += 1
-          var next = frontier.flatMap(n => adjAll.getOrElse(n, Array.empty[Long]))
-            .diff(visited)
-          maxNodesPerHop.foreach { cap =>
-            next = next.toSeq.sortBy(md5hex).take(cap).toSet
+    }
+    labelDistributed(edges, candidates, h, maxNodesPerHop, mode)
+  }
+
+  /** Driver path: the distributed walks per candidate over one
+    * adjacency map, the same marker-first induced-edge list and the same
+    * beam body, so both paths emit identical rows.
+    */
+  private def labelLocal(spark: SparkSession, e: Array[(Long, Long)],
+      cands: Array[(String, Long, Long)], h: Int,
+      maxNodesPerHop: Option[Int], mode: String): DataFrame = {
+    import spark.implicits._
+    val adj: Map[Long, Array[Long]] = e.groupBy(_._1)
+      .map { case (k, v) => k -> v.map(_._2) }
+    // full-graph degrees; only the community sweep reads them
+    def deg(n: Long): Int = adj.get(n).fold(0)(_.length)
+    val out = cands.toSeq.flatMap { case (eid, head, tail) =>
+      def reach(seeds: Long*) = Bfs.kHopLocal(adj, seeds, h, maxNodesPerHop).keySet
+      if (mode == "enclosing") {
+        val dh = Bfs.kHopLocal(adj, Seq(head), h, maxNodesPerHop, Some(tail))
+        val dt = Bfs.kHopLocal(adj, Seq(tail), h, maxNodesPerHop, Some(head))
+        Iterator(LabeledNode(eid, head, 0, 1), LabeledNode(eid, tail, 1, 0)) ++
+          dh.iterator.collect { case (n, a) if n != head && n != tail && dt.contains(n) =>
+            LabeledNode(eid, n, a, dt(n))
           }
-          frontier = next
-          visited ++= next
-        }
-        // marker row first, exactly as the distributed unionAll does
-        // (guarantees fullDeg carries the head even for empty beams).
-        // Induced edges enumerate the VISITED set's adjacency lists —
-        // O(sum deg(visited)) per candidate, already bounded by the
-        // capped BFS — never a full edge-array scan per candidate
-        // (which would be O(candidates x edges) at the threshold).
-        val induced = Iterator((head, head, degAll.getOrElse(head, 0))) ++
-          visited.iterator.flatMap { u =>
-            adjAll.getOrElse(u, Array.empty[Long]).iterator
-              .filter(visited)
-              .map(v => (u, v, degAll.getOrElse(u, 0)))
+      } else {
+        val u =
+          if (mode == "union" && maxNodesPerHop.nonEmpty) reach(head) ++ reach(tail)
+          else reach(head, tail)
+        val induced = Iterator((head, head, deg(head))) ++
+          u.iterator.flatMap { a =>
+            adj.getOrElse(a, Array.empty[Long]).iterator.filter(u).map(b => (a, b, deg(a)))
           }
-        communityLabelBeam(eid, head, tail, induced, totalVol, h)
-      }.toSeq
-      return spark.createDataset(out).toDF()
+        communityLabelBeam(eid, head, tail, induced, e.length.toDouble, h,
+          mode == "community")
+      }
+    }
+    spark.createDataset(out).toDF()
+  }
+
+  /** Distributed path. Every walk is one [[Bfs.kHop]] over the same
+    * seeds: side 0 starts at head with tail as the other root, side 1
+    * the reverse.
+    *  - enclosing: keyed by (edge_id, side), other root blocked; keep
+    *    the nodes both sides reach.
+    *  - union with a cap: keyed by (edge_id, side), nothing blocked —
+    *    the reference samples each root's frontier separately.
+    *  - union uncapped and community: keyed by edge_id, both roots in
+    *    one frontier (a multi-seed BFS reaches the union of the per-seed
+    *    reaches) and the community cap over that joint frontier.
+    */
+  private def labelDistributed(edges: DataFrame, candidates: DataFrame, h: Int,
+      maxNodesPerHop: Option[Int], mode: String): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val seeds = candidates.select(col("edge_id"), lit(0).as("side"),
+        col("tail").as("other"), col("head").as("node"))
+      .unionAll(candidates.select(col("edge_id"), lit(1).as("side"),
+        col("head").as("other"), col("tail").as("node")))
+
+    if (mode == "enclosing") {
+      val walked = Bfs.kHop(edges, seeds, h, maxNodesPerHop,
+        Seq("edge_id", "side"), Some("other"))
+      def side(s: Int, d: String) = walked.filter(col("side") === s)
+        .select(col("edge_id"), col("node"), col("dist").as(d))
+      val roots = candidates.select(col("edge_id"),
+        col("head").as("node"), lit(0).as("d_head"), lit(1).as("d_tail"))
+        .unionAll(candidates.select(col("edge_id"),
+          col("tail").as("node"), lit(1).as("d_head"), lit(0).as("d_tail")))
+      val nonRoots = side(0, "d_head").join(side(1, "d_tail"), Seq("edge_id", "node"))
+        .join(candidates, Seq("edge_id"))
+        .filter(col("node") =!= col("head") && col("node") =!= col("tail"))
+        .select(col("edge_id"), col("node"), col("d_head"), col("d_tail"))
+      return roots.unionAll(nonRoots)
     }
 
-    // 1. per-candidate union neighborhood, both roots seeded at once
-    var visited = candidates.select(col("edge_id"), col("head").as("node"))
-      .unionAll(candidates.select(col("edge_id"), col("tail").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    var frontier = visited
-    var level = 0
-    while (level < h && frontier.limit(1).count() > 0) {
-      level += 1
-      var next = frontier
-        .join(edges, frontier("node") === edges("src"))
-        .select(col("edge_id"), col("dst").as("node"))
-        .distinct()
-        .join(visited.select(col("edge_id").as("v_eid"), col("node").as("v_node")),
-          col("edge_id") === col("v_eid") && col("node") === col("v_node"),
-          "left_anti")
-        .select("edge_id", "node")
-      maxNodesPerHop.foreach { cap =>
-        next = next.withColumn("__rn", row_number().over(
-          Window.partitionBy("edge_id").orderBy(md5(col("node").cast("string")))))
-          .filter(col("__rn") <= cap)
-          .drop("__rn")
-      }
-      frontier = next.localCheckpoint(true)
-      // union of checkpointed frames - no extra eager job (see above)
-      visited = visited.unionAll(frontier)
-    }
-
-    // full-graph degree per node + total volume (symmetric edge list:
-    // out-degree == degree, row count == volume) — the sweep needs both.
-    // Null endpoints are excluded here exactly as the driver fast path
-    // excludes them, so the PPR sweep-cut normalization (totalVol) is
-    // identical on both paths even for inputs with null rows.
-    val cleanEdges = edges
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val degrees = cleanEdges.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val totalVol = cleanEdges.count().toDouble
-
-    // 2. induced edges per candidate (both endpoints in the beam)
-    val n1 = visited.select(col("edge_id"), col("node").as("__s"))
-    val n2 = visited.select(col("edge_id").as("__e2"), col("node").as("__d"))
+    val keys = if (mode == "union" && maxNodesPerHop.nonEmpty) Seq("edge_id", "side")
+      else Seq("edge_id")
+    val u = Bfs.kHop(edges, seeds, h, maxNodesPerHop, keys)
+      .select("edge_id", "node").distinct()
+    // induced edges per candidate (both endpoints in U) plus one marker
+    // row per candidate, so every candidate forms a group even when its
+    // beam has no induced edges (the beam's adjacency build drops it)
+    val n1 = u.select(col("edge_id"), col("node").as("__s"))
+    val n2 = u.select(col("edge_id").as("__e2"), col("node").as("__d"))
     val induced = edges
       .join(n1, edges("src") === n1("__s"))
       .join(n2, col("edge_id") === col("__e2") && edges("dst") === n2("__d"))
       .select(col("edge_id"), col("src"), col("dst"))
-    // marker row per candidate guarantees every candidate forms a group
-    // even when its beam has no induced edges (self-loops are ignored by
-    // the adjacency build below)
     val markers = candidates.select(col("edge_id"),
       col("head").as("src"), col("head").as("dst"))
-    val beam = induced.unionAll(markers)
-      .join(candidates, Seq("edge_id"))
-      .join(degrees, Seq("src"), "left")
-      .select(col("edge_id"), col("head"), col("tail"), col("src"), col("dst"),
+    val beam = induced.unionAll(markers).join(candidates, Seq("edge_id"))
+    // community needs full-graph degrees and the total volume
+    // (symmetric edge list: out-degree == degree, row count == volume),
+    // over the non-null rows the driver path collects
+    val community = mode == "community"
+    val (withDeg, totalVol) =
+      if (!community) (beam.withColumn("__deg", lit(0L)), 0.0)
+      else {
+        val clean = edges.filter(col("src").isNotNull && col("dst").isNotNull)
+        (beam.join(clean.groupBy(col("src")).agg(count(lit(1)).as("__deg")),
+          Seq("src"), "left"), clean.count().toDouble)
+      }
+    withDeg.select(col("edge_id"), col("head"), col("tail"), col("src"), col("dst"),
         coalesce(col("__deg"), lit(0L)).as("src_deg"))
       .as[BeamEdge]
-
-    // 3-5. per-candidate beam: multicom + induced-subgraph double-radius
-    beam.groupByKey(_.edge_id).flatMapGroups { (eid, rows) =>
-      val buf = rows.toArray
-      communityLabelBeam(eid, buf.head.head, buf.head.tail,
-        buf.iterator.map(r => (r.src, r.dst, r.src_deg.toInt)), totalVol, h)
-    }.toDF()
+      .groupByKey(_.edge_id).flatMapGroups { (eid, rows) =>
+        val buf = rows.toArray
+        communityLabelBeam(eid, buf.head.head, buf.head.tail,
+          buf.iterator.map(r => (r.src, r.dst, r.src_deg.toInt)), totalVol, h,
+          community)
+      }.toDF()
   }
 
-  /** The per-candidate multicom beam body — ONE implementation shared
-    * by the distributed flatMapGroups path and the driver fast path so
-    * the community/label semantics cannot diverge. `edges` is the
-    * gathered symmetric induced edge list with full-graph src degrees
+  /** The per-candidate beam body — ONE implementation shared by the
+    * distributed flatMapGroups path and the driver path so the
+    * community/label semantics cannot diverge. `edges` is the gathered
+    * symmetric induced edge list with full-graph src degrees
     * (self-loop marker rows tolerated: dropped by the adjacency build).
     */
   private def communityLabelBeam(eid: String, head: Long, tail: Long,
       edges: Iterator[(Long, Long, Int)], totalVol: Double,
-      h: Int, community: Boolean = true): Iterator[LabeledNode] = {
+      h: Int, community: Boolean): Iterator[LabeledNode] = {
     val buf = edges.toArray
     val fullDeg: Map[Long, Int] = buf.iterator.map(r => r._1 -> r._3).toMap
     val adj: Map[Long, Array[Long]] = buf.iterator
@@ -578,33 +295,14 @@ object Subgraphs {
     val subAdj: Map[Long, Array[Long]] = adj.collect {
       case (k, vs) if subNodes(k) => k -> vs.filter(subNodes)
     }
-    // BFS within the induced subgraph, one root removed
-    def dists(root: Long, removed: Long): Map[Long, Int] = {
-      val d = scala.collection.mutable.Map(root -> 0)
-      var front = List(root)
-      var lvl = 0
-      while (front.nonEmpty && lvl < h) {
-        lvl += 1
-        front = front
-          .flatMap(u => subAdj.getOrElse(u, Array.empty[Long]))
-          .filter(v => v != removed && !d.contains(v))
-          .distinct
-        front.foreach(v => d(v) = lvl)
+    // BFS within the induced subgraph, other root removed; a node
+    // unreachable within h from either root is pruned
+    val dh = Bfs.kHopLocal(subAdj, Seq(head), h, blocked = Some(tail))
+    val dt = Bfs.kHopLocal(subAdj, Seq(tail), h, blocked = Some(head))
+    Iterator(LabeledNode(eid, head, 0, 1), LabeledNode(eid, tail, 1, 0)) ++
+      cluster.iterator.collect { case n if dh.contains(n) && dt.contains(n) =>
+        LabeledNode(eid, n, dh(n), dt(n))
       }
-      d.toMap
-    }
-    val dh = dists(head, tail)
-    val dt = dists(tail, head)
-    val rootRows = Iterator(
-      LabeledNode(eid, head, 0, 1), LabeledNode(eid, tail, 1, 0))
-    val nodeRows = cluster.iterator.flatMap { n =>
-      (dh.get(n), dt.get(n)) match {
-        case (Some(a), Some(b)) if math.max(a, b) <= h =>
-          Iterator(LabeledNode(eid, n, a, b))
-        case _ => Iterator.empty // unreachable from a root -> pruned
-      }
-    }
-    rootRows ++ nodeRows
   }
 
   /** Assemble per-candidate subgraph records: sorted node list + labels

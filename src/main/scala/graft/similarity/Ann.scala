@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Ids
 
 /** Approximate nearest neighbor over embedding columns.
   *
@@ -162,7 +161,7 @@ object Ann {
       iters: Int = 2)
       : (Array[Array[Double]], DataFrame, graft.functions.CentroidSource) = {
     var centroids: Array[Array[Double]] = emb
-      .orderBy(Ids.saltCol(Int.MaxValue, col("id")), col("id"))
+      .orderBy(pmod(xxhash64(col("id")), lit(Int.MaxValue.toLong)), col("id"))
       .limit(c)
       .select(col("v"))
       .collect().map(_.getSeq[Double](0).toArray)

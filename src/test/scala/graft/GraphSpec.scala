@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Bfs, Ppr, Subgraphs}
@@ -229,5 +234,85 @@ class GraphSpec extends AnyFunSuite {
       assert(fast == dist, s"mode=$mode cap=$cap")
       assert(fast.nonEmpty)
     }
+  }
+
+  // seeded ~300-edge graph: hub 0 joined to 60 nodes plus 240 random
+  // edges over 1..120, so a per-hop cap of 3 binds at every level
+  def hubEdges: DataFrame = {
+    val rnd = new scala.util.Random(9)
+    val hub = (1L to 60L).map(i => (0L, 2 * i))
+    val rest = Seq.fill(240)((1L + rnd.nextInt(120), 1L + rnd.nextInt(120)))
+      .filter { case (a, b) => a != b }
+    Bfs.undirected((hub ++ rest).toDF("src", "dst"))
+  }
+  val hubCands = Seq(("c0", 0L, 2L), ("c1", 0L, 7L), ("c2", 5L, 9L),
+    ("c3", 2L, 4L), ("c4", 11L, 13L), ("c5", 1L, 120L))
+
+  /** Order-insensitive, multiplicity-keeping digest of a result. */
+  def digest(df: DataFrame): String = {
+    val rows = df.collect().map(_.toString).sorted
+    val md = java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.mkString("\n").getBytes("UTF-8"))
+    s"${rows.length}:" + md.take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("pinned rows on a seeded hub graph: both paths, binding caps") {
+    // digests recorded before the graph layer was folded onto one BFS
+    val expected = Map(
+      "allPairs/distributed" -> "14400:6f17c4e7402f8f11",
+      "allPairs/driver" -> "14400:6f17c4e7402f8f11",
+      "community/None/distributed" -> "93:0d74482cb022b919",
+      "community/None/driver" -> "93:0d74482cb022b919",
+      "community/Some(3)/distributed" -> "14:2451dc42477f95dd",
+      "community/Some(3)/driver" -> "14:2451dc42477f95dd",
+      "eccentricity/distributed" -> "1:619985489c2b2521",
+      "eccentricity/driver" -> "1:619985489c2b2521",
+      "enclosing/None/distributed" -> "149:c84ea563f41e7f25",
+      "enclosing/None/driver" -> "149:c84ea563f41e7f25",
+      "enclosing/Some(3)/distributed" -> "15:121ce07f09fe0f9c",
+      "enclosing/Some(3)/driver" -> "15:121ce07f09fe0f9c",
+      "kHop" -> "14:1f17488b6327a15f",
+      "union/None/distributed" -> "149:c84ea563f41e7f25",
+      "union/None/driver" -> "149:c84ea563f41e7f25",
+      "union/Some(3)/distributed" -> "25:f1ee229e4d05bdcb",
+      "union/Some(3)/driver" -> "25:f1ee229e4d05bdcb")
+    val e = hubEdges
+    val cands = hubCands.toDF("edge_id", "head", "tail")
+    val cases: Seq[(String, Long => DataFrame)] =
+      (for (mode <- Seq("enclosing", "union"); cap <- Seq(None, Some(3)))
+        yield s"$mode/$cap" -> ((thr: Long) =>
+          Subgraphs.encloseAndLabel(e, cands, 2, cap, mode, thr))) ++
+      Seq(None, Some(3)).map(cap => s"community/$cap" -> ((thr: Long) =>
+        Subgraphs.encloseAndLabelCommunity(e, cands, 2, cap, thr))) :+
+      ("eccentricity" -> ((thr: Long) =>
+        Bfs.eccentricityStats(e, 8, driverThreshold = thr))) :+
+      ("allPairs" -> ((thr: Long) =>
+        Bfs.allPairsDistances(e, 8, driverThreshold = thr)))
+    val got = cases.flatMap { case (name, run) =>
+      Seq(s"$name/driver" -> digest(run(1L << 16)),
+        s"$name/distributed" -> digest(run(0L)))
+    }.toMap + ("kHop" -> digest(Bfs.kHop(e, Seq(0L, 5L).toDF("node"), 3, Some(4))))
+    assert(got == expected)
+  }
+
+  test("encloseAndLabelCommunity starts as many Spark jobs as the encloseAndLabel fast path") {
+    val cands = Seq(("e1", 11L, 12L), ("e2", 1L, 2L)).toDF("edge_id", "head", "tail")
+    val jobs = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(run: => DataFrame): Int = {
+      TestBus.drain(spark.sparkContext)
+      jobs.set(0)
+      run.collect()
+      TestBus.drain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val plain = jobsOf(Subgraphs.encloseAndLabel(edges, cands, 2))
+      val community = jobsOf(Subgraphs.encloseAndLabelCommunity(edges, cands, 2))
+      assert(plain > 0 && community == plain, s"plain=$plain community=$community")
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.TableFormat
 import graft.streaming.StreamOps
 
 class StreamingSpec extends AnyFunSuite {
@@ -21,12 +22,12 @@ class StreamingSpec extends AnyFunSuite {
     dir.toString
   }
 
-  test("StreamBench.jsonEscape: quote/backslash/control-safe, identity otherwise") {
-    assert(StreamBench.jsonEscape("k=v;x.y=2") == "k=v;x.y=2")
-    assert(StreamBench.jsonEscape("a\"b\\c") == "a\\\"b\\\\c")
-    assert(StreamBench.jsonEscape("a\nb\tc") == "a\\u000ab\\u0009c")
+  test("TableFormat.jsonEscape: quote/backslash/control-safe, identity otherwise") {
+    assert(TableFormat.jsonEscape("k=v;x.y=2") == "k=v;x.y=2")
+    assert(TableFormat.jsonEscape("a\"b\\c") == "a\\\"b\\\\c")
+    assert(TableFormat.jsonEscape("a\nb\tc") == "a\\u000ab\\u0009c")
     // the escaped value must parse back as legal JSON string content
-    val v = StreamBench.jsonEscape("he said \"x=\\1\"\n")
+    val v = TableFormat.jsonEscape("he said \"x=\\1\"\n")
     assert(!v.contains("\n") && !v.matches(""".*(?<!\\)".*"""))
   }
 
