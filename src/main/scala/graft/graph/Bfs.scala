@@ -2,7 +2,7 @@ package graft.graph
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,12 +42,18 @@ object Bfs {
       keys: Seq[String] = Nil,
       blocked: Option[String] = None): DataFrame = {
     val carried = (keys ++ blocked).map(col)
-    var visited = seeds.select(carried :+ col("node"): _*).distinct()
-      .withColumn("dist", lit(0))
-      .localCheckpoint(true)
+    // each level is checkpointed once; an Observation on that job counts
+    // its rows, so emptiness needs no probe job of its own
+    def checkpointNonEmpty(df: DataFrame): (DataFrame, Boolean) = {
+      val rows = Observation()
+      val cp = df.observe(rows, count(lit(1)).as("n")).localCheckpoint(true)
+      (cp, rows.get("n").asInstanceOf[Long] > 0)
+    }
+    var (visited, nonEmpty) = checkpointNonEmpty(
+      seeds.select(carried :+ col("node"): _*).distinct().withColumn("dist", lit(0)))
     var frontier = visited
     var level = 0
-    while (level < h && frontier.limit(1).count() > 0) {
+    while (level < h && nonEmpty) {
       level += 1
       val stepped = frontier.join(edges, frontier("node") === edges("src"))
       var next = blocked.fold(stepped)(b => stepped.filter(col("dst") =!= col(b)))
@@ -62,7 +68,9 @@ object Bfs {
           .filter(col("__rn") <= cap)
           .drop("__rn")
       }
-      frontier = next.withColumn("dist", lit(level)).localCheckpoint(true)
+      val (cp, more) = checkpointNonEmpty(next.withColumn("dist", lit(level)))
+      frontier = cp
+      nonEmpty = more
       // a union of checkpointed frames: the next anti-join re-reads
       // cached blocks, so visited needs no eager job of its own
       visited = visited.unionAll(frontier)
@@ -118,10 +126,11 @@ object Bfs {
     *
     * Small inputs (< `driverThreshold` edges) run [[kHopLocal]] on the
     * driver instead: a bounded collect answers "is it small?" and
-    * already is the adjacency input, where the distributed walk pays ~3
-    * jobs per level. BFS distances depend only on id EQUALITY, so the
-    * string-cast round trip is type-safe. driverThreshold=0 forces the
-    * distributed walk (tests do).
+    * already is the adjacency input, where the distributed walk pays a
+    * checkpoint per level (4 Spark jobs under AQE on a small graph). BFS
+    * distances depend only on id EQUALITY, so the string-cast round trip
+    * is type-safe. driverThreshold=0 forces the distributed walk (tests
+    * do).
     */
   def allPairsDistances(und: DataFrame, maxDepth: Int,
       maxNodes: Int = 10000, driverThreshold: Long = 1 << 16,

@@ -1,6 +1,8 @@
 package graft.graph
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Enclosing-subgraph extraction + double-radius node labeling for
@@ -32,14 +34,16 @@ import org.apache.spark.sql.functions._
   *
   * Small inputs (both under `driverThreshold` rows, read by one bounded
   * collect each) run on the driver with the same walks and the same
-  * beam body: the distributed form costs ~3 jobs per BFS level, pure
-  * overhead at dictionary-sized graphs. driverThreshold=0 forces the
+  * beam body: the distributed form costs a checkpoint per BFS level,
+  * pure overhead at dictionary-sized graphs. driverThreshold=0 forces the
   * distributed form; GraphSpec asserts both emit identical rows.
   */
 object Subgraphs {
 
-  /** edges(src,dst) symmetric; candidates(edge_id, head, tail).
-    * Returns one row per kept subgraph node:
+  /** edges(src,dst) symmetric; candidates(edge_id, head, tail), where
+    * one edge_id names one (head, tail): an edge_id carrying two throws
+    * IllegalArgumentException on both paths (the distributed walks and
+    * beam key by edge_id alone). Returns one row per kept subgraph node:
     * (edge_id, node, d_head, d_tail).
     *
     * `mode` mirrors the reference's `enclosing_sub_graph` switch
@@ -128,6 +132,9 @@ object Subgraphs {
       driverThreshold: Long = 1 << 16): DataFrame =
     label(edges, candidates, h, maxNodesPerHop, "community", driverThreshold)
 
+  private val (repeatedPrefix, repeatedSuffix) =
+    ("Subgraphs: candidate edge_id ", " carries more than one (head, tail)")
+
   /** Dispatch for both entry points; mode is enclosing|union|community.
     * The size probe IS the driver input: a bounded limit(th) collect
     * answers "is it small?" and, when yes, is what the local walks run
@@ -145,6 +152,9 @@ object Subgraphs {
         val c = candidates.select(col("edge_id").cast("string"),
           col("head").cast("long"), col("tail").cast("long"))
           .limit(th).collect()
+        c.groupBy(_.getString(0)).collectFirst {
+          case (eid, rs) if rs.map(r => (r.get(1), r.get(2))).distinct.length > 1 => eid
+        }.foreach(eid => throw new IllegalArgumentException(repeatedPrefix + eid + repeatedSuffix))
         if (c.length < th)
           return labelLocal(edges.sparkSession,
             e.map(r => (r.getLong(0), r.getLong(1))),
@@ -206,14 +216,30 @@ object Subgraphs {
       maxNodesPerHop: Option[Int], mode: String): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val seeds = candidates.select(col("edge_id"), lit(0).as("side"),
-        col("tail").as("other"), col("head").as("node"))
-      .unionAll(candidates.select(col("edge_id"), lit(1).as("side"),
-        col("head").as("other"), col("tail").as("node")))
+    // one edge_id names one (head, tail): the guard rides on a window
+    // over edge_id whose partitioning the walk's seed distinct reuses,
+    // so the walk's first checkpoint job raises it and no job is added
+    val ends = struct(col("head"), col("tail"))
+    val byEdge = Window.partitionBy(col("edge_id"))
+    val seeds = candidates
+      .select(col("edge_id"), explode(array(
+          struct(lit(0).as("side"), col("tail").as("other"), col("head").as("node")),
+          struct(lit(1).as("side"), col("head").as("other"), col("tail").as("node")))).as("__s"),
+        (min(ends).over(byEdge) =!= max(ends).over(byEdge)).as("__repeated"))
+      .select(col("edge_id"), col("__s.side").as("side"), col("__s.other").as("other"),
+        when(col("__repeated"), raise_error(concat(lit(repeatedPrefix),
+          coalesce(col("edge_id").cast("string"), lit("null")), lit(repeatedSuffix))))
+          .otherwise(col("__s.node")).as("node"))
+    def walk(keys: Seq[String], blocked: Option[String] = None): DataFrame =
+      try Bfs.kHop(edges, seeds, h, maxNodesPerHop, keys, blocked)
+      catch {
+        case e: RuntimeException with SparkThrowable if e.getCondition == "USER_RAISED_EXCEPTION" &&
+            e.getMessageParameters.get("errorMessage").startsWith(repeatedPrefix) =>
+          throw new IllegalArgumentException(e.getMessageParameters.get("errorMessage"), e)
+      }
 
     if (mode == "enclosing") {
-      val walked = Bfs.kHop(edges, seeds, h, maxNodesPerHop,
-        Seq("edge_id", "side"), Some("other"))
+      val walked = walk(Seq("edge_id", "side"), Some("other"))
       def side(s: Int, d: String) = walked.filter(col("side") === s)
         .select(col("edge_id"), col("node"), col("dist").as(d))
       val roots = candidates.select(col("edge_id"),
@@ -229,7 +255,7 @@ object Subgraphs {
 
     val keys = if (mode == "union" && maxNodesPerHop.nonEmpty) Seq("edge_id", "side")
       else Seq("edge_id")
-    val u = Bfs.kHop(edges, seeds, h, maxNodesPerHop, keys)
+    val u = walk(keys)
       .select("edge_id", "node").distinct()
     // induced edges per candidate (both endpoints in U) plus one marker
     // row per candidate, so every candidate forms a group even when its

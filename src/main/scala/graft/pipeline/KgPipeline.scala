@@ -105,9 +105,11 @@ object KgPipeline {
 
     // ---- dedup: exact/near-duplicate page detection (Common-Crawl-style
     // corpora are heavily duplicated; duplicates double-count evidence).
-    // The drop set is computed from narrow (url, band) rows and applied
-    // to the EXTRACTED assertions below — the html payloads never
-    // shuffle (anti-joining the page table measured 6x the pipeline).
+    // The drop set is a lazy plan — one text pass to narrow (url, key)
+    // rows and one window — that runs inside the extract stage's
+    // url-hash anti-join below, so nothing is materialized ahead of the
+    // main scan and the html payloads never shuffle (anti-joining the
+    // page table measured 6x the pipeline).
     val pages = inputs.pages
     val droppedUrls = graft.dedup.PageDedup.droppedUrls(pages, dedup)
     val aliasDict = inputs.aliasDict

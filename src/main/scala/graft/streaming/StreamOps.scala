@@ -50,18 +50,6 @@ object StreamOps {
 
   final case class Keyed(fp: Long, url: String)
 
-  /** Streaming exact dedup: keep the FIRST document seen per content
-    * fingerprint, drop every later arrival — the continuous-ingestion
-    * form of PageDedup's batch exact mode (keeper rules differ by
-    * necessity: a stream cannot know the batch min(url), so first-seen
-    * wins; within a batch the smallest url wins for determinism).
-    *
-    * flatMapGroupsWithState keyed on xxhash64(text): state is one
-    * boolean per seen fingerprint, emitted rows are the (fp, url)
-    * keepers. State grows with distinct content — at 100 TB the state
-    * store backs onto RocksDB and the fingerprint key is 8 bytes, the
-    * same hashed-long discipline as the batch dedup broadcast.
-    */
   /** Generic first-seen keeper: one output row per fingerprint, the
     * min-tiebreak row of the first micro-batch that carries it — the
     * single implementation behind [[dedupStream]] and
@@ -81,6 +69,21 @@ object StreamOps {
           }
       }(org.apache.spark.sql.Encoders.scalaBoolean, enc)
 
+  /** Streaming exact dedup: keep the FIRST document seen per content
+    * fingerprint, drop every later arrival — the continuous-ingestion
+    * counterpart of `PageDedup.droppedUrls(pages, "exact")`, with two
+    * differences:
+    *  - keeper: a stream cannot know the batch min(url), so first-seen
+    *    wins (within one micro-batch the smallest url, for determinism);
+    *  - key: xxhash64 of the raw text, where the batch mode keys on md5
+    *    of the whitespace-normalized lowercased text.
+    *
+    * flatMapGroupsWithState keyed on that fingerprint: state is one
+    * boolean per seen fingerprint, emitted rows are the (fp, url)
+    * keepers. State grows with distinct content — at 100 TB the state
+    * store backs onto RocksDB and the key is 8 bytes, the same
+    * hashed-long discipline as the pipeline's url-hash anti-join.
+    */
   def dedupStream(docs: DataFrame): Dataset[Keyed] = {
     import docs.sparkSession.implicits._
     firstSeen(

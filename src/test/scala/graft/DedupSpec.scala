@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.TestBus
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -71,6 +72,59 @@ class DedupSpec extends AnyFunSuite {
     assert(nDups > 20)
     assert(kept(pages, "exact").size == 200 - nDups)
     assertThrows[IllegalArgumentException](PageDedup.droppedUrls(pages, "bogus"))
+  }
+
+  // seeded corpus: 60 base pages of 24 tokens; every 3rd republished
+  // byte-identical, every 5th in upper case with doubled spaces (an exact
+  // dup after normalization, but a different shingle set), every 4th with
+  // one token replaced (a near dup); 30 sub-shingle pages drawn from 8
+  // short texts; two empty and two null texts
+  def seededPages: DataFrame = {
+    val rnd = new scala.util.Random(11)
+    val vocab = (0 until 50).map(i => s"w$i")
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    val long = (0 until 60).flatMap { i =>
+      val toks = words(24)
+      val text = toks.mkString(" ")
+      Seq(page(f"https://p/$i%02d/a", text)) ++
+        (if (i % 3 == 0) Seq(page(f"https://p/$i%02d/b", text)) else Nil) ++
+        (if (i % 5 == 0) Seq(page(f"https://p/$i%02d/d", text.toUpperCase.replace(" ", "  ")))
+        else Nil) ++
+        (if (i % 4 == 0) Seq(page(f"https://p/$i%02d/c",
+          toks.updated(rnd.nextInt(24), "zz").mkString(" ")))
+        else Nil)
+    }
+    val shorts = Seq.fill(8)(words(1 + rnd.nextInt(2)).mkString(" "))
+    val short = (0 until 30).map(i => page(f"https://s/$i%02d", shorts(rnd.nextInt(8))))
+    val odd = Seq(page("https://e/1", ""), page("https://e/2", ""),
+      Page("https://n/1", new Timestamp(0L), Array.emptyByteArray, null, "en"),
+      Page("https://n/2", new Timestamp(0L), Array.emptyByteArray, null, "en"))
+    rnd.shuffle(long ++ short ++ odd).toDF()
+  }
+
+  /** Order-insensitive, multiplicity-keeping digest of a url column. */
+  def digest(df: DataFrame): String = {
+    val rows = df.as[String].collect().sorted
+    val md = java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.mkString("\n").getBytes("UTF-8"))
+    s"${rows.length}:" + md.take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("pinned drop sets on a seeded corpus: exact and minhash") {
+    // digests recorded with the checkpointed keeper-join implementation
+    val expected = Map("exact" -> "55:f518d181f31aa449", "minhash" -> "55:2fbe4b0921496d33")
+    val pages = seededPages
+    val got = Seq("exact", "minhash").map(m => m -> digest(PageDedup.droppedUrls(pages, m))).toMap
+    assert(got == expected)
+  }
+
+  test("building a drop set starts no Spark job") {
+    val pages = seededPages
+    val jobs = TestBus.jobsDuring(spark.sparkContext) {
+      PageDedup.droppedUrls(pages, "minhash")
+      PageDedup.droppedUrls(pages, "exact")
+    }
+    assert(jobs.isEmpty)
   }
 
   test("pipeline P/R unchanged with minhash dedup on the fixture") {

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -297,22 +294,36 @@ class GraphSpec extends AnyFunSuite {
 
   test("encloseAndLabelCommunity starts as many Spark jobs as the encloseAndLabel fast path") {
     val cands = Seq(("e1", 11L, 12L), ("e2", 1L, 2L)).toDF("edge_id", "head", "tail")
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    def jobsOf(run: => DataFrame): Int = TestBus.jobsDuring(spark.sparkContext)(run.collect()).size
+    val plain = jobsOf(Subgraphs.encloseAndLabel(edges, cands, 2))
+    val community = jobsOf(Subgraphs.encloseAndLabelCommunity(edges, cands, 2))
+    assert(plain > 0 && community == plain, s"plain=$plain community=$community")
+  }
+
+  test("kHop runs one action per level: 1 + h checkpoints, no emptiness probes") {
+    val e = edges.localCheckpoint(true)
+    def actions(seed: Long, h: Int): Int =
+      TestBus.jobsDuring(spark.sparkContext)(Bfs.kHop(e, Seq(seed).toDF("node"), h)).distinct.size
+    // node 1 still has unvisited nodes 3 levels out: every level runs
+    for (h <- 1 to 3) assert(actions(1L, h) == 1 + h, s"h=$h")
+    // node 5's walk empties after level 5: the empty level-6 checkpoint
+    // stops it, so h = 8 runs 1 + 6 actions
+    assert(actions(5L, 8) == 1 + 6)
+    assert(Bfs.kHop(e, Seq(5L).toDF("node"), 8).as[(Long, Int)].collect().toMap ==
+      Map(5L -> 0, 4L -> 1, 3L -> 2, 2L -> 3, 10L -> 3, 1L -> 4, 11L -> 4, 12L -> 4, 13L -> 5))
+  }
+
+  test("an edge_id repeated with different roots is rejected on both paths") {
+    val cands = Seq(("e", 10L, 13L), ("e", 10L, 13L), ("e", 3L, 4L))
+      .toDF("edge_id", "head", "tail")
+    val runs: Seq[(String, Long => DataFrame)] =
+      Seq("enclosing", "union").map(m => m -> ((thr: Long) =>
+        Subgraphs.encloseAndLabel(edges, cands, 2, None, m, thr))) :+
+      ("community" -> ((thr: Long) =>
+        Subgraphs.encloseAndLabelCommunity(edges, cands, 2, None, thr)))
+    for ((name, run) <- runs; thr <- Seq(1L << 16, 0L)) {
+      val ex = intercept[IllegalArgumentException](run(thr).collect())
+      assert(ex.getMessage.contains("edge_id e "), s"$name/$thr: ${ex.getMessage}")
     }
-    def jobsOf(run: => DataFrame): Int = {
-      TestBus.drain(spark.sparkContext)
-      jobs.set(0)
-      run.collect()
-      TestBus.drain(spark.sparkContext)
-      jobs.get
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val plain = jobsOf(Subgraphs.encloseAndLabel(edges, cands, 2))
-      val community = jobsOf(Subgraphs.encloseAndLabelCommunity(edges, cands, 2))
-      assert(plain > 0 && community == plain, s"plain=$plain community=$community")
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 }

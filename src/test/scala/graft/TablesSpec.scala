@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -76,18 +74,10 @@ class TablesSpec extends AnyFunSuite {
     val dir = tmp()
     rows.write.parquet(s"$dir/flat")
     rows.write.partitionBy("a", "b").parquet(s"$dir/part2")
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      TestBus.drain(spark.sparkContext)
-      jobs.set(0)
+    val jobs = TestBus.jobsDuring(spark.sparkContext) {
       Tables.parquet(spark, s"$dir/flat")
       Tables.parquet(spark, s"$dir/part2")
-      TestBus.drain(spark.sparkContext)
-      assert(jobs.get == 0)
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(jobs.isEmpty)
   }
 }
