@@ -1,10 +1,9 @@
 package graft.core
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Iceberg-shaped table seam (SURVEY.md §7.0).
   *
@@ -14,8 +13,15 @@ import org.apache.spark.sql.functions._
   * surface — partition spec, snapshot ids, atomic-ish commit, lineage —
   * is kept Iceberg-shaped so a real catalog can be dropped in later.
   *
-  * Layout:  root/<table>/snapshot=<id>/part-*.parquet
+  * Layout:  root/<table>/snapshot=<id>/[<col>=<v>/]part-*.parquet
   *          root/<table>/_manifest.jsonl
+  *          root/_lineage.jsonl  (one row per written data file: its path
+  *                                under snapshot=<id>/ and footer row count)
+  *
+  * Commit order: data, lineage rows, manifest row. The manifest row, which
+  * [[hasSnapshot]] reads, is the commit point: a run stopped before it
+  * re-runs the stage, which appends its lineage rows again (a snapshot's
+  * lineage is the rows of its latest `ts`).
   *
   * Resume semantics (north_rule "resumable from checkpoint"): a stage is
   * skipped iff its output table already has a committed snapshot whose
@@ -25,36 +31,41 @@ import org.apache.spark.sql.functions._
 final class TableFormat(val root: String) {
   import TableFormat.jsonEscape
 
-
   private def tableDir(name: String) = s"$root/$name"
   private def manifestPath(name: String) = Paths.get(tableDir(name), "_manifest.jsonl")
 
-  /** One committed snapshot of a table. */
+  /** One committed snapshot of a table; `wallMs` timed its build and write. */
   final case class Snapshot(
       table: String,
       snapshotId: String,
       inputSnapshot: String,
       rowCount: Long,
       partitionCols: Seq[String],
+      wallMs: Long,
       committedAtMs: Long)
 
-  /** Write `df` as snapshot `snapshotId`; append a manifest row on success. */
+  /** Build `df`, write it as snapshot `snapshotId` and commit it. The
+    * written files' footers give the lineage rows and the manifest
+    * `rowCount`, so the write is the only Spark action.
+    */
   def writeTable(
-      df: DataFrame,
+      df: => DataFrame,
       name: String,
       snapshotId: String,
       inputSnapshot: String = "",
       partitionCols: Seq[String] = Nil): Snapshot = {
+    val t0 = System.nanoTime()
+    val data = df
     val dir = s"${tableDir(name)}/snapshot=$snapshotId"
-    val w = df.write.mode("overwrite")
+    val w = data.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dir)
-    val n = Tables.parquet(df.sparkSession, dir).count()
-    val snap = Snapshot(name, snapshotId, inputSnapshot, n, partitionCols, System.currentTimeMillis())
-    Files.createDirectories(Paths.get(tableDir(name)))
-    val line =
-      s"""{"table":"${jsonEscape(name)}","snapshotId":"${jsonEscape(snapshotId)}","inputSnapshot":"${jsonEscape(inputSnapshot)}","rowCount":$n,"partitionCols":"${jsonEscape(partitionCols.mkString(","))}","committedAtMs":${snap.committedAtMs}}""" + "\n"
-    Files.write(manifestPath(name), line.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    val wallMs = (System.nanoTime() - t0) / 1000000
+    val files = Tables.fileRowCounts(data.sparkSession, dir)
+    appendLineage(name, snapshotId, files, wallMs)
+    val snap = Snapshot(name, snapshotId, inputSnapshot, files.map(_._2).sum, partitionCols,
+      wallMs, System.currentTimeMillis())
+    append(manifestPath(name),
+      s"""{"table":"${jsonEscape(name)}","snapshotId":"${jsonEscape(snapshotId)}","inputSnapshot":"${jsonEscape(inputSnapshot)}","rowCount":${snap.rowCount},"partitionCols":"${jsonEscape(partitionCols.mkString(","))}","committedAtMs":${snap.committedAtMs}}""" + "\n")
     snap
   }
 
@@ -72,21 +83,18 @@ final class TableFormat(val root: String) {
     }
   }
 
-  /** Append per-partition lineage rows for a just-written stage output.
-    * Row counts are computed per physical input partition with
-    * spark_partition_id() — one shuffle-free pass.
-    */
-  def appendLineage(df: DataFrame, stage: String, snapshotId: String, wallMs: Long): Unit = {
-    val rows = df
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows"))
-      .collect()
+  /** One lineage row per written data file: (relative path, rows). */
+  private def appendLineage(stage: String, snapshotId: String, files: Seq[(String, Long)],
+      wallMs: Long): Unit = {
     val ts = System.currentTimeMillis()
-    val lines = rows.map { r =>
-      s"""{"stage":"${jsonEscape(stage)}","snapshot_id":"${jsonEscape(snapshotId)}","partition_id":${r.getInt(0)},"rows":${r.getLong(1)},"wall_ms":$wallMs,"ts":$ts}""" + "\n"
-    }.mkString
-    Files.createDirectories(Paths.get(root))
-    Files.write(Paths.get(root, "_lineage.jsonl"), lines.getBytes(StandardCharsets.UTF_8),
+    append(Paths.get(root, "_lineage.jsonl"), files.map { case (file, rows) =>
+      s"""{"stage":"${jsonEscape(stage)}","snapshot_id":"${jsonEscape(snapshotId)}","file":"${jsonEscape(file)}","rows":$rows,"wall_ms":$wallMs,"ts":$ts}""" + "\n"
+    }.mkString)
+  }
+
+  private def append(p: Path, lines: String): Unit = {
+    Files.createDirectories(p.getParent)
+    Files.write(p, lines.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 }

@@ -27,44 +27,6 @@ final case class NodeMeta(id: String, name: String, description: String)
 /** Entity-linking dictionary row (FIXTURES.md F4). */
 final case class AliasEntry(alias: String, entity_id: String, prior: Double)
 
-/** A candidate assertion extracted from one sentence of one page,
-  * before entity linking. Aliases are surface forms; context is the
-  * sentence's non-alias tokens (for mention-context cosine).
-  */
-final case class Assertion(
-    url: String,
-    sent_idx: Int,
-    subj_alias: String,
-    predicate: String,
-    obj_alias: String,
-    context: Array[String])
-
-/** Linked + canonicalized triple with extraction/link confidence. */
-final case class LinkedTriple(
-    subject: String,
-    predicate: String,
-    `object`: String,
-    url: String,
-    link_conf: Double)
-
-/** Scored edge (reference score_all_edges.py:158-164 JSONL contract). */
-final case class ScoredTriple(
-    edge_id: String,
-    subject: String,
-    predicate: String,
-    `object`: String,
-    score: Double)
-
-/** Review record (reference select_edges_for_review.py:53-59). */
-final case class ReviewRecord(
-    edge_id: String,
-    subject: String,
-    predicate: String,
-    `object`: String,
-    model_score: Double,
-    uncertainty: Double,
-    status: String)
-
 /** Ontology/type constraint: predicate -> allowed CURIE prefixes
   * (mirrors the prefix whitelist of reference download.py:34-38).
   * Broadcast side of the pruning stage.
@@ -74,14 +36,3 @@ final case class OntologyRule(
     subj_prefixes: Array[String],
     obj_prefixes: Array[String],
     functional: Boolean)
-
-/** Per-stage, per-partition lineage row (north_rule: "per-partition
-  * lineage + metrics").
-  */
-final case class LineageRow(
-    stage: String,
-    snapshot_id: String,
-    partition_id: Int,
-    rows: Long,
-    wall_ms: Long,
-    ts: Timestamp)

@@ -43,7 +43,8 @@ object Subgraphs {
   /** edges(src,dst) symmetric; candidates(edge_id, head, tail), where
     * one edge_id names one (head, tail): an edge_id carrying two throws
     * IllegalArgumentException on both paths (the distributed walks and
-    * beam key by edge_id alone). Returns one row per kept subgraph node:
+    * beam key by edge_id alone); a candidate row repeated byte for byte
+    * is labelled once. Returns one row per kept subgraph node:
     * (edge_id, node, d_head, d_tail).
     *
     * `mode` mirrors the reference's `enclosing_sub_graph` switch
@@ -177,7 +178,7 @@ object Subgraphs {
       .map { case (k, v) => k -> v.map(_._2) }
     // full-graph degrees; only the community sweep reads them
     def deg(n: Long): Int = adj.get(n).fold(0)(_.length)
-    val out = cands.toSeq.flatMap { case (eid, head, tail) =>
+    val out = cands.distinct.toSeq.flatMap { case (eid, head, tail) =>
       def reach(seeds: Long*) = Bfs.kHopLocal(adj, seeds, h, maxNodesPerHop).keySet
       if (mode == "enclosing") {
         val dh = Bfs.kHopLocal(adj, Seq(head), h, maxNodesPerHop, Some(tail))
@@ -212,10 +213,11 @@ object Subgraphs {
     *    one frontier (a multi-seed BFS reaches the union of the per-seed
     *    reaches) and the community cap over that joint frontier.
     */
-  private def labelDistributed(edges: DataFrame, candidates: DataFrame, h: Int,
+  private def labelDistributed(edges: DataFrame, rawCandidates: DataFrame, h: Int,
       maxNodesPerHop: Option[Int], mode: String): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
+    val candidates = rawCandidates.select("edge_id", "head", "tail").distinct()
     // one edge_id names one (head, tail): the guard rides on a window
     // over edge_id whose partitioning the walk's seed distinct reuses,
     // so the walk's first checkpoint job raises it and no job is added

@@ -13,8 +13,8 @@ import graft.prune.AssertionPruning
 /** End-to-end KG construction-and-pruning pipeline (north_rule):
   * pages -> extract -> link -> canonicalize -> prune -> materialize,
   * with checkpointed stage boundaries (resume = skip any stage whose
-  * output snapshot for this input already committed), per-partition
-  * lineage rows, and per-stage metrics.
+  * output snapshot for this input already committed), per-file lineage
+  * rows, and per-stage metrics.
   */
 final case class StageMetrics(stage: String, rows: Long, wallMs: Long)
 
@@ -88,12 +88,8 @@ object KgPipeline {
         case Some(tf) if tf.hasSnapshot(name, snapId, inputSnapshot) =>
           (tf.readTable(spark, name, snapId), snapId) // resume: stage skipped
         case Some(tf) =>
-          val t0 = System.nanoTime()
-          val df = build
-          val snap = tf.writeTable(df, name, snapId, inputSnapshot, partitionCols)
-          val ms = (System.nanoTime() - t0) / 1000000
-          tf.appendLineage(tf.readTable(spark, name, snapId), name, snapId, ms)
-          metrics += StageMetrics(name, snap.rowCount, ms)
+          val snap = tf.writeTable(build, name, snapId, inputSnapshot, partitionCols)
+          metrics += StageMetrics(name, snap.rowCount, snap.wallMs)
           (tf.readTable(spark, name, snapId), snapId)
         case None =>
           val t0 = System.nanoTime()
@@ -193,13 +189,14 @@ object KgPipeline {
     // only materialized in table mode (it exists for downstream GNN-style
     // consumers, not for the in-memory P/R check).
     if (tables.isDefined) {
-      val entDict = graft.core.Ids.dictionary(
-        kept.select(col("subject").as("entity"))
+      // built in the stage bodies: `dictionary` checkpoints eagerly
+      val (entities, entSnap) = stage("entity_dict", keptSnap) {
+        Ids.dictionary(kept.select(col("subject").as("entity"))
           .unionAll(kept.select(col("object").as("entity"))), "entity")
-      val relDict = graft.core.Ids.dictionary(
-        kept.select(col("predicate").as("relation")), "relation")
-      val (entities, entSnap) = stage("entity_dict", keptSnap)(entDict)
-      val (relations, relSnap) = stage("relation_dict", keptSnap)(relDict)
+      }
+      val (relations, relSnap) = stage("relation_dict", keptSnap) {
+        Ids.dictionary(kept.select(col("predicate").as("relation")), "relation")
+      }
       stage("adjacency", entSnap, partitionCols = Seq("rel")) {
         kept
           .join(entities.withColumnRenamed("entity", "subject").withColumnRenamed("id", "src"), "subject")

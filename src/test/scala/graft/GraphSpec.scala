@@ -313,6 +313,20 @@ class GraphSpec extends AnyFunSuite {
       Map(5L -> 0, 4L -> 1, 3L -> 2, 2L -> 3, 10L -> 3, 1L -> 4, 11L -> 4, 12L -> 4, 13L -> 5))
   }
 
+  test("a candidate row repeated byte for byte is labelled once on both paths") {
+    def runs(cands: DataFrame): Seq[(String, Long => DataFrame)] =
+      Seq("enclosing", "union").map(m => m -> ((thr: Long) =>
+        Subgraphs.encloseAndLabel(edges, cands, 2, None, m, thr))) :+
+      ("community" -> ((thr: Long) =>
+        Subgraphs.encloseAndLabelCommunity(edges, cands, 2, None, thr)))
+    val once = runs(Seq(("e", 10L, 13L)).toDF("edge_id", "head", "tail"))
+    val twice = runs(Seq(("e", 10L, 13L), ("e", 10L, 13L)).toDF("edge_id", "head", "tail"))
+    for (((name, one), (_, two)) <- once.zip(twice); thr <- Seq(1L << 16, 0L)) {
+      val want = one(thr).collect().map(_.toString).sorted.toSeq
+      assert(want.nonEmpty && two(thr).collect().map(_.toString).sorted.toSeq == want, s"$name/$thr")
+    }
+  }
+
   test("an edge_id repeated with different roots is rejected on both paths") {
     val cands = Seq(("e", 10L, 13L), ("e", 10L, 13L), ("e", 3L, 4L))
       .toDF("edge_id", "head", "tail")

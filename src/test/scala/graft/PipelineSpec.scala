@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TestBus
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.TableFormat
@@ -41,8 +44,21 @@ class PipelineSpec extends AnyFunSuite {
     val r2 = KgPipeline.run(spark, cfg, Some(tf), runId = "rA")
     assert(r2.metrics.isEmpty, "resume must skip every stage")
     assert(KgPipeline.outputTriples(r2).count() == out1)
-    // lineage rows were written
-    assert(Files.exists(java.nio.file.Paths.get(root, "_lineage.jsonl")))
+    // lineage reconciles: for every stage the per-file lineage rows sum
+    // to the manifest rowCount, which is Spark's count of the snapshot
+    def lines(first: String, more: String*) = Files.readAllLines(Paths.get(first, more: _*)).asScala
+    def field(line: String, key: String) =
+      s""""$key":"?([^",}]*)""".r.findFirstMatchIn(line).get.group(1)
+    val lineage = lines(root, "_lineage.jsonl")
+    for (m <- r1.metrics) {
+      val snapId = s"rA-${m.stage}"
+      val fromLineage = lineage.filter(field(_, "snapshot_id") == snapId).map(field(_, "rows").toLong)
+      val manifest = lines(root, m.stage, "_manifest.jsonl")
+        .filter(field(_, "snapshotId") == snapId).map(field(_, "rowCount").toLong)
+      val counted = spark.read.parquet(s"$root/${m.stage}/snapshot=$snapId").count()
+      assert(fromLineage.nonEmpty && fromLineage.sum == counted, m.stage)
+      assert(manifest == Seq(counted) && m.rows == counted, m.stage)
+    }
     // relation-partitioned materialization (D3): triples partitioned by
     // predicate, adjacency partitioned by rel, dictionaries present
     val triplesDir = new java.io.File(s"$root/triples/snapshot=rA-triples")
@@ -51,6 +67,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(adjDir.list().exists(_.startsWith("rel=")))
     val ent = spark.read.parquet(s"$root/entity_dict/snapshot=rA-entity_dict")
     assert(ent.columns.toSeq.sorted == Seq("entity", "id"))
+  }
+
+  test("a resumed run starts no Spark job") {
+    val tf = new TableFormat(Files.createTempDirectory("graft-tables").toString)
+    KgPipeline.run(spark, Fixtures.tiny, Some(tf), runId = "rC")
+    var resumed: Seq[graft.pipeline.StageMetrics] = null
+    val jobs = TestBus.jobsDuring(spark.sparkContext) {
+      resumed = KgPipeline.run(spark, Fixtures.tiny, Some(tf), runId = "rC").metrics
+    }
+    assert(resumed.isEmpty, "resume must skip every stage")
+    assert(jobs.isEmpty, s"${jobs.size} Spark jobs")
   }
 
   test("resume is keyed by input identity: same runId over a DIFFERENT input re-runs") {

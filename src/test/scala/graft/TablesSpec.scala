@@ -80,4 +80,17 @@ class TablesSpec extends AnyFunSuite {
     }
     assert(jobs.isEmpty)
   }
+
+  test("writeTable's only Spark action is the write; lineage rows are its files' row counts") {
+    val tf = new TableFormat(tmp())
+    var snap: tf.Snapshot = null
+    val jobs = TestBus.jobsDuring(spark.sparkContext) {
+      snap = tf.writeTable(rows, "t", "s1", partitionCols = Seq("a", "b"))
+    }
+    assert(jobs.nonEmpty && jobs.forall(_.isDefined) && jobs.distinct.size == 1, jobs)
+    assert(snap.rowCount == 3)
+    val lineage = Files.readAllLines(Paths.get(tf.root, "_lineage.jsonl")).toArray.map(_.toString)
+    val file = "\"file\":\"a=\\d/b=[pq]/part-[^\"]+\\.parquet\",\"rows\":(\\d+)".r
+    assert(lineage.map(l => file.findFirstMatchIn(l).get.group(1).toLong).sum == 3)
+  }
 }
