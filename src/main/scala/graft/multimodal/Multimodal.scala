@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Ids
@@ -10,24 +10,24 @@ import graft.core.Ids
   *
   * ALL THREE modalities decode for REAL via JDK-shipped codecs (public
   * standard library, headless-safe): images through `javax.imageio`
-  * PNG ([[decodeImage]]/[[encodePng]]), audio through
-  * `javax.sound.sampled` WAV/PCM ([[decodeAudio]]/[[encodeWav]]), and
+  * PNG ([[parsePng]]/[[encodePng]]), audio through
+  * `javax.sound.sampled` WAV/PCM ([[parseWav]]/[[encodeWav]]), and
   * video through the JDK's multi-frame animated-GIF reader
-  * ([[decodeVideo]]/[[encodeGif]] — the one moving-picture container
-  * the JVM decodes; MP4/WebM have no JDK codec). Each round-trip is
-  * lossless (PNG over TYPE_INT_RGB; PCM; GIF over an indexed 256-gray
-  * palette), which is what lets the q83/q84/q85 DuckDB oracles
-  * hash-check the whole codec paths: each oracle recomputes pooled
-  * features from its closed-form generator ([[synthGray]] /
-  * [[synthSample]] / [[synthFrameGray]]) — equality holds iff the
-  * engine's real round-trip preserved every sample. [[decodeStub]]
-  * survives only as the declared fallback for payload bytes no JVM
-  * codec can parse (deterministic fake features from the raw bytes).
-  * Everything Spark-side is identical across all paths —
-  * schema, batched mapPartitions shape (the Scala analogue of
-  * mapInPandas: fixed-size batches through the per-partition iterator),
-  * partition balancing, and the downstream feature-vector contract
-  * (Array[Float], ready for the similarity operators).
+  * ([[parseGif]]/[[encodeGif]] — the one moving-picture container
+  * the JVM decodes; MP4/WebM have no JDK codec). Each codec has ONE
+  * parse, returning exact integer sums plus geometry ([[Pooled]]); the
+  * query operators emit those sums and [[featurize]]'s float features
+  * are normalized from them. Each round-trip is lossless (PNG over
+  * TYPE_INT_RGB; PCM; GIF over an indexed 256-gray palette), which is
+  * what lets the q83/q84/q85 DuckDB oracles hash-check the whole codec
+  * paths: each oracle recomputes the sums from its closed-form
+  * generator ([[synthGray]] / [[synthSample]] / [[synthFrameGray]]) —
+  * equality holds iff the engine's real round-trip preserved every
+  * sample. [[decodeStub]] survives only as the declared fallback for
+  * payload bytes no JVM codec can parse (deterministic fake features
+  * from the raw bytes). Every operator runs through one per-row decode
+  * step ([[decodeEach]]): rows balanced by `media_id` over the
+  * session's cores, each flat-mapped to its output rows.
   */
 object Multimodal {
 
@@ -53,7 +53,15 @@ object Multimodal {
       features: Array[Float])
 
   val featureDim = 16
-  val batchSize = 64
+  /** Block grid side for image and video-frame pooling: blocks² = featureDim. */
+  val blocks = 4
+
+  /** One decoded picture or clip: its geometry and its exact integer
+    * sums — gray block sums over a [[blocks]]×[[blocks]] grid (row-major
+    * blocks, row-major pixels within a block), or PCM sample sums over
+    * [[featureDim]] equal windows (width = samples, height = 1 channel).
+    */
+  final case class Pooled(width: Int, height: Int, sums: Array[Long])
 
   /** STUB: deterministic fake decoder. A production build replaces this
     * with a real codec call; the signature (bytes -> float features) and
@@ -84,7 +92,7 @@ object Multimodal {
     ((id * 31 + x * 7 + y * 13) % 256).toInt
 
   /** Real PNG encode of the synthetic image for `id` via the JDK codec.
-    * TYPE_INT_RGB + PNG is lossless, so decode(encodePng(id)) recovers
+    * TYPE_INT_RGB + PNG is lossless, so parsePng(encodePng(id)) recovers
     * [[synthGray]] exactly.
     */
   def encodePng(id: Long, w: Int, h: Int): Array[Byte] = {
@@ -111,23 +119,17 @@ object Multimodal {
       payload(0) == 0x89.toByte && payload(1) == 'P' &&
       payload(2) == 'N' && payload(3) == 'G'
 
-  /** REAL decode: JDK ImageIO → gray (blue channel) block sums over a
-    * `blocks`×`blocks` grid — exact integers, so the q83 oracle hashes
-    * them with no float tolerance. Row-major blocks, row-major pixels
-    * within a block. Loud on corrupt bytes: a payload that sniffed as
-    * PNG but fails to decode is broken input, never silently fake
-    * features.
+  /** REAL decode: JDK ImageIO → gray (blue channel) block sums. Loud on
+    * corrupt bytes: a payload that sniffed as PNG but fails to decode is
+    * broken input, never silently fake features.
     */
-  def decodeImageBlockSums(payload: Array[Byte], blocks: Int): Array[Long] =
-    poolSums(decodePng(payload), blocks)
-
-  private def decodePng(payload: Array[Byte]): java.awt.image.BufferedImage = {
+  def parsePng(payload: Array[Byte]): Pooled = {
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
     require(img != null, s"undecodable image payload (${payload.length} bytes)")
-    img
+    pool(img)
   }
 
-  private def poolSums(img: java.awt.image.BufferedImage, blocks: Int): Array[Long] = {
+  private def pool(img: java.awt.image.BufferedImage): Pooled = {
     val (w, h) = (img.getWidth, img.getHeight)
     require(w % blocks == 0 && h % blocks == 0,
       s"image ${w}x$h not divisible into ${blocks}x$blocks blocks")
@@ -152,17 +154,7 @@ object Multimodal {
       }
       by += 1
     }
-    out
-  }
-
-  /** Real image features on the [[MediaFeatures]] contract: 4×4 block
-    * means normalized to [-0.5, 0.5) — same shape/range as the stub so
-    * the downstream similarity seam is path-agnostic.
-    */
-  def decodeImage(payload: Array[Byte]): Array[Float] = {
-    val img = decodePng(payload)
-    val per = (img.getWidth / 4) * (img.getHeight / 4)
-    poolSums(img, 4).map(s => (s.toFloat / per / 255f) - 0.5f)
+    Pooled(w, h, out)
   }
 
   // ------------------------------------------------- real audio codec
@@ -176,7 +168,7 @@ object Multimodal {
   /** Real WAV encode via the JDK audio codec (`javax.sound.sampled` —
     * the one audio format the JVM ships; compressed formats have no JDK
     * codec and stay stubbed). PCM 16-bit mono little-endian; lossless,
-    * so decode(encodeWav(id)) recovers [[synthSample]] exactly.
+    * so parseWav(encodeWav(id)) recovers [[synthSample]] exactly.
     */
   def encodeWav(id: Long, n: Int): Array[Byte] = {
     val pcm = new Array[Byte](n * 2)
@@ -204,17 +196,10 @@ object Multimodal {
       payload(10) == 'V' && payload(11) == 'E'
 
   /** REAL audio decode: JDK WAV parser → exact-integer sample sums over
-    * `windows` equal windows — the q84 oracle hashes these with no
-    * float tolerance. Loud on corrupt bytes or a non-PCM-16/mono/LE
-    * stream.
+    * [[featureDim]] equal windows. Loud on corrupt bytes or a
+    * non-PCM-16/mono/LE stream.
     */
-  def decodeWavWindowSums(payload: Array[Byte], windows: Int): Array[Long] =
-    wavWindowSumsN(payload, windows)._1
-
-  /** window sums + total sample count from ONE parse (decodeAudio needs
-    * both; a second getAudioInputStream pass would re-parse the payload)
-    */
-  private def wavWindowSumsN(payload: Array[Byte], windows: Int): (Array[Long], Int) = {
+  def parseWav(payload: Array[Byte]): Pooled = {
     val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
       new java.io.ByteArrayInputStream(payload))
     val fmt = in.getFormat
@@ -224,11 +209,11 @@ object Multimodal {
       s"unsupported audio stream: $fmt")
     val bytes = in.readAllBytes()
     val n = bytes.length / 2
-    require(n % windows == 0, s"$n samples not divisible into $windows windows")
-    val per = n / windows
-    val out = new Array[Long](windows)
+    require(n % featureDim == 0, s"$n samples not divisible into $featureDim windows")
+    val per = n / featureDim
+    val out = new Array[Long](featureDim)
     var w = 0
-    while (w < windows) {
+    while (w < featureDim) {
       var s = 0L
       var i = 0
       while (i < per) {
@@ -239,19 +224,7 @@ object Multimodal {
       out(w) = s
       w += 1
     }
-    (out, n)
-  }
-
-  /** Real audio features on the [[MediaFeatures]] contract: 16 window
-    * means normalized to [-0.5, 0.5) — path-agnostic downstream, like
-    * [[decodeImage]]. Loud on an empty stream (0/0 would be silent
-    * all-NaN features).
-    */
-  def decodeAudio(payload: Array[Byte]): Array[Float] = {
-    val (sums, n) = wavWindowSumsN(payload, featureDim)
-    require(n > 0, "empty audio stream (0 samples)")
-    val per = n / featureDim
-    sums.map(s => s.toFloat / per / 65536f)
+    Pooled(n, 1, out)
   }
 
   // ------------------------------------------- real video (GIF) codec
@@ -314,20 +287,12 @@ object Multimodal {
       payload(0) == 'G' && payload(1) == 'I' && payload(2) == 'F' &&
       payload(3) == '8'
 
-  /** REAL video decode: JDK GIF reader → every frame → exact-integer
-    * 4×4 block sums per frame (the image pooling applied per frame).
-    * Loud on corrupt bytes.
+  /** REAL video decode: JDK GIF reader → every frame in order, each
+    * pooled like an image with its OWN geometry (delta-optimized GIFs
+    * store later frames as smaller sub-rectangles). Loud on corrupt
+    * bytes.
     */
-  def decodeGifFrameSums(payload: Array[Byte], blocks: Int): Seq[(Int, Array[Long])] =
-    gifFrameSumsDims(payload, blocks).map { case (f, _, _, sums) => f -> sums }
-
-  /** frame sums + each frame's own geometry from ONE parse: (frame_idx,
-    * width, height, block sums). decodeVideo needs the per-frame dims —
-    * delta-optimized GIFs store later frames as smaller sub-rectangles,
-    * so a single frame-0 divisor would silently mis-normalize them.
-    */
-  private def gifFrameSumsDims(payload: Array[Byte],
-      blocks: Int): Seq[(Int, Int, Int, Array[Long])] = {
+  def parseGif(payload: Array[Byte]): Seq[Pooled] = {
     val rd = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
     // MemoryCacheImageInputStream directly: the source is already an
     // in-memory byte array, and ImageIO.createImageInputStream's default
@@ -338,26 +303,44 @@ object Multimodal {
       rd.setInput(iis)
       val n = rd.getNumImages(true)
       require(n > 0, s"undecodable gif payload (${payload.length} bytes)")
-      (0 until n).map { f =>
-        val img = rd.read(f)
-        (f, img.getWidth, img.getHeight, poolSums(img, blocks))
-      }
+      (0 until n).map(f => pool(rd.read(f)))
     } finally { rd.dispose(); iis.close() }
   }
 
-  /** Real video features on the [[MediaFeatures]] contract: per-frame
-    * block MEANS (each over that frame's own pixel count) averaged
-    * across frames, normalized to [-0.5, 0.5).
+  // ------------------------------------------- features from the parses
+
+  /** Float features on the [[MediaFeatures]] contract: each part's sums
+    * become means over that part's own sample count, the means are
+    * averaged across parts (GIF frames; one part otherwise), then mapped
+    * to `mean / range - center` — [-0.5, 0.5) for gray (range 255,
+    * center 0.5) and signed PCM (range 65536, center 0), the stub's
+    * shape and range, so the downstream similarity seam is
+    * path-agnostic. Loud on an empty part (0/0 would be silent all-NaN
+    * features).
     */
-  def decodeVideo(payload: Array[Byte]): Array[Float] = {
-    val frames = gifFrameSumsDims(payload, 4)
+  private def normalize(parts: Seq[Pooled], range: Float, center: Float): Array[Float] = {
     val acc = new Array[Float](featureDim)
-    frames.foreach { case (_, w, h, sums) =>
-      val per = (w / 4) * (h / 4)
-      var i = 0; while (i < featureDim) { acc(i) += sums(i).toFloat / per; i += 1 }
+    parts.foreach { p =>
+      val per = p.width * p.height / featureDim
+      require(per > 0, s"empty media (${p.width}x${p.height} samples)")
+      var i = 0; while (i < featureDim) { acc(i) += p.sums(i).toFloat / per; i += 1 }
     }
-    acc.map(v => (v / frames.size / 255f) - 0.5f)
+    acc.map(v => v / parts.size / range - center)
   }
+
+  /** Real features of a PNG image: 4×4 block means. */
+  def decodeImage(payload: Array[Byte]): Array[Float] =
+    normalize(Seq(parsePng(payload)), 255f, 0.5f)
+
+  /** Real features of a WAV clip: 16 window means. */
+  def decodeAudio(payload: Array[Byte]): Array[Float] =
+    normalize(Seq(parseWav(payload)), 65536f, 0f)
+
+  /** Real features of a GIF clip: per-frame 4×4 block means averaged across frames. */
+  def decodeVideo(payload: Array[Byte]): Array[Float] =
+    normalize(parseGif(payload), 255f, 0.5f)
+
+  // ----------------------------------------------------- the operators
 
   // one counter per live SparkContext (this JVM only ever holds one;
   // the map exists so tests that restart the session don't read a
@@ -365,176 +348,60 @@ object Multimodal {
   private val fallbackCounters = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.SparkContext, org.apache.spark.util.LongAccumulator]()
 
-  /** The session-wide default codec-fallback accumulator [[featurize]]
-    * increments when no explicit counter is passed. Bench reads it
-    * after the query suite and records `stub_fallback_rows` (expected
-    * 0 on the fixtures — a nonzero value is a codec regression signal).
+  /** The session-wide codec-fallback accumulator [[featurize]]
+    * increments. Bench reads it after the query suite and records
+    * `stub_fallback_rows` (expected 0 on the fixtures — a nonzero value
+    * is a codec regression signal).
     */
   def stubFallbackCounter(sc: org.apache.spark.SparkContext)
       : org.apache.spark.util.LongAccumulator =
     fallbackCounters.computeIfAbsent(sc,
       s => s.longAccumulator("graft.multimodal.featurize.stubFallbacks"))
 
-  /** Batched featurization: fixed-size batches through each partition
-    * iterator (the mapInPandas batch shape), repartitioned by media_id
-    * so decode work balances even when payload sizes skew. Dispatch:
-    * image rows whose payload really is a PNG, audio rows whose payload
-    * really is a RIFF/WAVE, and video rows whose payload really is a
-    * GIF go through the REAL JDK codecs; mismatched bytes — and
-    * valid-but-unsupported variants the real decoder rejects (stereo
-    * WAV, non-4-divisible geometry, empty clips) — keep the declared
-    * stub instead of failing the bulk job.
+  /** The one decode operator: rows repartitioned by `media_id` into one
+    * partition per core of the session (decode is pure per-row CPU work,
+    * so the core count is the right denominator, and balancing by id
+    * spreads it even when payload sizes skew), each row flat-mapped to
+    * its output rows. Per-row results are deterministic, so the
+    * partitioning cannot change any emitted value.
     */
-  def featurize(media: Dataset[MediaRow], partitions: Int,
-      fallbackCounter: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[MediaFeatures] = {
+  private def decodeEach[T: Encoder](media: Dataset[MediaRow])(
+      f: MediaRow => IterableOnce[T]): Dataset[T] =
+    media
+      .repartition(media.sparkSession.sparkContext.defaultParallelism, col("media_id"))
+      .flatMap(f)
+
+  /** Bulk featurization. Dispatch: image rows whose payload really is a
+    * PNG, audio rows whose payload really is a RIFF/WAVE, and video rows
+    * whose payload really is a GIF go through the REAL JDK codecs;
+    * mismatched bytes — and valid-but-unsupported variants the real
+    * decoder rejects (stereo WAV, non-4-divisible geometry, empty clips)
+    * — keep the declared stub instead of failing the bulk job.
+    */
+  def featurize(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
-    // exception-path fallbacks are COUNTED: a systematic codec
-    // regression in this bulk path would otherwise degrade every row to
-    // stub features silently. The default is the SESSION-WIDE
-    // [[stubFallbackCounter]] so recorded artifacts (Bench JSON) can
-    // read the total without threading an accumulator through every
-    // query; counts are at-least-once under task retry/speculation
+    // exception-path fallbacks are COUNTED on the session-wide
+    // [[stubFallbackCounter]]: a systematic codec regression in this bulk
+    // path would otherwise degrade every row to stub features silently.
+    // Counts are at-least-once under task retry/speculation
     // (observability, not an exact metric). Declared stub dispatch
     // (kind/magic-byte mismatch) is NOT counted — that path is the
-    // documented contract, not decay.
-    val stubFallbacks = fallbackCounter.getOrElse(
-      stubFallbackCounter(media.sparkSession.sparkContext))
-    media
-      .repartition(partitions, col("media_id"))
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          // batch boundary = where a vectorized decoder would be invoked
-          batch.iterator.map { m =>
-            // featurize is the bulk-curation path: one odd-but-valid
-            // file (stereo WAV, non-4-divisible PNG, empty clip) must
-            // degrade to the stub, not fail the whole job. The
-            // hash-gated query paths (decodeImageBlockSums /
-            // videoFrameSums / wav sums) stay loud by calling the
-            // decoders directly.
-            val feats =
-              try {
-                if (m.kind == "image" && isPng(m.payload)) decodeImage(m.payload)
-                else if (m.kind == "audio" && isWav(m.payload)) decodeAudio(m.payload)
-                else if (m.kind == "video" && isGif(m.payload)) decodeVideo(m.payload)
-                else decodeStub(m.payload)
-              } catch {
-                case scala.util.control.NonFatal(_) =>
-                  stubFallbacks.add(1L)
-                  decodeStub(m.payload)
-              }
-            MediaFeatures(m.media_id, m.kind, m.payload.length, feats)
-          }
+    // documented contract, not decay. The hash-gated query operators
+    // stay loud by calling the parses directly.
+    val stubFallbacks = stubFallbackCounter(media.sparkSession.sparkContext)
+    decodeEach(media) { m =>
+      val feats =
+        try {
+          if (m.kind == "image" && isPng(m.payload)) decodeImage(m.payload)
+          else if (m.kind == "audio" && isWav(m.payload)) decodeAudio(m.payload)
+          else if (m.kind == "video" && isGif(m.payload)) decodeVideo(m.payload)
+          else decodeStub(m.payload)
+        } catch {
+          case scala.util.control.NonFatal(_) =>
+            stubFallbacks.add(1L)
+            decodeStub(m.payload)
         }
-      }
-  }
-
-  /** Video frame sampling — REAL for GIF payloads: the JDK reader
-    * extracts up to `nFrames` actual frames, each re-encoded as a
-    * standalone PNG payload (losslessly — so downstream [[decodeImage]]
-    * consumers read true frames). Non-GIF payloads keep the declared
-    * stub slicing (every `stride` bytes into pseudo-frames). The
-    * operator shape either way: one row in, n typed frame rows out
-    * (flatMap/explode).
-    */
-  def sampleFrames(media: Dataset[MediaRow], nFrames: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      // ONE reader/writer pair per PARTITION (featurize's amortization
-      // discipline): the plugin lookup + codec instantiation previously
-      // ran per row (reader) and per frame (ImageIO.write's internal
-      // writer) — pure allocation churn on a bulk media scan. setInput/
-      // setOutput re-arm the same instances per row; dispose fires once
-      // when the partition iterator drains (empty partitions never
-      // instantiate — lazy vals).
-      var codecsUsed = false
-      lazy val gifReader = {
-        codecsUsed = true
-        javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-      }
-      lazy val pngWriter =
-        javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
-      val rows = it.flatMap { m =>
-        if (m.kind == "video" && isGif(m.payload)) {
-          val rd = gifReader
-          // per-row stream closed in finally (the Range.map below is
-          // eager, so all frames are read before the close). A direct
-          // MemoryCacheImageInputStream — the payload is already an
-          // in-memory array; ImageIO.createImageInputStream's default
-          // file-cache variant would hold a temp file + fd until GC,
-          // and the partition-level dispose alone wouldn't release
-          // per-row streams when a row throws mid-partition.
-          val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-            new java.io.ByteArrayInputStream(m.payload))
-          try {
-            rd.setInput(iis)
-            val n = math.min(nFrames, rd.getNumImages(true))
-            (0 until n).map { f =>
-              // re-encode via TYPE_INT_RGB: the PNG writer round-trips it
-              // losslessly (q83-proven), whereas handing it the decoded
-              // indexed frame directly shifts pixels (measured: the JDK
-              // PNG writer mangles IndexColorModel images)
-              val idx = rd.read(f)
-              val rgb = new java.awt.image.BufferedImage(
-                idx.getWidth, idx.getHeight,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              var y = 0
-              while (y < idx.getHeight) {
-                var x = 0
-                while (x < idx.getWidth) {
-                  rgb.setRGB(x, y, idx.getRGB(x, y)); x += 1
-                }
-                y += 1
-              }
-              val bos = new java.io.ByteArrayOutputStream()
-              val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-              try {
-                pngWriter.setOutput(ios)
-                pngWriter.write(rgb)
-              } finally ios.close()
-              (m.media_id, f, bos.toByteArray)
-            }
-          } finally iis.close()
-        } else {
-          val stride = math.max(1, m.payload.length / math.max(nFrames, 1))
-          (0 until math.min(nFrames, m.payload.length)).map { f =>
-            val start = f * stride
-            val end = math.min(start + stride, m.payload.length)
-            (m.media_id, f, m.payload.slice(start, end))
-          }
-        }
-      }
-      rows ++ {
-        if (codecsUsed) { gifReader.dispose(); pngWriter.dispose() }
-        Iterator.empty
-      }
-    }.toDF("media_id", "frame_idx", "frame_payload")
-  }
-
-  /** Demo media table derived from the fixture pages' html bytes. */
-  def mediaFromPages(spark: SparkSession, pages: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    pages.select(
-      xxhash64(col("url")).as("media_id"),
-      element_at(array(lit("image"), lit("audio"), lit("video")),
-        (pmod(xxhash64(col("url")), lit(3L)) + 1).cast("int")).as("kind"),
-      col("html").as("payload"),
-      lit(640).as("width"),
-      lit(480).as("height"))
-      .as[MediaRow]
-  }
-
-  /** Media table of REAL PNG payloads over the driver `documents`
-    * fixture: one 16×16 synthetic image per doc_id, encoded by the JDK
-    * PNG codec in the executors (narrow per-row work, zero shuffle —
-    * the fixture analogue of reading image bytes out of an Iceberg
-    * binary column). Feeds q83, whose oracle hash-checks the full
-    * encode→decode round-trip against [[synthGray]].
-    */
-  def mediaFromDocsImages(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
-      MediaRow(id, "image", encodePng(id, 16, 16), 16, 16)
+      Iterator.single(MediaFeatures(m.media_id, m.kind, m.payload.length, feats))
     }
   }
 
@@ -544,82 +411,49 @@ object Multimodal {
     * the driver comparator scalar-only; integers need no float
     * tolerance).
     */
-  def imageBlockSums(media: Dataset[MediaRow], partitions: Int): DataFrame = {
+  def imageBlockSums(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
-    media
-      .repartition(partitions, col("media_id"))
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { m =>
-            (m.media_id, m.width, m.height,
-              decodeImageBlockSums(m.payload, 4).mkString(","))
-          }
-        }
-      }
-      .toDF("media_id", "width", "height", "feat_str")
-  }
-
-  /** Media table of REAL WAV payloads over the driver `documents`
-    * fixture: one 256-sample PCM clip per doc_id, encoded by the JDK
-    * audio codec in the executors (q84's input; see
-    * [[mediaFromDocsImages]] for the pattern). width = samples,
-    * height = channels.
-    */
-  def mediaFromDocsAudio(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
-      MediaRow(id, "audio", encodeWav(id, 256), 256, 1)
-    }
+    decodeEach(media) { m =>
+      Iterator.single((m.media_id, m.width, m.height, parsePng(m.payload).sums.mkString(",")))
+    }.toDF("media_id", "width", "height", "feat_str")
   }
 
   /** Decoded window-sum features for a media table of real WAV clips:
     * (media_id, n_samples, feat_str) with feat_str the comma-joined
     * exact integer 16-window sample sums — the q84 output shape.
     */
-  def audioWindowSums(media: Dataset[MediaRow], partitions: Int): DataFrame = {
+  def audioWindowSums(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
-    media
-      .repartition(partitions, col("media_id"))
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { m =>
-            (m.media_id, m.width,
-              decodeWavWindowSums(m.payload, featureDim).mkString(","))
-          }
-        }
-      }
-      .toDF("media_id", "n_samples", "feat_str")
-  }
-
-  /** Media table of REAL animated-GIF payloads over the driver
-    * `documents` fixture: one 4-frame 16×16 clip per doc_id, encoded by
-    * the JDK GIF codec in the executors (q85's input).
-    */
-  def mediaFromDocsVideo(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
-      MediaRow(id, "video", encodeGif(id, 4, 16, 16), 16, 16)
-    }
+    decodeEach(media) { m =>
+      Iterator.single((m.media_id, m.width, parseWav(m.payload).sums.mkString(",")))
+    }.toDF("media_id", "n_samples", "feat_str")
   }
 
   /** Decoded per-frame block-sum features for a media table of real
     * GIF clips: (media_id, frame_idx, feat_str), one row per actual
-    * decoded frame — the q85 output shape.
+    * decoded frame — the q85 output shape (the frame-explode operator).
     */
-  def videoFrameSums(media: Dataset[MediaRow], partitions: Int): DataFrame = {
+  def videoFrameSums(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
-    media
-      .repartition(partitions, col("media_id"))
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.flatMap { m =>
-            decodeGifFrameSums(m.payload, 4).map { case (f, sums) =>
-              (m.media_id, f, sums.mkString(","))
-            }
-          }
-        }
+    decodeEach(media) { m =>
+      parseGif(m.payload).zipWithIndex.map { case (p, f) =>
+        (m.media_id, f, p.sums.mkString(","))
       }
-      .toDF("media_id", "frame_idx", "feat_str")
+    }.toDF("media_id", "frame_idx", "feat_str")
+  }
+
+  /** Media table of REAL codec payloads over the driver `documents`
+    * fixture: one `kind` clip of the given geometry per doc_id, its
+    * bytes made by `encode(doc_id)` in the executors (narrow per-row
+    * work, zero shuffle — the fixture analogue of reading media bytes
+    * out of an Iceberg binary column). Feeds q83/q84/q85, whose oracles
+    * hash-check the encode→decode round-trip against the closed-form
+    * generators.
+    */
+  def mediaFromDocsEncoded(docs: DataFrame, kind: String, width: Int, height: Int)(
+      encode: Long => Array[Byte]): Dataset[MediaRow] = {
+    import docs.sparkSession.implicits._
+    docs.select(col("doc_id")).as[Long].map(id => MediaRow(id, kind, encode(id), width, height))
   }
 
   /** Media table over the driver `documents` fixture: doc text bytes as

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.multimodal.Multimodal
 import graft.queries.Q._
 
 /** Driver-contract queries for the training-data-pipeline operators:
@@ -13,17 +14,6 @@ import graft.queries.Q._
 object DataQueries {
 
   // ---------------------------------------------------------- helpers
-
-  /** Partition count for the CPU-bound multimodal decode stages (r8):
-    * one task per available core instead of the old literal 8, which
-    * quartered decode parallelism on the 32-core bench box and was
-    * tuned for neither local mode nor a cluster. defaultParallelism =
-    * total executor cores, the right denominator for pure per-row
-    * codec work (results are per-row deterministic — partitioning
-    * cannot change any emitted value).
-    */
-  private def mmParts(s: org.apache.spark.sql.SparkSession): Int =
-    s.sparkContext.defaultParallelism
 
   /** whitespace tokens */
   private def toks: Column = split(col("text"), " ")
@@ -1165,7 +1155,7 @@ object DataQueries {
 
     QueryDef("q78_multimodal_ann",
       // End-to-end multimodal composition: documents -> opaque binary
-      // media rows -> batched featurize (the declared-stub decoder — a
+      // media rows -> featurize (the declared-stub decoder — a
       // deterministic fake; the container ships no codecs) -> IVF ANN
       // top-3 over the extracted features. The feature vectors exist
       // only Spark-side, so the pair semi-oracle (q49/q69) is extended:
@@ -1179,7 +1169,7 @@ object DataQueries {
       // so a rounding-created tie cannot leave rn inconsistent with the
       // emitted ordering.
       (s, d) => {
-        val media = graft.multimodal.Multimodal.mediaFromDocs(
+        val media = Multimodal.mediaFromDocs(
           s, table(s, d, "documents"))
         def vecStr(v: Column): Column =
           concat_ws(",", transform(v, _.cast("string")))
@@ -1188,7 +1178,7 @@ object DataQueries {
         // times (seed + Lloyd collects + assignment) and the two
         // vector-emitting join-backs would each replay the stub
         // decode of every document again
-        val emb = graft.multimodal.Multimodal.featurize(media, mmParts(s))
+        val emb = Multimodal.featurize(media)
           .toDF()
           .select(col("media_id").as("id"),
             transform(col("features"), _.cast("double")).as("v"))
@@ -1241,9 +1231,9 @@ object DataQueries {
       // per-row work end-to-end: zero shuffles beyond the balance
       // repartition, scales as pure map parallelism.
       (s, d) => {
-        val media = graft.multimodal.Multimodal.mediaFromDocsImages(
-          s, table(s, d, "documents"))
-        graft.multimodal.Multimodal.imageBlockSums(media, mmParts(s))
+        val media = Multimodal.mediaFromDocsEncoded(
+          table(s, d, "documents"), "image", 16, 16)(Multimodal.encodePng(_, 16, 16))
+        Multimodal.imageBlockSums(media)
       },
       Some("""SELECT doc_id AS media_id, 16 AS width, 16 AS height,
              |  array_to_string(list_transform(range(16), b ->
@@ -1265,9 +1255,9 @@ object DataQueries {
       // formula — any framing/endianness/sign divergence in the codec
       // path breaks the hash.
       (s, d) => {
-        val media = graft.multimodal.Multimodal.mediaFromDocsAudio(
-          s, table(s, d, "documents"))
-        graft.multimodal.Multimodal.audioWindowSums(media, mmParts(s))
+        val media = Multimodal.mediaFromDocsEncoded(
+          table(s, d, "documents"), "audio", 256, 1)(Multimodal.encodeWav(_, 256))
+        Multimodal.audioWindowSums(media)
       },
       Some("""SELECT doc_id AS media_id, 256 AS n_samples,
              |  array_to_string(list_transform(range(16), w ->
@@ -1288,9 +1278,9 @@ object DataQueries {
       // range(4): a missing/extra/reordered frame or any pixel
       // divergence breaks the rows or the hash.
       (s, d) => {
-        val media = graft.multimodal.Multimodal.mediaFromDocsVideo(
-          s, table(s, d, "documents"))
-        graft.multimodal.Multimodal.videoFrameSums(media, mmParts(s))
+        val media = Multimodal.mediaFromDocsEncoded(
+          table(s, d, "documents"), "video", 16, 16)(Multimodal.encodeGif(_, 4, 16, 16))
+        Multimodal.videoFrameSums(media)
       },
       Some("""SELECT doc_id AS media_id, CAST(f AS INTEGER) AS frame_idx,
              |  array_to_string(list_transform(range(16), b ->

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.TableFormat.jsonEscape
+
 /** Triple export sinks (SURVEY.md §2.1).
   *
   * Formats mirror the reference exactly:
@@ -63,18 +65,15 @@ object Sinks {
       throw new IllegalStateException(
         s"missing node metadata for: ${missing.mkString(", ")}")
 
-    def esc(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString }
-
     val nodeRows = endpoints.join(nodes, Seq("id"))
       .select("id", "name", "description").orderBy("id").collect()
     val edgeRows = edges.select("subject", "object", "predicate")
       .orderBy("subject", "object", "predicate").collect()
     val nodesJson = nodeRows.map { r =>
-      s"""{"data":{"description":"${esc(r.getString(2))}","id":"${esc(r.getString(0))}","name":"${esc(r.getString(1))}"}}"""
+      s"""{"data":{"description":"${jsonEscape(r.getString(2))}","id":"${jsonEscape(r.getString(0))}","name":"${jsonEscape(r.getString(1))}"}}"""
     }.mkString("[", ",", "]")
     val edgesJson = edgeRows.map { r =>
-      s"""{"data":{"label":"${esc(r.getString(2))}","source":"${esc(r.getString(0))}","target":"${esc(r.getString(1))}"}}"""
+      s"""{"data":{"label":"${jsonEscape(r.getString(2))}","source":"${jsonEscape(r.getString(0))}","target":"${jsonEscape(r.getString(1))}"}}"""
     }.mkString("[", ",", "]")
     val json = s"""{"elements":{"edges":$edgesJson,"nodes":$nodesJson}}"""
     Files.createDirectories(Paths.get(path).getParent)

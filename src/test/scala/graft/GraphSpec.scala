@@ -4,6 +4,7 @@ import org.apache.spark.TestBus
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.digest
 import graft.graph.{Bfs, Ppr, Subgraphs}
 
 class GraphSpec extends AnyFunSuite {
@@ -244,14 +245,6 @@ class GraphSpec extends AnyFunSuite {
   }
   val hubCands = Seq(("c0", 0L, 2L), ("c1", 0L, 7L), ("c2", 5L, 9L),
     ("c3", 2L, 4L), ("c4", 11L, 13L), ("c5", 1L, 120L))
-
-  /** Order-insensitive, multiplicity-keeping digest of a result. */
-  def digest(df: DataFrame): String = {
-    val rows = df.collect().map(_.toString).sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(rows.mkString("\n").getBytes("UTF-8"))
-    s"${rows.length}:" + md.take(8).map(b => f"${b & 0xff}%02x").mkString
-  }
 
   test("pinned rows on a seeded hub graph: both paths, binding caps") {
     // digests recorded before the graph layer was folded onto one BFS

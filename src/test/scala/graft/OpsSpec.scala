@@ -56,14 +56,17 @@ class OpsSpec extends AnyFunSuite {
     assert(rows.head == 4)
   }
 
+  /** Media rows over the tiny fixture pages: html bytes as the payload. */
+  def pageMedia = Multimodal.mediaFromDocs(spark, Fixtures.pages(spark, Fixtures.tiny).toDF()
+    .select(xxhash64(col("url")).as("doc_id"), col("html").as("text")))
+
   test("multimodal featurize: deterministic stub features, batch plumbing") {
-    val pages = Fixtures.pages(spark, Fixtures.tiny).toDF()
-    val media = Multimodal.mediaFromPages(spark, pages)
-    val feats = Multimodal.featurize(media, 4).collect()
+    val media = pageMedia
+    val feats = Multimodal.featurize(media).collect()
     assert(feats.length == 200)
     assert(feats.forall(_.features.length == Multimodal.featureDim))
-    // deterministic: same input -> same features
-    val again = Multimodal.featurize(media, 8).collect()
+    // deterministic: same rows, differently partitioned -> same features
+    val again = Multimodal.featurize(media.repartition(7)).collect()
     assert(feats.map(f => f.media_id -> f.features.toSeq).toMap ==
       again.map(f => f.media_id -> f.features.toSeq).toMap)
     // kinds assigned
@@ -74,9 +77,7 @@ class OpsSpec extends AnyFunSuite {
     // the declared multimodal contract: opaque binary -> feature vector
     // -> similarity search. Wire the stub featurizer's output straight
     // into ivfIndex/ivfTopK to prove the schema/typing seam is real.
-    val pages = Fixtures.pages(spark, Fixtures.tiny).toDF()
-    val media = Multimodal.mediaFromPages(spark, pages)
-    val emb = Multimodal.featurize(media, 4).toDF()
+    val emb = Multimodal.featurize(pageMedia).toDF()
       .select(col("media_id").as("id"),
         transform(col("features"), _.cast("double")).as("v"))
     val queries = emb.filter(col("id") < 5)
@@ -101,8 +102,9 @@ class OpsSpec extends AnyFunSuite {
         expected((y / 4) * 4 + (x / 4)) += (id * 31 + x * 7 + y * 13) % 256
       val png = Multimodal.encodePng(id, 16, 16)
       assert(Multimodal.isPng(png))
-      assert(Multimodal.decodeImageBlockSums(png, 4).toSeq == expected.toSeq,
-        s"codec round-trip diverged for id=$id")
+      val p = Multimodal.parsePng(png)
+      assert((p.width, p.height) == (16, 16))
+      assert(p.sums.toSeq == expected.toSeq, s"codec round-trip diverged for id=$id")
     }
   }
 
@@ -114,7 +116,7 @@ class OpsSpec extends AnyFunSuite {
       Multimodal.MediaRow(2L, "image", textBytes, 16, 16), // not PNG -> stub
       Multimodal.MediaRow(3L, "audio", png, 16, 16) // kind gate -> stub
     ).toDS()
-    val feats = Multimodal.featurize(media, 2).collect()
+    val feats = Multimodal.featurize(media).collect()
       .map(f => f.media_id -> f.features.toSeq).toMap
     assert(feats(1L) == Multimodal.decodeImage(png).toSeq)
     assert(feats(1L) != Multimodal.decodeStub(png).toSeq)
@@ -127,7 +129,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("corrupt image payload fails loud, never silently fake features") {
     val truncated = Multimodal.encodePng(1L, 16, 16).take(20)
-    intercept[Exception](Multimodal.decodeImageBlockSums(truncated, 4))
+    intercept[Exception](Multimodal.parsePng(truncated))
   }
 
   test("real WAV codec round-trip: window sums equal the closed-form sample formula") {
@@ -137,21 +139,22 @@ class OpsSpec extends AnyFunSuite {
         expected(j / 16) += (id * 131 + j * 17) % 65536 - 32768
       val wav = Multimodal.encodeWav(id, 256)
       assert(Multimodal.isWav(wav))
-      assert(Multimodal.decodeWavWindowSums(wav, 16).toSeq == expected.toSeq,
+      assert(Multimodal.parseWav(wav).sums.toSeq == expected.toSeq,
         s"audio codec round-trip diverged for id=$id")
     }
     // corrupt: RIFF magic but truncated body
     intercept[Exception](
-      Multimodal.decodeWavWindowSums(Multimodal.encodeWav(1L, 256).take(24), 16))
+      Multimodal.parseWav(Multimodal.encodeWav(1L, 256).take(24)))
   }
 
   test("real GIF codec round-trip: per-frame block sums equal the formula") {
     for (id <- Seq(0L, 1L, 499L, 123456L)) {
       val gif = Multimodal.encodeGif(id, 4, 16, 16)
       assert(Multimodal.isGif(gif))
-      val frames = Multimodal.decodeGifFrameSums(gif, 4)
-      assert(frames.map(_._1) == Seq(0, 1, 2, 3))
-      for ((f, sums) <- frames) {
+      val frames = Multimodal.parseGif(gif)
+      assert(frames.length == 4)
+      for ((Multimodal.Pooled(w, h, sums), f) <- frames.zipWithIndex) {
+        assert((w, h) == (16, 16))
         val expected = new Array[Long](16)
         for (y <- 0 until 16; x <- 0 until 16)
           expected((y / 4) * 4 + (x / 4)) += (id * 31 + f * 41 + x * 7 + y * 13) % 256
@@ -160,30 +163,7 @@ class OpsSpec extends AnyFunSuite {
       }
     }
     intercept[Exception](
-      Multimodal.decodeGifFrameSums("GIF89a-garbage".getBytes("UTF-8"), 4))
-  }
-
-  test("frame sampling is REAL for GIF payloads: frames come back as decodable PNGs") {
-    val gif = Multimodal.encodeGif(7L, 4, 16, 16)
-    val media = Seq(
-      Multimodal.MediaRow(1L, "video", gif, 16, 16),
-      Multimodal.MediaRow(2L, "video", "not a gif".getBytes("UTF-8"), 0, 0)
-    ).toDS()
-    val frames = Multimodal.sampleFrames(media, 3).collect()
-      .map(r => (r.getAs[Long]("media_id"), r.getAs[Int]("frame_idx"),
-        r.getAs[Array[Byte]]("frame_payload")))
-    val real = frames.filter(_._1 == 1L).sortBy(_._2)
-    assert(real.length == 3) // capped at nFrames of the 4 in the clip
-    for ((_, f, png) <- real) {
-      assert(Multimodal.isPng(png)) // re-encoded standalone frame
-      val expected = new Array[Long](16)
-      for (y <- 0 until 16; x <- 0 until 16)
-        expected((y / 4) * 4 + (x / 4)) += (7L * 31 + f * 41 + x * 7 + y * 13) % 256
-      assert(Multimodal.decodeImageBlockSums(png, 4).toSeq == expected.toSeq)
-    }
-    // non-GIF keeps the stub byte-slice shape
-    assert(frames.count(_._1 == 2L) == 3)
-    assert(frames.filter(_._1 == 2L).forall(r => !Multimodal.isPng(r._3)))
+      Multimodal.parseGif("GIF89a-garbage".getBytes("UTF-8")))
   }
 
   test("featurize dispatch: real audio decode for WAV rows, stub otherwise") {
@@ -195,7 +175,7 @@ class OpsSpec extends AnyFunSuite {
       Multimodal.MediaRow(3L, "video", wav, 256, 1), // magic gate -> stub
       Multimodal.MediaRow(4L, "video", gif, 16, 16) // real video decoder
     ).toDS()
-    val feats = Multimodal.featurize(media, 2).collect()
+    val feats = Multimodal.featurize(media).collect()
       .map(f => f.media_id -> f.features.toSeq).toMap
     assert(feats(1L) == Multimodal.decodeAudio(wav).toSeq)
     assert(feats(2L) == Multimodal.decodeStub("noise".getBytes("UTF-8")).toSeq)
@@ -249,35 +229,22 @@ class OpsSpec extends AnyFunSuite {
     assert(Multimodal.isWav(emptyWav))
     intercept[Exception](Multimodal.decodeAudio(emptyWav))
     val media = Seq(Multimodal.MediaRow(1L, "audio", emptyWav, 0, 1)).toDS()
-    val fallbacks = spark.sparkContext.longAccumulator("test.stubFallbacks")
-    val feats = Multimodal.featurize(media, 2, Some(fallbacks)).collect()
-    assert(feats.length == 1)
-    assert(feats.head.features.toSeq == Multimodal.decodeStub(emptyWav).toSeq)
-    // the degradation must be OBSERVABLE: the exception-path fallback
-    // increments the counter (declared stub dispatch must not — second
-    // run with a plain non-media payload stays at the same count)
-    assert(fallbacks.value == 1L)
-    val declared = Seq(Multimodal.MediaRow(2L, "image",
-      "not a png".getBytes("UTF-8"), 0, 0)).toDS()
-    Multimodal.featurize(declared, 2, Some(fallbacks)).collect()
-    assert(fallbacks.value == 1L)
-    // counter-less calls land on the SESSION-WIDE default counter —
-    // the one Bench reads into stub_fallback_rows
+    // the degradation must be OBSERVABLE on the SESSION-WIDE counter
+    // (the one Bench reads into stub_fallback_rows): the exception-path
+    // fallback increments it, declared stub dispatch must not
     val session = Multimodal.stubFallbackCounter(spark.sparkContext)
     val before = session.value
-    Multimodal.featurize(media, 2).collect()
+    val feats = Multimodal.featurize(media).collect()
+    assert(feats.length == 1)
+    assert(feats.head.features.toSeq == Multimodal.decodeStub(emptyWav).toSeq)
     assert(session.value == before + 1L,
-      s"default-counter wiring broken: $before -> ${session.value}")
+      s"exception-path fallback not counted: $before -> ${session.value}")
+    val declared = Seq(Multimodal.MediaRow(2L, "image",
+      "not a png".getBytes("UTF-8"), 0, 0)).toDS()
+    Multimodal.featurize(declared).collect()
+    assert(session.value == before + 1L, "declared stub dispatch was counted")
     assert(Multimodal.stubFallbackCounter(spark.sparkContext) eq session,
       "counter must be one per SparkContext, not one per call")
-  }
-
-  test("multimodal frame sampling: n typed frames per row") {
-    val pages = Fixtures.pages(spark, Fixtures.tiny).toDF().limit(5)
-    val media = Multimodal.mediaFromPages(spark, pages)
-    val frames = Multimodal.sampleFrames(media, 4)
-    assert(frames.count() == 20)
-    assert(frames.groupBy("media_id").count().select(max("count")).as[Long].head() == 4)
   }
 
   test("Md5MinHash == built-in split/shingle/md5/min form, incl. edge tokenization") {

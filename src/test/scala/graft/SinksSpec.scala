@@ -43,7 +43,9 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("cytoscape sink: sorted deterministic JSON; missing node is a hard error") {
-    val nodes = Seq(("A:1", "a one", "d1"), ("B:1", "b one", "d2"))
+    // control characters in a value are escaped, not altered
+    val described = "d1\tcol\nline \"q\" \\"
+    val nodes = Seq(("A:1", "a one", described), ("B:1", "b one", "d2"))
       .toDF("id", "name", "description")
     val edges = Seq(("A:1", "p1", "B:1")).toDF("subject", "predicate", "object")
     val dir = tmp()
@@ -51,6 +53,8 @@ class SinksSpec extends AnyFunSuite {
     val json = new String(Files.readAllBytes(Paths.get(s"$dir/graph.json")))
     assert(json.startsWith("""{"elements":{"edges":["""))
     assert(json.contains(""""id":"A:1""""))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.at("/elements/nodes/0/data/description").asText() == described)
     // missing node metadata
     val badEdges = Seq(("A:1", "p1", "C:9")).toDF("subject", "predicate", "object")
     assertThrows[IllegalStateException](

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One SparkSession for the whole forked test JVM. */
 object TestSpark {
@@ -15,5 +15,13 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Order-insensitive, multiplicity-keeping digest of a result. */
+  def digest(df: DataFrame): String = {
+    val rows = df.collect().map(_.toString).sorted
+    val md = java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.mkString("\n").getBytes("UTF-8"))
+    s"${rows.length}:" + md.take(8).map(b => f"${b & 0xff}%02x").mkString
   }
 }
