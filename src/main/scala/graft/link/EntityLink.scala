@@ -32,7 +32,7 @@ object EntityLink {
   /** One dictionary row per alias: candidates array of
     * struct(entity_id, prior, keywords).
     */
-  def dictByAlias(aliasDict: DataFrame, entityKeywords: DataFrame): DataFrame =
+  private def dictByAlias(aliasDict: DataFrame, entityKeywords: DataFrame): DataFrame =
     aliasDict
       .join(entityKeywords, "entity_id")
       .groupBy(col("alias"))
@@ -73,19 +73,11 @@ object EntityLink {
   def link(
       assertions: DataFrame,
       aliasDict: DataFrame,
-      entityKeywords: DataFrame): DataFrame =
-    // r8: checkpoint the (small) dictionary — linkWithDict broadcasts
-    // it twice (subject + object side) and each broadcast build would
-    // otherwise re-run the alias join + groupBy
-    linkWithDict(assertions,
-      dictByAlias(aliasDict, entityKeywords).localCheckpoint(true))
-
-  /** [[link]] against a PRE-BUILT [[dictByAlias]] frame — callers that
-    * link repeatedly (the streaming path re-executes the static join
-    * side every micro-batch) build + materialize the dictionary once
-    * and pass it here, so per-trigger work is the pure row map.
-    */
-  def linkWithDict(assertions: DataFrame, dict: DataFrame): DataFrame = {
+      entityKeywords: DataFrame): DataFrame = {
+    // r8: checkpoint the (small) dictionary — it is broadcast twice
+    // (subject + object side) and each broadcast build would otherwise
+    // re-run the alias join + groupBy
+    val dict = dictByAlias(aliasDict, entityKeywords).localCheckpoint(true)
     val sDict = broadcast(dict
       .withColumnRenamed("alias", "subj_alias").withColumnRenamed("cands", "s_cands"))
     val oDict = broadcast(dict

@@ -1155,9 +1155,11 @@ object DataQueries {
 
     QueryDef("q78_multimodal_ann",
       // End-to-end multimodal composition: documents -> opaque binary
-      // media rows -> featurize (the declared-stub decoder — a
-      // deterministic fake; the container ships no codecs) -> IVF ANN
-      // top-3 over the extracted features. The feature vectors exist
+      // media rows -> featurize -> IVF ANN top-3 over the extracted
+      // features. The payloads are document text cast to binary, so no
+      // row sniffs as PNG/WAV/GIF and every row takes the declared stub
+      // (a deterministic fake) by design; q83-q85 carry the real
+      // PNG/WAV/GIF codecs under the oracle. The feature vectors exist
       // only Spark-side, so the pair semi-oracle (q49/q69) is extended:
       // each pair is emitted WITH its two vectors (comma-joined strings
       // — Java shortest-round-trip double repr, parsed back exactly by
@@ -1292,8 +1294,7 @@ object DataQueries {
 
     // ------------------------------------------------ time windows
     QueryDef("q44_tumbling_window",
-      // hourly tumbling aggregation (batch form; streaming variant is
-      // covered in StreamingSpec)
+      // hourly tumbling aggregation
       (s, d) => table(s, d, "events")
         .groupBy(date_trunc("hour", col("ts")).cast("timestamp").cast("long")
           .as("hour_epoch"), col("event_type"))
@@ -1320,9 +1321,20 @@ object DataQueries {
       // TRUE gap sessionization (q45 is per-user lifetime stats): native
       // session_window, 8h gap — a new session starts when the
       // inter-event gap reaches the threshold, s_end = last event + gap.
-      // Streaming forms (same semantics) proven equal in StreamingSpec.
-      (s, d) => graft.streaming.Sessions.gapSessions(
-        table(s, d, "events"), "8 hours"),
+      (s, d) => table(s, d, "events")
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .groupBy(col("user_id"), session_window(col("ts"), "8 hours"))
+        // size(collect_set) rather than countDistinct: it aggregates
+        // partially before the shuffle and merges sessions in one step
+        // (MergingSessions), where a distinct aggregate shuffles every
+        // raw event and stacks two more aggregation levels
+        .agg(count(lit(1)).as("n_events"),
+          size(collect_set("event_type")).cast("long").as("n_types"),
+          round(sum("value"), 4).as("total"))
+        .select(col("user_id"),
+          col("session_window.start").cast("long").as("s_start"),
+          col("session_window.end").cast("long").as("s_end"),
+          col("n_events"), col("n_types"), col("total")),
       // oracle: lag + cumulative-sum session ids (deterministic; no
       // (user_id, ts) duplicates in the fixture so ORDER BY ts is total)
       Some("""WITH o AS (

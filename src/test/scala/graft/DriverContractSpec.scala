@@ -35,16 +35,21 @@ class DriverContractSpec extends AnyFunSuite {
     }
   }
 
-  test("pinned q78/q83/q84/q85 answers at sf0.001") {
-    // digests recorded before the multimodal layer was folded onto one
-    // decode operator; each full result is written, so every output
-    // column is computed
+  test("pinned answers at sf0.001") {
+    // q78/q83-q85 digests recorded before the multimodal layer was
+    // folded onto one decode operator, the time-window family (q44,
+    // q45, q76) before q76's sessionizer moved into the registry; the
+    // DuckDB crosscheck passed each of them there. Each full result is
+    // written, so every output column is computed
     val expected = Map(
+      "q44_tumbling_window" -> "868:9322a16145d35fb3",
+      "q45_sessionize" -> "15:13912517a5f27582",
+      "q76_gap_sessions" -> "492:c754fe2042fac3b8",
       "q78_multimodal_ann" -> "30:acfa7ca8bb01c7c4",
       "q83_image_decode" -> "500:ebf59dfc93478052",
       "q84_audio_decode" -> "500:daab32a6b4383c78",
       "q85_video_frames" -> "2000:41517862a8e57036")
-    val dir = java.nio.file.Files.createTempDirectory("graft-mm").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft-pinned").toString
     val got = expected.keys.map { q =>
       SparkEntry.queries(q)(spark, sf).write.parquet(s"$dir/$q")
       q -> TestSpark.digest(spark.read.parquet(s"$dir/$q"))

@@ -93,4 +93,13 @@ class TablesSpec extends AnyFunSuite {
     val file = "\"file\":\"a=\\d/b=[pq]/part-[^\"]+\\.parquet\",\"rows\":(\\d+)".r
     assert(lineage.map(l => file.findFirstMatchIn(l).get.group(1).toLong).sum == 3)
   }
+
+  test("TableFormat.jsonEscape: quote/backslash/control-safe, identity otherwise") {
+    assert(TableFormat.jsonEscape("k=v;x.y=2") == "k=v;x.y=2")
+    assert(TableFormat.jsonEscape("a\"b\\c") == "a\\\"b\\\\c")
+    assert(TableFormat.jsonEscape("a\nb\tc") == "a\\u000ab\\u0009c")
+    // the escaped value must parse back as legal JSON string content
+    val v = TableFormat.jsonEscape("he said \"x=\\1\"\n")
+    assert(!v.contains("\n") && !v.matches(""".*(?<!\\)".*"""))
+  }
 }
