@@ -52,28 +52,24 @@ object SimHash {
 
   /** Banded near-duplicate pairs over 32-bit fingerprints
     * (Manku et al., WWW'07): split each fingerprint into 4 byte bands,
-    * equi-join on (band_idx, band_value), Hamming-verify only bucket
-    * collisions. With 4 bands, any pair within Hamming distance 3 shares
-    * at least one untouched band (pigeonhole), so the result is EXACTLY
-    * the all-pairs result for maxHamming <= 3 — with O(collisions)
-    * comparisons instead of O(N^2). Skewed buckets split under AQE.
+    * pair on shared (band, value) through [[graft.similarity.Banding]]
+    * (each pair once, in its first shared band), Hamming-verify only
+    * bucket collisions. With 4 bands, any pair within Hamming distance 3
+    * shares at least one untouched band (pigeonhole), so the result is
+    * EXACTLY the all-pairs result for maxHamming <= 3 — with
+    * O(collisions) comparisons instead of O(N^2). Skewed buckets split
+    * under AQE.
     *
-    * fps: (id, sh). Returns (id1, id2, hamming), id1 < id2.
+    * fps: (id, sh), ids unique. Returns (id1, id2, hamming), id1 < id2.
     */
   def bandedPairs(fps: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3,
       s"4 byte-bands guarantee completeness only for hamming <= 3, got $maxHamming")
-    val idCol = fps.columns(0)
-    val banded = fps.select(col(idCol).as("id"), col("sh"),
-      explode(array((0 until 4).map(bd => struct(
-        lit(bd).as("bd"),
-        shiftright(col("sh"), 8 * bd).bitwiseAND(lit(255L)).as("bv"))): _*)).as("band"))
-      .select(col("id"), col("sh"), col("band.bd").as("bd"), col("band.bv").as("bv"))
-    val right = banded.select(col("id").as("id2"), col("sh").as("sh2"),
-      col("bd"), col("bv"))
-    banded.join(right, Seq("bd", "bv"))
-      .filter(col("id") < col("id2"))
-      .select(col("id").as("id1"), col("id2"), col("sh"), col("sh2")).distinct()
+    val bytes = (0 until 4).map(bd => shiftright(col("sh"), 8 * bd).bitwiseAND(lit(255L)))
+    val banded = fps.select(col(fps.columns(0)).as("id1"), col("sh"), array(bytes: _*).as("keys"))
+    val right = banded.select(col("id1").as("id2"), col("sh").as("sh2"), col("keys"))
+    graft.similarity.Banding.pairs(banded, right, "keys", bands = 4)
+      .filter(col("id1") < col("id2"))
       .withColumn("hamming", hamming(col("sh"), col("sh2")))
       .filter(col("hamming") <= maxHamming)
       .select("id1", "id2", "hamming")

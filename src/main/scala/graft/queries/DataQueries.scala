@@ -700,24 +700,19 @@ object DataQueries {
         // shingle lambdas, no exploded shingle rows, and a fully narrow
         // plan until banding (unbounded over the whole table since
         // round 3). NULL = fewer than 3 tokens (== the oracle's
-        // len(t) >= 3 filter).
-        // r8: the band frame below is consumed FOUR times (two union
-        // branches x two self-join sides); without materialization each
-        // consumer re-ran Md5MinHash — one MD5 per 3-shingle per doc —
-        // over the whole corpus. Checkpoint the narrow (doc_id, s0, s1)
-        // signatures (text never crosses) so the hashing runs once.
+        // len(t) >= 3 filter). The signature array [s0, s1] is the
+        // band keys. Checkpointed: both self-join sides read it, and
+        // without it each side re-ran Md5MinHash — one MD5 per
+        // 3-shingle per doc — over the whole corpus.
         val sig = table(s, d, "documents")
           .select(col("doc_id"),
-            graft.functions.Md5MinHash.of(col("text"), n = 3, k = 2).as("sg"))
-          .filter(col("sg").isNotNull)
-          .select(col("doc_id"), element_at(col("sg"), 1).as("s0"),
-            element_at(col("sg"), 2).as("s1"))
+            graft.functions.Md5MinHash.of(col("text"), n = 3, k = 2).as("keys"))
+          .filter(col("keys").isNotNull)
           .localCheckpoint(true)
-        val bands = sig.select(col("doc_id"), concat(lit("0:"), col("s0")).as("band"))
-          .unionAll(sig.select(col("doc_id"), concat(lit("1:"), col("s1")).as("band")))
-        val b2 = bands.withColumnRenamed("doc_id", "id2")
-        bands.join(b2, Seq("band")).filter(col("doc_id") < col("id2"))
-          .select(col("doc_id").as("id1"), col("id2")).distinct()
+        graft.similarity.Banding.pairs(sig,
+          sig.select(col("doc_id").as("id2"), col("keys")), "keys", bands = 2)
+          .filter(col("doc_id") < col("id2"))
+          .select(col("doc_id").as("id1"), col("id2"))
       },
       Some(s"""WITH docs AS (SELECT doc_id, string_split(text, ' ') AS t
               |             FROM documents),
@@ -758,24 +753,19 @@ object DataQueries {
         // md5'd) once for both instead of once per consumer
         val sig = table(s, d, "documents")
           .select(col("doc_id"), md5(col("text")).as("fp"),
-            graft.functions.Md5MinHash.of(col("text"), n = 3, k = 2).as("sg"))
-          .filter(col("sg").isNotNull)
-          .select(col("doc_id"), col("fp"), element_at(col("sg"), 1).as("s0"),
-            element_at(col("sg"), 2).as("s1"))
+            graft.functions.Md5MinHash.of(col("text"), n = 3, k = 2).as("keys"))
+          .filter(col("keys").isNotNull)
           .localCheckpoint(true)
         // one row per distinct content; checkpointed — feeds the band
-        // self-join and the attachment join (s0/s1 are class-constant,
-        // min() just picks the value)
+        // self-join and the attachment join (the signature array
+        // [s0, s1] is class-constant, min() just picks the value)
         val cls = sig.groupBy("fp").agg(min("doc_id").as("rep_id"),
-          min("s0").as("s0"), min("s1").as("s1"))
+          min("keys").as("keys"))
           .localCheckpoint(true)
-        val bands = cls.select(col("rep_id").as("doc_id"),
-          concat(lit("0:"), col("s0")).as("band"))
-          .unionAll(cls.select(col("rep_id").as("doc_id"),
-            concat(lit("1:"), col("s1")).as("band")))
-        val pairs = bands.join(bands.withColumnRenamed("doc_id", "id2"), Seq("band"))
-          .filter(col("doc_id") < col("id2"))
-          .select(col("doc_id").as("src"), col("id2").as("dst")).distinct()
+        val reps = cls.select(col("rep_id").as("src"), col("keys"))
+        val pairs = graft.similarity.Banding.pairs(reps,
+          reps.withColumnRenamed("src", "dst"), "keys", bands = 2)
+          .filter(col("src") < col("dst"))
         val ccRep = graft.canon.ConnectedComponents.run(pairs)
           .select(col("id").as("rep_id"), col("component"))
         // doc -> its class rep (absent for null-signature docs), then

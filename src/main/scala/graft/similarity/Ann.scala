@@ -27,19 +27,11 @@ object Ann {
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorOps.cosine(a, b)
 
-  /** (id, v, tbl, bucket) rows — one per hash table. All `tables`
-    * bucket ids are computed by one native [[graft.functions.LshBuckets]]
-    * pass per row (the HOF form priced tables x planes x dim interpreted
-    * lambda evals per row), then posexplode'd into per-table rows.
-    */
-  def signatures(emb: DataFrame, idCol: String, vCol: String,
-      tables: Int, planes: Int): DataFrame =
-    emb.select(col(idCol), col(vCol),
-      posexplode(graft.functions.VectorOps.lshBuckets(col(vCol), tables, planes)))
-      .select(col(idCol), col(vCol), col("pos").as("tbl"), col("col").as("bucket"))
-
   /** LSH-bucketed top-k: queries x corpus restricted to shared buckets,
-    * exact cosine rerank, deterministic tiebreak.
+    * exact cosine rerank, deterministic tiebreak. All `tables` bucket ids
+    * of a vector come from one native [[graft.functions.LshBuckets]] pass
+    * per row and are the band keys of [[Banding.pairs]], so a pair that
+    * shares buckets in several tables is a candidate once.
     *
     * `multiprobe` > 0 additionally probes, per table, the `multiprobe`
     * buckets at Hamming distance 1 from the query's bucket (one
@@ -69,30 +61,25 @@ object Ann {
     // meaningless, and a fixed default must not break explicit
     // shorter-signature calls (planes < 6)
     val mp = math.min(multiprobe, planes)
-    val corpusSig = signatures(emb, "id", "v", tables, planes)
-    val exactSig = signatures(queries, "qid", "qv", tables, planes)
-    val querySig =
-      if (mp == 0) exactSig
-      else exactSig.select(col("qid"), col("qv"), col("tbl"),
-        explode(array(col("bucket") +:
-          (0 until mp).map(b =>
-            col("bucket").bitwiseXOR(lit(1 << b))): _*)).as("bucket"))
-    val cands = querySig.join(corpusSig, Seq("tbl", "bucket"))
-      .filter(col("qid") =!= col("id"))
-      .select("qid", "qv", "id", "v")
-      .distinct() // a pair may share buckets in several tables
-    cands
-      .withColumn("cos", cosine(col("qv"), col("v")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("id").as("nn_id"), col("cos"), col("rn"))
+    def sig(df: DataFrame, v: String) = df.withColumn("keys",
+      graft.functions.VectorOps.lshBuckets(col(v), tables, planes))
+    // table t matches when xor(query bucket, corpus bucket) is 0 or one
+    // of the mp probed bits; the probes of one bucket are distinct
+    val probes = identity[Column] _ +: (0 until mp).map(b =>
+      (c: Column) => c.bitwiseXOR(lit(1 << b)))
+    rerank(Banding.pairs(sig(queries, "qv"), sig(emb, "v"), "keys", tables, probes), k)
   }
 
   /** Brute-force cosine top-k (exact baseline). */
   def bruteTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    queries.crossJoin(emb)
-      .filter(col("qid") =!= col("id"))
+    rerank(queries.crossJoin(emb), k)
+
+  /** The shared top-k tail: candidate (qid, qv, id, v) rows minus
+    * self-matches, exact cosine, the k best per query (ties by id).
+    * Returns (qid, nn_id, cos, rn).
+    */
+  private def rerank(cands: DataFrame, k: Int): DataFrame =
+    cands.filter(col("qid") =!= col("id"))
       .withColumn("cos", cosine(col("qv"), col("v")))
       .withColumn("rn", row_number().over(
         Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))))
@@ -239,12 +226,6 @@ object Ann {
       explode(slice(
         graft.functions.VectorOps.centroidRanks(col("qv"), src),
         1, nprobe)).as("cid"))
-    probes.join(index, Seq("cid"))
-      .filter(col("qid") =!= col("id"))
-      .withColumn("cos", cosine(col("qv"), col("v")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("id").as("nn_id"), col("cos"), col("rn"))
+    rerank(probes.join(index, Seq("cid")), k)
   }
 }

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.Fixtures
 import graft.functions.{Md5SimHash, SimHash}
 import graft.multimodal.Multimodal
+import graft.similarity.Banding
 
 class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -37,17 +39,51 @@ class OpsSpec extends AnyFunSuite {
       (i, words.mkString(" "))
     }.toDF("doc_id", "text")
     val fp = SimHash.fingerprintsPortable(docs, "doc_id", split(col("text"), " "))
+    // sorted Seqs, not Sets: a pair emitted twice must show
     val banded = SimHash.bandedPairs(fp, maxHamming = 3)
-      .as[(Long, Long, Int)].collect().toSet
+      .as[(Long, Long, Int)].collect().toSeq.sorted
     val right = fp.select(col("doc_id").as("id2"), col("sh").as("sh2"))
     val brute = fp.crossJoin(right).filter(col("doc_id") < col("id2"))
       .withColumn("hamming", SimHash.hamming(col("sh"), col("sh2")))
       .filter(col("hamming") <= 3)
       .select(col("doc_id"), col("id2"), col("hamming"))
-      .as[(Long, Long, Int)].collect().toSet
+      .as[(Long, Long, Int)].collect().toSeq.sorted
     assert(banded == brute)
     assert(brute.nonEmpty, "fixture must actually produce near-dup pairs")
     assertThrows[IllegalArgumentException](SimHash.bandedPairs(fp, maxHamming = 4))
+  }
+
+  test("Banding.pairs == band join + distinct, as a multiset") {
+    // seeded keys from a small alphabet, so pairs share 1, 2 or all 3
+    // bands; the reference emits a pair once per shared band and then
+    // de-duplicates, the operator must emit it once without that
+    val rnd = new scala.util.Random(11)
+    val rows = (1L to 60L).map(i => (i, Seq.fill(3)(rnd.nextInt(6).toLong)))
+    val shared = (for ((a, ka) <- rows; (b, kb) <- rows if a < b)
+      yield ka.zip(kb).count(p => p._1 == p._2)).toSet
+    assert(Set(1, 2, 3).subsetOf(shared), shared)
+    val left = rows.toDF("id", "keys")
+    val right = left.select(col("id").as("id2"), col("keys"))
+    // probes: the key itself and bits 0 and 1 flipped; bit 2 is not
+    // probed, so a band whose keys differ only in bit 2 must not match
+    val xors: Seq[Column => Column] = Seq(identity, _.bitwiseXOR(lit(1L)), _.bitwiseXOR(lit(2L)))
+    val xorSeen = (for ((_, ka) <- rows; (_, kb) <- rows; t <- 0 until 3)
+      yield ka(t) ^ kb(t)).toSet
+    assert(Set(0L, 1L, 2L, 4L).subsetOf(xorSeen), xorSeen)
+    def exploded(df: DataFrame, ps: Seq[Column => Column]) =
+      df.select(col("*"), explode(array((for (t <- 0 until 3; p <- ps)
+        yield struct(lit(t).as("band"), p(col("keys")(t)).as("key"))): _*)).as("bk"))
+        .select(df.columns.filter(_ != "keys").map(col) :+ col("bk.*"): _*)
+    for (ps <- Seq(Seq(identity[Column] _), xors)) {
+      val got = Banding.pairs(left, right, "keys", bands = 3, ps)
+        .filter(col("id") =!= col("id2"))
+        .as[(Long, Long)].collect().toSeq.sorted
+      val want = exploded(left, ps).join(exploded(right, Seq(identity)), Seq("band", "key"))
+        .filter(col("id") =!= col("id2")).select("id", "id2").distinct()
+        .as[(Long, Long)].collect().toSeq.sorted
+      assert(got == want)
+      assert(got.nonEmpty && got.size < rows.size * (rows.size - 1))
+    }
   }
 
   test("simhash hamming column matches JVM bitCount") {

@@ -79,6 +79,11 @@ class PlanSpec extends AnyFunSuite {
     // banded SimHash (q48) plans with NO cartesian product
     val q48 = planOf(SparkEntry.queries("q48_simhash_neardup")(spark, sf))
     assert(!q48.contains("CartesianProduct"), s"q48 must be banded, not all-pairs:\n$q48")
+    // Banding.pairs emits each pair once: no pair-level distinct
+    // (q48 and q40 have no other aggregate)
+    val q40 = planOf(SparkEntry.queries("q40_minhash_lsh")(spark, sf))
+    for (p <- Seq(q48, q40))
+      assert(!p.contains("HashAggregate"), s"pair set is aggregated:\n$p")
   }
 
   test("Ids.dictionary: distributed ranking, no single-partition global sort") {
