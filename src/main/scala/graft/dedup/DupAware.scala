@@ -76,11 +76,9 @@ object DupAware {
     require(n >= 1, s"shingle size must be positive, got $n")
     val toks = docs.select(col(idCol), isBench.as("__bench"),
       split(col(textCol), " ").as("t"))
-    val shingle = transform(sequence(lit(0), size(col("t")) - n), i =>
-      concat_ws(" ", (1 to n).map(j => element_at(col("t"), i + j)): _*))
     val withSh = toks.filter(size(col("t")) >= n)
       .select(col(idCol), col("__bench"),
-        explode(array_distinct(shingle)).as("sh"))
+        explode(array_distinct(NgramJaccard.shingles(col("t"), n))).as("sh"))
     val bench = withSh.filter(col("__bench")).select(col("sh")).distinct()
     val overlap = withSh.filter(!col("__bench"))
       .join(bench, Seq("sh"), "left_semi")

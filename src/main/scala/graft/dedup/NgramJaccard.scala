@@ -18,10 +18,15 @@ object NgramJaccard {
   /** whitespace tokens of `text` */
   private def toks: Column = split(col("text"), " ")
 
-  /** 3-gram word shingles (1-based element_at; sequence inclusive). */
-  private def shingles(t: Column): Column =
-    transform(sequence(lit(0), size(t) - 3), i =>
-      concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2), element_at(t, i + 3)))
+  /** n-gram word shingles of the token array `t` (1-based element_at;
+    * sequence(0, size - n) is INCLUSIVE, so it yields size - n + 1
+    * shingles, matching DuckDB range(len - n + 1)). Callers keep
+    * size(t) >= n: on a shorter array the sequence counts down and
+    * element_at(t, 0) throws.
+    */
+  def shingles(t: Column, n: Int): Column =
+    transform(sequence(lit(0), size(t) - n), i =>
+      concat_ws(" ", (1 to n).map(j => element_at(t, i + j)): _*))
 
   /** (id1, id2, inter, jaccard) for every candidate pair at or above
     * `minJaccard`. docs needs (doc_id, text); pairs are emitted once
@@ -36,7 +41,7 @@ object NgramJaccard {
       .map(b => docs.filter(col("doc_id") < b)).getOrElse(docs)
     val sh = bounded
       .withColumn("t", toks).filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(shingles(col("t")))).as("sh"))
+      .select(col("doc_id"), explode(array_distinct(shingles(col("t"), 3))).as("sh"))
     val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = sh.join(sh.select(col("doc_id").as("id2"), col("sh")), Seq("sh"))
       .filter(col("doc_id") < col("id2"))

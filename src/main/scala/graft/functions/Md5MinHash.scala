@@ -142,8 +142,8 @@ object Md5MinHash {
 /** Engine-portable 32-bit SimHash straight from text: bit b of token t
   * = (hex char b of md5(t)) >= '8' (i.e. nibble b's top bit), fingerprint
   * bit = strict-majority vote over all token occurrences — bit-identical
-  * to [[SimHash.fingerprintsPortable]]'s relational form and its DuckDB
-  * oracle, in one compiled loop per row: one MD5 per token, votes from
+  * to the relational form in OpsSpec and to the DuckDB oracle of q48,
+  * in one compiled loop per row: one MD5 per token, votes from
   * digest nibbles, no exploded token rows and no 32-vote aggregation
   * shuffle. Tokenization matches `split(text, ' ')` (empty tokens kept,
   * each occurrence votes). Every text has >= 1 token (split never

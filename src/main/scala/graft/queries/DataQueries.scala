@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.dedup.NgramJaccard.shingles
 import graft.multimodal.Multimodal
 import graft.queries.Q._
 
@@ -17,14 +18,6 @@ object DataQueries {
 
   /** whitespace tokens */
   private def toks: Column = split(col("text"), " ")
-
-  /** 3-gram word shingles of the token array (1-based element_at;
-    * sequence(0, n) is INCLUSIVE so n = size-3 yields size-2 shingles,
-    * matching DuckDB range(len-2)).
-    */
-  private def shingles(t: Column): Column =
-    transform(sequence(lit(0), size(t) - 3), i =>
-      concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2), element_at(t, i + 3)))
 
   private val shinglesSqlDuck =
     "list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])"
@@ -362,7 +355,7 @@ object DataQueries {
           .withColumn("n_stop",
             expr("size(filter(t, x -> x in ('the','a','of','and')))").cast("long"))
           .withColumn("sh",
-            when(size(col("t")) >= 3, shingles(col("t"))))
+            when(size(col("t")) >= 3, shingles(col("t"), 3)))
           .withColumn("mean_len_micro", expr(
             "CASE WHEN n_tokens = 0 THEN NULL ELSE (sum_len * 1000000) DIV n_tokens END"))
           .withColumn("stop_micro", expr(
@@ -629,7 +622,7 @@ object DataQueries {
       // collection ops in both engines (no interpreted lambdas).
       (s, d) => table(s, d, "documents")
         .withColumn("t", toks).filter(size(col("t")) >= 3)
-        .withColumn("sh", shingles(col("t")))
+        .withColumn("sh", shingles(col("t"), 3))
         .select(col("doc_id"),
           size(col("sh")).as("n_grams"),
           size(array_distinct(col("sh"))).as("n_distinct"),
@@ -937,10 +930,10 @@ object DataQueries {
       // and it gains the full rows+schema+hash oracle.
       (s, d) => {
         // native Md5SimHash: one compiled loop per doc (one MD5 per
-        // token, votes from digest nibbles) — bit-identical to
-        // SimHash.fingerprintsPortable's relational form (OpsSpec
-        // parity test) and to the oracle SQL, with no exploded token
-        // rows and no 32-vote aggregation shuffle
+        // token, votes from digest nibbles) — bit-identical to the
+        // relational form in OpsSpec's parity tests and to the oracle
+        // SQL, with no exploded token rows and no 32-vote aggregation
+        // shuffle
         // r8: the band self-join consumes fp TWICE (left + right side),
         // and without materialization each side re-runs Md5SimHash —
         // one MD5 per token per doc — over the whole corpus. Checkpoint

@@ -13,6 +13,28 @@ class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Relational 32-bit simhash, the reference the native Md5SimHash is
+    * checked against: bit b of token t = (hex char b of md5(t)) >= '8';
+    * fingerprint bit = strict-majority vote over tokens, each of the 32
+    * votes its own `sum` over the exploded token rows. The per-bit
+    * predicate is literally the q48 oracle's `substring(h, b+1, 1) >= '8'`.
+    * Returns (idCol, sh: long).
+    */
+  private def fingerprintsPortable(docs: DataFrame, idCol: String,
+      tokens: Column): DataFrame = {
+    val tok = docs.select(col(idCol), explode(tokens).as("tk"))
+      .select(col(idCol), md5(col("tk")).as("h"))
+    val voteCols = (0 until 32).map { b =>
+      sum(when(substring(col("h"), b + 1, 1) >= "8", 1).otherwise(-1)).as(s"__v$b")
+    }
+    tok.groupBy(col(idCol))
+      .agg(voteCols.head, voteCols.tail: _*)
+      .select(col(idCol),
+        (0 until 32).map { b =>
+          when(col(s"__v$b") > 0, lit(1L << b)).otherwise(0L)
+        }.reduce(_ + _).as("sh"))
+  }
+
   test("simhash: identical texts collide, perturbed texts are near") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"),
@@ -38,7 +60,7 @@ class OpsSpec extends AnyFunSuite {
       val words = base.map(w => if (i % 7 == 0) w else s"$w${i % 11}")
       (i, words.mkString(" "))
     }.toDF("doc_id", "text")
-    val fp = SimHash.fingerprintsPortable(docs, "doc_id", split(col("text"), " "))
+    val fp = fingerprintsPortable(docs, "doc_id", split(col("text"), " "))
     // sorted Seqs, not Sets: a pair emitted twice must show
     val banded = SimHash.bandedPairs(fp, maxHamming = 3)
       .as[(Long, Long, Int)].collect().toSeq.sorted
@@ -331,7 +353,7 @@ class OpsSpec extends AnyFunSuite {
     val native = texts.select(col("doc_id"),
       graft.functions.Md5SimHash.of(col("text")).as("sh"))
       .as[(Long, Long)].collect().sortBy(_._1)
-    val rel = SimHash.fingerprintsPortable(texts, "doc_id", split(col("text"), " "))
+    val rel = fingerprintsPortable(texts, "doc_id", split(col("text"), " "))
       .as[(Long, Long)].collect().sortBy(_._1)
     assert(native.toSeq == rel.toSeq)
   }
@@ -360,7 +382,7 @@ class OpsSpec extends AnyFunSuite {
       .select(col("id"), element_at(col("sg"), 1), element_at(col("sg"), 2))
       .as[(Long, String, String)].collect().sortBy(_._1)
     assert(natMin.toSeq == refMin.toSeq)
-    val refSim = SimHash.fingerprintsPortable(texts, "id", split(col("text"), " "))
+    val refSim = fingerprintsPortable(texts, "id", split(col("text"), " "))
       .as[(Long, Long)].collect().sortBy(_._1)
     val natSim = texts.select(col("id"),
       graft.functions.Md5SimHash.of(col("text")).as("sh"))
