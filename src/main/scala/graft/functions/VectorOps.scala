@@ -46,20 +46,15 @@ object VectorOps {
       LshBuckets(org.apache.spark.sql.GraftExpressionBridge.expression(v),
         tables, planes))
 
-  /** Centroid ids (0-based row indices of `centroids`) ordered by
+  /** Centroid ids (0-based row indices of the matrix) ordered by
     * descending cosine(v, centroid), ties to the smaller cid. The
     * centroid matrix rides inside the expression node, so nearest-
     * centroid assignment (element 1) and nprobe selection (slice) are
-    * narrow per-row computations with no join.
-    */
-  def centroidRanks(v: Column, centroids: Array[Array[Double]]): Column =
-    centroidRanks(v, InlineCentroids(centroids))
-
-  /** As above with an explicit matrix source — pass
+    * narrow per-row computations with no join. Pass
     * [[BroadcastCentroids]] when c is large (the inline matrix is
     * serialized into EVERY task binary; a broadcast ships once per
     * executor over torrent and the task closure carries only the
-    * handle). [[graft.similarity.Ann]] picks automatically by c.
+    * handle). [[graft.similarity.Ann]] picks by matrix size.
     */
   def centroidRanks(v: Column, centroids: CentroidSource): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(

@@ -332,19 +332,4 @@ object Subgraphs {
         LabeledNode(eid, n, dh(n), dt(n))
       }
   }
-
-  /** Assemble per-candidate subgraph records: sorted node list + labels
-    * (the D4 shape of SURVEY.md §1.1, LMDB record -> table row).
-    */
-  def records(labeled: DataFrame): DataFrame =
-    labeled
-      .groupBy(col("edge_id"))
-      .agg(
-        sort_array(collect_list(struct(col("node"), col("d_head"), col("d_tail"))))
-          .as("members"))
-      .select(
-        col("edge_id"),
-        transform(col("members"), m => m("node")).as("nodes"),
-        transform(col("members"), m => array(m("d_head"), m("d_tail"))).as("n_labels"),
-        size(col("members")).as("subgraph_size"))
 }

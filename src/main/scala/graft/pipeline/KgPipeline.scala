@@ -52,10 +52,8 @@ object KgPipeline {
       spark: SparkSession,
       cfg: FixtureConfig,
       tables: Option[TableFormat] = None,
-      runId: String = "r0",
-      threshold: Double = AssertionPruning.defaultThreshold,
-      reviewN: Int = 10): PipelineResult =
-    runWith(spark, fixtureInputs(spark, cfg), tables, runId, threshold, reviewN,
+      runId: String = "r0"): PipelineResult =
+    runWith(spark, fixtureInputs(spark, cfg), tables, runId,
       inputId = s"fixture-${cfg.nPages}-${cfg.nEntities}-${cfg.seed}")
 
   /** Run the full pipeline over explicit inputs.
@@ -72,8 +70,6 @@ object KgPipeline {
       inputs: KgInputs,
       tables: Option[TableFormat] = None,
       runId: String = "r0",
-      threshold: Double = AssertionPruning.defaultThreshold,
-      reviewN: Int = 10,
       dedup: String = "exact",
       inputId: String = "",
       degJoin: String = "auto"): PipelineResult = {
@@ -169,6 +165,8 @@ object KgPipeline {
 
     // ---- prune: assertion pruning (threshold + review queue)
     // (materialized in-memory: prune, review and output all read it)
+    val threshold = AssertionPruning.defaultThreshold
+    val reviewN = 10
     val (scored, scoredSnap) = stage("scored", canonTriplesSnap, materialize = true) {
       AssertionPruning.score(canonical, ontology, degJoin = degJoin)
     }

@@ -68,7 +68,6 @@ object AssertionPruning {
   def score(
       linked: DataFrame,
       ontology: Dataset[OntologyRule],
-      saltBuckets: Int = 8,
       degJoin: String = "auto"): DataFrame = {
 
     // materialized once: two consumers (cardinality window chain and the
@@ -109,7 +108,7 @@ object AssertionPruning {
     //    paid an extra count() here per call.
     //  - "broadcast": force the broadcast (planning-time hint).
     //  - "salted": the explicitly salted sort-merge join, spreading hub
-    //    entities (~40% of edges) over saltBuckets reducers — the
+    //    entities (~40% of edges) over 8 reducers — the
     //    north-star discipline when the degree table outgrows broadcast.
     val deg = degreeTable(ev)
       .select(col("entity").as("subject"), col("degree").as("subj_degree"))
@@ -120,7 +119,7 @@ object AssertionPruning {
         big = typed,
         small = deg,
         keys = Seq("subject"),
-        saltBuckets = saltBuckets,
+        saltBuckets = 8,
         bigRowIdentity = Seq(col("subject"), col("predicate"), col("object")))
       case other => throw new IllegalArgumentException(s"unknown degJoin: $other")
     }

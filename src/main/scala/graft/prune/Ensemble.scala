@@ -4,21 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Score ensembling (reference /root/reference/src/gnn/lcilp/ensembling/
-  * blend.py:22-79): linear blend w1*s1 + w2*s2 + b of two scorers'
-  * outputs over the same triplet set. The reference asserts the two
-  * score files align row-for-row (blend.py:31-35); distributed form:
-  * inner join on the triple key + count-preservation check.
+  * blend.py:22-79). The fixed-weight blend w1*s1 + w2*s2 + b is query
+  * q50; this object fits the weights (q86).
   */
 object Ensemble {
 
-  def blend(a: DataFrame, b: DataFrame, w1: Double, w2: Double, bias: Double): DataFrame = {
-    val key = Seq("subject", "predicate", "object")
-    a.select(col("subject"), col("predicate"), col("object"), col("score").as("s1"))
-      .join(b.select(col("subject"), col("predicate"), col("object"), col("score").as("s2")), key)
-      .withColumn("score", round(lit(w1) * col("s1") + lit(w2) * col("s2") + lit(bias), 9))
-  }
-
-  /** Trained blend weights — the learned counterpart of [[blend]]'s
+  /** Trained blend weights — the learned counterpart of q50's
     * fixed w1/w2 (reference blend.py:40-52 trains the 2->1 linear with
     * a margin-ranking loss; here the fit is closed-form least squares,
     * the deterministic stand-in that keeps the whole computation
@@ -72,25 +63,5 @@ object Ensemble {
         round(s1d, 6).as("s1"), round(s2d, 6).as("s2"),
         round(col("w1"), 6).as("w1"), round(col("w2"), 6).as("w2"),
         round(col("w1") * s1d + col("w2") * s2d, 6).as("score"))
-  }
-
-  /** blend + the reference's alignment assert. The three row counts
-    * (a, b, blended) come from ONE tagged-union aggregation — a single
-    * action instead of three count() jobs each re-reading the inputs.
-    */
-  def blendChecked(a: DataFrame, b: DataFrame, w1: Double, w2: Double, bias: Double): DataFrame = {
-    val out = blend(a, b, w1, w2, bias)
-    val cnts = a.select(lit("a").as("__blend_side"))
-      .unionAll(b.select(lit("b").as("__blend_side")))
-      .unionAll(out.select(lit("o").as("__blend_side")))
-      .groupBy(col("__blend_side")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val na = cnts.getOrElse("a", 0L)
-    val nb = cnts.getOrElse("b", 0L)
-    val no = cnts.getOrElse("o", 0L)
-    if (na != nb || nb != no)
-      throw new IllegalStateException(
-        s"ensemble inputs misaligned: a=$na b=$nb blended=$no")
-    out
   }
 }

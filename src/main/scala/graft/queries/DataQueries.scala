@@ -1342,12 +1342,11 @@ object DataQueries {
     QueryDef("q50_blend",
       // linear score ensembling (ensembling/blend.py:40-52)
       (s, d) => {
-        // r8: the two scorer frames group the SAME source by the SAME
-        // full key, so their inner join is algebraically one groupBy
+        // the two scorer frames group the SAME source by the SAME full
+        // key, so their inner join is algebraically one groupBy
         // computing both aggregates — one events aggregation instead of
-        // two plus an equi-join (Ensemble.blend stays the general-input
-        // form; double arithmetic order replicated term for term:
-        // round(round(0.6*s1 + 0.4*s2 + 0.0, 9), 6))
+        // two plus an equi-join (double arithmetic order replicated term
+        // for term: round(round(0.6*s1 + 0.4*s2 + 0.0, 9), 6))
         triples(s, d).groupBy("subject", "predicate", "object")
           .agg((min(col("event_id") % 100).cast("double") / 100.0).as("__s1"),
             (min(col("event_id") % 97).cast("double") / 97.0).as("__s2"))

@@ -521,12 +521,12 @@ object KgQueries {
       // 50-corruption-per-side ranking protocol (test_ranking.py:119-181)
       // feeding MRR / Hits@k (compute_rank_metrics.py:8-51): 100 test
       // edges, 49 hash-indexed dictionary picks per side (attempt order,
-      // rejects dropped — the negativeSample discipline, never a full-
-      // entity pass; under-filled blocks regenerate their deficit for up
-      // to 4 bounded rounds, oracle = the equivalent one-shot 784-attempt
-      // budget), rank of the true edge per block, exact-integer
-      // metrics (mrr_micro = floor-average of floor(1e6/rank)). Blocks
-      // with every attempt rejected rank the true edge alone (rnk=1).
+      // rejects dropped, never a full-entity pass; under-filled blocks
+      // regenerate their deficit for up to 4 bounded rounds, oracle =
+      // the equivalent one-shot 784-attempt budget), rank of the true
+      // edge per block, exact-integer metrics (mrr_micro =
+      // floor-average of floor(1e6/rank)). Blocks with every attempt
+      // rejected rank the true edge alone (rnk=1).
       (s, d) => graft.prune.Sampling.rankingBlocks(triples(s, d), nTest = 100)
         .agg(
           count(lit(1)).cast("long").as("n_blocks"),

@@ -20,13 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Ann {
 
-  /** Exact cosine via the native [[graft.functions.CosineSim]]
-    * expression — one compiled loop per row with the same operation
-    * order as the HOF form, so values are bit-equal (OpsSpec parity).
-    */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorOps.cosine(a, b)
-
   /** LSH-bucketed top-k: queries x corpus restricted to shared buckets,
     * exact cosine rerank, deterministic tiebreak. All `tables` bucket ids
     * of a vector come from one native [[graft.functions.LshBuckets]] pass
@@ -80,7 +73,7 @@ object Ann {
     */
   private def rerank(cands: DataFrame, k: Int): DataFrame =
     cands.filter(col("qid") =!= col("id"))
-      .withColumn("cos", cosine(col("qv"), col("v")))
+      .withColumn("cos", graft.functions.VectorOps.cosine(col("qv"), col("v")))
       .withColumn("rn", row_number().over(
         Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))))
       .filter(col("rn") <= k)
@@ -90,27 +83,6 @@ object Ann {
   // IVF: coarse-quantizer inverted file (the second scale path)
   // ------------------------------------------------------------------
 
-  /** IVF index build: deterministic k-means over cosine similarity.
-    *
-    * Seeding: the C corpus vectors with the smallest xxhash64(id) — a
-    * pure hash choice (no rand(); retry-stable), evaluated as a
-    * TakeOrdered of C rows, never a full sort. Then `iters` Lloyd
-    * rounds, each a single narrow pass over the corpus: the centroid
-    * matrix (C x dim doubles — bounded metadata, like the ranking
-    * offsets collect) is embedded in a native
-    * [[graft.functions.CentroidRanks]] expression, so assignment is a
-    * compiled per-row argmax with NO join and NO shuffle of the corpus;
-    * new centroids are `dim` map-side-combinable avg aggregates keyed
-    * on cid (the same 1-aggregation discipline as the SimHash votes).
-    * Empty clusters keep their previous centroid.
-    *
-    * The dimensionality is read off the collected seed vectors — a
-    * caller-supplied dim that disagreed with the data either NPE'd
-    * (larger: all-null avg columns) or silently truncated centroids
-    * (smaller), so there is no parameter to disagree with.
-    *
-    * Returns (centroid matrix indexed by cid, index = (id, v, cid)).
-    */
   /** Inline matrices below this size ride in the expression tree (and
     * therefore in EVERY serialized task binary); at or above it the
     * matrix ships once per executor as a torrent broadcast and tasks
@@ -133,16 +105,29 @@ object Ann {
       emb.sparkSession.sparkContext.broadcast(m))
   }
 
-  def ivfIndex(emb: DataFrame, c: Int,
-      iters: Int = 2): (Array[Array[Double]], DataFrame) = {
-    val (centroids, index, _) = ivfIndexWithSource(emb, c, iters)
-    (centroids, index)
-  }
-
-  /** [[ivfIndex]] + the final centroid matrix's transport source, so
-    * callers that also rank AGAINST the final matrix (ivfTopK's query
-    * probes) reuse ONE broadcast instead of shipping a second copy of
-    * the same matrix.
+  /** IVF index build: deterministic k-means over cosine similarity.
+    *
+    * Seeding: the C corpus vectors with the smallest xxhash64(id) — a
+    * pure hash choice (no rand(); retry-stable), evaluated as a
+    * TakeOrdered of C rows, never a full sort. Then `iters` Lloyd
+    * rounds, each a single narrow pass over the corpus: the centroid
+    * matrix (C x dim doubles — bounded metadata, like the ranking
+    * offsets collect) is embedded in a native
+    * [[graft.functions.CentroidRanks]] expression, so assignment is a
+    * compiled per-row argmax with NO join and NO shuffle of the corpus;
+    * new centroids are `dim` map-side-combinable avg aggregates keyed
+    * on cid (the same 1-aggregation discipline as the SimHash votes).
+    * Empty clusters keep their previous centroid.
+    *
+    * The dimensionality is read off the collected seed vectors — a
+    * caller-supplied dim that disagreed with the data either NPE'd
+    * (larger: all-null avg columns) or silently truncated centroids
+    * (smaller), so there is no parameter to disagree with.
+    *
+    * Returns (centroid matrix indexed by cid, index = (id, v, cid), the
+    * final matrix's transport source). ivfTopK's query probes rank
+    * against that same matrix and reuse the source, so a broadcast
+    * matrix ships once, not twice.
     */
   private[graft] def ivfIndexWithSource(emb: DataFrame, c: Int,
       iters: Int = 2)
@@ -152,10 +137,10 @@ object Ann {
       .limit(c)
       .select(col("v"))
       .collect().map(_.getSeq[Double](0).toArray)
-    require(centroids.nonEmpty, "ivfIndex: empty corpus")
+    require(centroids.nonEmpty, "IVF index: empty corpus")
     val dim = centroids.head.length
     require(centroids.forall(_.length == dim),
-      s"ivfIndex: mixed vector dimensionality in seed sample (expected $dim)")
+      s"IVF index: mixed vector dimensionality in seed sample (expected $dim)")
     var it = 0
     while (it < iters) {
       val src = centroidSource(emb, centroids)
@@ -183,21 +168,6 @@ object Ann {
     (centroids, emb.select(col("id"), col("v"), cid.as("cid")), src)
   }
 
-  /** Sentinel for [[ivfTopK]]'s `c`: derive the centroid count from the
-    * corpus size instead of taking a literal.
-    */
-  val AutoC: Int = 0
-
-  /** c ~ sqrt(N) — the classic IVF list-count rule (FAISS guideline:
-    * sqrt-N cells balances per-query centroid-scan cost against
-    * per-list rerank cost). One count() over the corpus; the resulting
-    * matrix rides the existing size-gated broadcast transport, so
-    * auto-derived large c (10^9 vectors -> c ~ 31.6k -> a 4 MB matrix
-    * at dim 16) ships once per executor, never per task.
-    */
-  def autoC(emb: DataFrame): Int =
-    math.max(1, math.round(math.sqrt(emb.count().toDouble)).toInt)
-
   /** IVF top-k: each query probes its `nprobe` max-cosine centroids and
     * exact-reranks only those inverted lists. The candidate join is a
     * plain equi-join on cid (AQE splits skewed lists); vs the LSH path,
@@ -211,15 +181,13 @@ object Ann {
       // fixture sweep (sf0.001 recall@3): at the SAME scanned-list
       // fraction (nprobe/c = 0.25), c=32 measures 0.83 vs c=16's 0.67
       // — finer quantization beats coarser at equal probe cost (c=64
-      // over-fragments the 1k-vector fixture). Production c scales
-      // ~sqrt(corpus): pass [[AutoC]] to derive it from a corpus
-      // count. These literal defaults fit the driver-table sizes.
+      // over-fragments the 1k-vector fixture). These literal defaults
+      // fit the registry queries' tables; larger corpora want c ~ sqrt(N).
       c: Int = 32,
       nprobe: Int = 8,
       iters: Int = 2): DataFrame = {
-    require(c >= 0, s"ivfTopK: c must be >= 0 (0 = auto), got $c")
-    val cEff = if (c == AutoC) autoC(emb) else c
-    val (_, index, src) = ivfIndexWithSource(emb, cEff, iters)
+    require(c >= 1, s"ivfTopK: c must be >= 1, got $c")
+    val (_, index, src) = ivfIndexWithSource(emb, c, iters)
     // probes rank against the SAME final matrix as the index assignment
     // — reuse its transport (one broadcast total, not one per use site)
     val probes = queries.select(col("qid"), col("qv"),

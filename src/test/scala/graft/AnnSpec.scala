@@ -69,7 +69,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("IVF index: every vector assigned to its true max-cosine centroid") {
-    val (centroids, index) = Ann.ivfIndex(emb, c = 8, iters = 2)
+    val (centroids, index, _) = Ann.ivfIndexWithSource(emb, c = 8, iters = 2)
     assert(centroids.length == 8)
     val rows = index.as[(Long, Seq[Double], Int)].collect()
     assert(rows.length == emb.count())
@@ -127,9 +127,8 @@ class AnnSpec extends AnyFunSuite {
 
   test("auto-c: c ~ sqrt(N) derived from the corpus, recall floor holds") {
     // 4096-vector deterministic corpus, 64 natural clusters of 64
-    // (cluster base direction + small mix64 jitter, dim 8): autoC =
-    // round(sqrt(4096)) = 64 — a bigger index than any literal driver
-    // default, derived, not passed
+    // (cluster base direction + small mix64 jitter, dim 8): c = 64 =
+    // round(sqrt(4096)), a bigger index than the registry queries use
     val dim = 8
     val big = (0L until 4096L).map { i =>
       val k = i % 64
@@ -138,10 +137,9 @@ class AnnSpec extends AnyFunSuite {
           0.05 * graft.core.Ids.mix64(i * 131L + d).toDouble / Long.MaxValue
       })
     }.toDF("id", "v")
-    assert(Ann.autoC(big) == 64)
     val qs = big.filter(col("id") < 10)
       .select(col("id").as("qid"), col("v").as("qv"))
-    val auto = Ann.ivfTopK(big, qs, 3, c = Ann.AutoC, nprobe = 16)
+    val auto = Ann.ivfTopK(big, qs, 3, c = 64, nprobe = 16)
     val a = auto.collect()
     val brute = Ann.bruteTopK(big, qs, 3).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"))).toSet
@@ -151,7 +149,7 @@ class AnnSpec extends AnyFunSuite {
     // same scanned-list fraction as the driver default (nprobe/c = 0.25)
     assert(recall >= 0.6, f"auto-c recall collapsed: $recall%.2f")
     // determinism across re-runs (fresh k-means + broadcasts each time)
-    val b = Ann.ivfTopK(big, qs, 3, c = Ann.AutoC, nprobe = 16).collect()
+    val b = Ann.ivfTopK(big, qs, 3, c = 64, nprobe = 16).collect()
     assert(a.map(_.toString).sorted.toSeq == b.map(_.toString).sorted.toSeq)
   }
 

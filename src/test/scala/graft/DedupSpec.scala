@@ -179,8 +179,6 @@ class DedupSpec extends AnyFunSuite {
       (20L, y),
       (30L, "completely different words about shuffles joins and windows"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q81diff").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // raw reference: bands over ALL docs (copies included) -> pairs ->
     // CC -> attach -> sizes — the exact pre-r7 shape
     val sig = docs.select(col("doc_id"),
@@ -203,8 +201,11 @@ class DedupSpec extends AnyFunSuite {
       .select(col("doc_id"), col("cluster"),
         (col("doc_id") === col("cluster")).as("keep"), col("n_cluster"))
       .as[(Long, Long, Boolean, Long)].collect().toSet
-    val got = SparkEntry.queries("q81_dedup_clusters")(spark, dir)
-      .as[(Long, Long, Boolean, Long)].collect().toSet
+    val got = TestSpark.withTempDir("q81diff") { dir =>
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      SparkEntry.queries("q81_dedup_clusters")(spark, dir)
+        .as[(Long, Long, Boolean, Long)].collect().toSet
+    }
     assert(got == expected)
     // and the branch under test really is exercised as claimed
     assert(got.contains((1L, 1L, true, 1L)) && got.contains((2L, 2L, true, 1L)),

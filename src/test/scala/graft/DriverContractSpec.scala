@@ -126,10 +126,11 @@ class DriverContractSpec extends AnyFunSuite {
     // each query runs once: the full result is written, so every output
     // column is computed, then read back (Tables.parquet: no schema job)
     // and digested
-    val dir = java.nio.file.Files.createTempDirectory("graft-pinned").toString
-    val got = SparkEntry.queries.toSeq.sortBy(_._1).map { case (q, fn) =>
-      fn(spark, sf).write.parquet(s"$dir/$q")
-      q -> TestSpark.digest(graft.core.Tables.parquet(spark, s"$dir/$q"))
+    val got = TestSpark.withTempDir("graft-pinned") { dir =>
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (q, fn) =>
+        fn(spark, sf).write.parquet(s"$dir/$q")
+        q -> TestSpark.digest(graft.core.Tables.parquet(spark, s"$dir/$q"))
+      }
     }
     // one paste-ready line per answer that moved or has no pin, then
     // the pins whose query is gone

@@ -105,15 +105,6 @@ class GraphSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("enclosing|union"))
   }
 
-  test("subgraph records: sorted nodes + label arrays") {
-    val cands = Seq(("e1", 10L, 13L)).toDF("edge_id", "head", "tail")
-    val rec = Subgraphs.records(Subgraphs.encloseAndLabel(edges, cands, 2))
-      .as[(String, Array[Long], Array[Array[Int]], Int)].collect().head
-    assert(rec._2.toSeq == Seq(10L, 11L, 12L, 13L))
-    assert(rec._4 == 4)
-    assert(rec._3(0).toSeq == Seq(0, 1)) // labels follow sorted node order
-  }
-
   test("encloseAndLabel supernode guard: per-level cap bounds the frontier") {
     // hub node 100 with 80 leaves, plus a candidate touching the hub:
     // without the cap the frontier is candidates x hub-degree

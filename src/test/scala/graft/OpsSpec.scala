@@ -134,7 +134,8 @@ class OpsSpec extends AnyFunSuite {
   test("multimodal features compose into the IVF ANN index end-to-end") {
     // the declared multimodal contract: opaque binary -> feature vector
     // -> similarity search. Wire the stub featurizer's output straight
-    // into ivfIndex/ivfTopK to prove the schema/typing seam is real.
+    // into the IVF index and ivfTopK to prove the schema/typing seam is
+    // real.
     val emb = Multimodal.featurize(pageMedia).toDF()
       .select(col("media_id").as("id"),
         transform(col("features"), _.cast("double")).as("v"))
@@ -147,7 +148,7 @@ class OpsSpec extends AnyFunSuite {
     assert(byQ.values.forall(_.length <= 3))
     // 16-dim stub features: dimensionality is derived from the data,
     // not assumed 64 (the round-3 review fix)
-    val (centroids, _) = graft.similarity.Ann.ivfIndex(emb, c = 8)
+    val (centroids, _, _) = graft.similarity.Ann.ivfIndexWithSource(emb, c = 8)
     assert(centroids.forall(_.length == Multimodal.featureDim))
   }
 
@@ -486,7 +487,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("custom expressions reject a wrong input type and evaluate on the right one") {
     import org.apache.spark.sql.{AnalysisException, Column}
-    import graft.functions.{CdcBoundaries, Md5MinHash, MinHash, VectorOps}
+    import graft.functions.{CdcBoundaries, InlineCentroids, Md5MinHash, MinHash, VectorOps}
     val df = Seq(("a b c d", Seq(3.0, 4.0))).toDF("s", "v")
     val m = Array(Array(1.0, 0.0), Array(0.0, 1.0))
     // (prettyName, column form, the input column of the right type)
@@ -495,7 +496,7 @@ class OpsSpec extends AnyFunSuite {
       ("md5_minhash", Md5MinHash.of(_), "s"),
       ("md5_simhash", Md5SimHash.of(_), "s"),
       ("cdc_boundaries", CdcBoundaries.of(_), "s"),
-      ("centroid_ranks", VectorOps.centroidRanks(_, m), "v"),
+      ("centroid_ranks", VectorOps.centroidRanks(_, InlineCentroids(m)), "v"),
       ("cosine_sim", c => VectorOps.cosine(c, c), "v"),
       ("lsh_buckets", VectorOps.lshBuckets(_, 2, 3), "v"))
     cases.foreach { case (name, f, right) =>

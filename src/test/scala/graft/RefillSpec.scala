@@ -1,17 +1,12 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.prune.{AntiJoinReconcile, Refill}
+import graft.prune.Refill
 
 class RefillSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  val vocab = Seq("p1", "p2", "p3", "p4")
-  lazy val triples = (0 until 400).map(i =>
-    (s"s$i", vocab(i % 4), s"o$i")).toDF("subject", "predicate", "object")
 
   test("priorityFill: cap path — target subjects capped, target<->target first, maxRows enforced") {
     // 6 target<->target triples, 20 other triples, one hub target subject
@@ -49,48 +44,5 @@ class RefillSpec extends AnyFunSuite {
     assert(exp.map(r => (r.getAs[String]("subject"), r.getAs[String]("object"))).toSet ==
       Set(("x1", "y1"), ("t1", "y2")))
     assert(!out.exists(_.getAs[String]("subject").startsWith("z")))
-  }
-
-  test("blanking: exactly int(count*pct) per predicate group, deterministic") {
-    val blanked = Refill.blankPredicates(triples, 0.5)
-    val empties = blanked.filter(trim(col("predicate")) === "").count()
-    assert(empties == 200) // 4 groups x floor(100*0.5)
-    val perGroupLeft = blanked.filter(col("predicate") =!= "")
-      .groupBy("predicate").count().as[(String, Long)].collect().toMap
-    assert(perGroupLeft.values.forall(_ == 50))
-    val again = Refill.blankPredicates(triples, 0.5)
-      .filter(trim(col("predicate")) === "")
-      .select("subject").as[String].collect().toSet
-    val first = blanked.filter(trim(col("predicate")) === "")
-      .select("subject").as[String].collect().toSet
-    assert(again == first)
-  }
-
-  test("random fill: no empties remain, all from the closed vocabulary") {
-    val filled = Refill.randomFill(Refill.blankPredicates(triples, 0.5), vocab)
-    assert(filled.filter(trim(col("predicate")) === "").count() == 0)
-    val preds = filled.select("predicate").distinct().as[String].collect().toSet
-    assert(preds.subsetOf(vocab.toSet))
-  }
-
-  test("synthetic fill: ~30/50/20 real/corrupted/random mix") {
-    val blanked = Refill.blankPredicates(triples, 0.5)
-    val filled = Refill.syntheticFill(blanked, triples, vocab)
-    assert(filled.filter(trim(col("predicate")) === "").count() == 0)
-    val wasBlanked = blanked.filter(trim(col("predicate")) === "")
-      .select("subject").as[String].collect().toSet
-    val truthMap = triples.select("subject", "predicate").as[(String, String)]
-      .collect().toMap
-    val refilled = filled.filter(col("subject").isin(wasBlanked.toSeq: _*))
-      .select("subject", "predicate").as[(String, String)].collect()
-    val realFrac = refilled.count { case (s, p) => truthMap(s) == p }.toDouble / refilled.length
-    assert(realFrac > 0.25 && realFrac < 0.45, s"real fraction $realFrac")
-  }
-
-  test("end-to-end E1 shape: blank -> fill -> anti-join reconcile conserves rows") {
-    val blanked = Refill.blankPredicates(triples, 0.5)
-    val filled = Refill.randomFill(blanked, vocab)
-    val out = AntiJoinReconcile.reconcileChecked(triples, filled)
-    assert(out.count() == 400)
   }
 }

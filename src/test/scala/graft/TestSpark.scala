@@ -17,6 +17,15 @@ object TestSpark {
     s
   }
 
+  /** Runs `body` on a fresh directory under java.io.tmpdir and deletes
+    * the directory tree when the block ends, also when it throws.
+    */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
   /** Order-insensitive, multiplicity-keeping digest of a result. */
   def digest(df: DataFrame): String = {
     val rows = df.collect().map(_.toString).sorted
