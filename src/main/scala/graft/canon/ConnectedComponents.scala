@@ -67,11 +67,10 @@ object ConnectedComponents {
     val (c0, c1) = (edges.columns(0), edges.columns(1))
     val nodes = edges.select(col(c0).as("k"))
       .unionAll(edges.select(col(c1).as("k"))).distinct()
-    // smallThreshold=0: this path is only reached for graphs past the
-    // driver fast-path threshold, where the node set must never funnel
-    // through a one-task sort regardless of how the adaptive default in
-    // Ids.dictionary would classify it.
-    val dict = graft.core.Ids.dictionary(nodes, "k", smallThreshold = 0)
+    // always the distributed ranking: this path is only reached for
+    // graphs past the driver threshold, where the node set must never
+    // funnel through a one-task sort
+    val dict = graft.core.Ids.globalRowNumber(nodes, "k", "id")
       .localCheckpoint(true)
     val encoded = edges
       .join(dict.select(col("k").as(c0), col("id").as("__ea")), Seq(c0))
@@ -116,69 +115,56 @@ object ConnectedComponents {
   /** edges(any two columns) -> (id, component) for every node appearing
     * in an edge; component = min node id of the component.
     *
-    * Small inputs (< `driverThreshold` edges) short-circuit to a
-    * driver-side union-find: running ~6 alternating-star rounds (3 jobs
-    * each) on a dictionary-sized graph costs ~20 job launches for work a
-    * single collect finishes in microseconds — the same adaptivity
-    * Catalyst applies when it broadcasts a small join side. Pass
-    * driverThreshold=0 to force the distributed algorithm (tests do).
+    * Small inputs (fewer than [[graft.core.Session.driverRows]] edges)
+    * short-circuit to a driver-side union-find: running ~6 alternating-
+    * star rounds (3 jobs each) on a dictionary-sized graph costs ~20 job
+    * launches for work a single collect finishes in microseconds — the
+    * same adaptivity Catalyst applies when it broadcasts a small join
+    * side. `spark.graft.driverRows=0` forces the distributed algorithm.
     */
-  def run(edges: DataFrame, maxIter: Int = 50, driverThreshold: Long = 1 << 16): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
-    if (driverThreshold > 0) {
-      // MIN ordering must match the column's native ordering, so the
-      // union-find runs on the original type (numeric vs string), not on
-      // a lossy string cast ("10" < "2" but 2 < 10).
-      //
-      // r8: probe BY collecting (the Subgraphs dispatch discipline) —
-      // the limit(th).count() probe job's scan was immediately redone
-      // by the collect; a bounded limit(th) collect answers the size
-      // question and already is the union-find input, one job instead
-      // of two. A not-small graph wastes one bounded th-row collect and
-      // falls through — the same bound the count probe paid.
-      val (c0, c1) = (edges.columns(0), edges.columns(1))
-      val idType = edges.schema(c0).dataType
-      val isNumeric = idType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-      def unionFind[T: Ordering: scala.reflect.ClassTag](pairs: Array[(T, T)]): Array[(T, T)] = {
-        val ord = implicitly[Ordering[T]]
-        val parent = scala.collection.mutable.Map[T, T]()
-        // iterative find (walk to root, then compress) — chain-shaped
-        // inputs near the 64k threshold would overflow the stack with a
-        // non-tail-recursive form
-        def find(x: T): T = {
-          var root = x
-          while (parent.getOrElse(root, root) != root) root = parent(root)
-          var cur = x
-          while (cur != root) { val next = parent(cur); parent(cur) = root; cur = next }
-          root
-        }
-        pairs.foreach { case (a, b) =>
-          if (a != b) {
-            val (ra, rb) = (find(a), find(b))
-            if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-          }
-        }
-        pairs.flatMap(e => Seq(e._1, e._2)).distinct.map(n => (n, find(n)))
+    // MIN ordering must match the column's native ordering, so the
+    // union-find runs on the original type (numeric vs string), not on
+    // a lossy string cast ("10" < "2" but 2 < 10). The bounded probe's
+    // rows are the union-find input: one job, nothing read twice.
+    val (c0, c1) = (edges.columns(0), edges.columns(1))
+    val idType = edges.schema(c0).dataType
+    val isNumeric = idType.isInstanceOf[org.apache.spark.sql.types.NumericType]
+    def unionFind[T: Ordering: scala.reflect.ClassTag](pairs: Array[(T, T)]): Array[(T, T)] = {
+      val ord = implicitly[Ordering[T]]
+      val parent = scala.collection.mutable.Map[T, T]()
+      // iterative find (walk to root, then compress) — chain-shaped
+      // inputs near the 64k threshold would overflow the stack with a
+      // non-tail-recursive form
+      def find(x: T): T = {
+        var root = x
+        while (parent.getOrElse(root, root) != root) root = parent(root)
+        var cur = x
+        while (cur != root) { val next = parent(cur); parent(cur) = root; cur = next }
+        root
       }
-      import spark.implicits._
-      val th = driverThreshold.toInt
-      val typed =
-        if (isNumeric) {
-          val local = edges.select(col(c0).cast("long"), col(c1).cast("long"))
-            .limit(th).collect().map(r => (r.getLong(0), r.getLong(1)))
-          if (local.length >= th) None
-          else Some(spark.createDataset(unionFind(local)).toDF("id", "component"))
-        } else {
-          val local = edges.select(col(c0).cast("string"), col(c1).cast("string"))
-            .limit(th).collect().map(r => (r.getString(0), r.getString(1)))
-          if (local.length >= th) None
-          else Some(spark.createDataset(unionFind(local)).toDF("id", "component"))
+      pairs.foreach { case (a, b) =>
+        if (a != b) {
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
         }
-      typed.foreach { t =>
-        return t.select(col("id").cast(idType).as("id"),
-          col("component").cast(idType).as("component"))
       }
+      pairs.flatMap(e => Seq(e._1, e._2)).distinct.map(n => (n, find(n)))
     }
+    val as = if (isNumeric) "long" else "string"
+    graft.core.Session.collectIfSmall(edges.select(col(c0).cast(as), col(c1).cast(as)))
+      .fold(distributed(edges, maxIter)) { local =>
+        import spark.implicits._
+        val cc =
+          if (isNumeric) unionFind(local.map(r => (r.getLong(0), r.getLong(1)))).toSeq.toDF()
+          else unionFind(local.map(r => (r.getString(0), r.getString(1)))).toSeq.toDF()
+        cc.select(col("_1").cast(idType).as("id"), col("_2").cast(idType).as("component"))
+      }
+  }
+
+  /** [[run]]'s star rounds, whatever the input's size. */
+  private def distributed(edges: DataFrame, maxIter: Int): DataFrame = {
     // Distributed path over STRING ids: dictionary-encode to dense longs
     // first (the file's own scale note, r1 VERDICT item 10). ~6 star
     // rounds x 3 shuffles each move every id; 8-byte longs instead of
@@ -189,8 +175,7 @@ object ConnectedComponents {
     if (edges.schema(edges.columns(0)).dataType ==
         org.apache.spark.sql.types.StringType) {
       val (encoded, dict) = encodeEdges(edges)
-      val ccLong = run(encoded, maxIter, driverThreshold = 0)
-      return ccLong
+      return distributed(encoded, maxIter)
         .join(dict.select(col("k").as("__ik"), col("id")), Seq("id"))
         .join(dict.select(col("k").as("__ck"), col("id").as("component")),
           Seq("component"))

@@ -53,24 +53,26 @@ object Ids {
     * lexicographic order of the distinct keys.
     *
     * Adaptive like ConnectedComponents.run: dictionary-sized key sets
-    * (< smallThreshold) rank through one window — the partition-offset
-    * machinery costs ~4 jobs (checkpoint, counts, broadcast, join) that
-    * dwarf a one-task sort of a few thousand keys — while anything
-    * larger takes [[globalRowNumber]] so no full-graph node set ever
-    * funnels through one task. Both paths produce IDENTICAL ids (global
-    * lexicographic rank). Pass smallThreshold=0 to force the
-    * distributed path (tests do).
+    * (fewer than [[Session.driverRows]]) rank through one window — the
+    * partition-offset machinery costs ~4 jobs (checkpoint, counts,
+    * broadcast, join) that dwarf a one-task sort of a few thousand keys
+    * — while anything larger takes [[globalRowNumber]] so no full-graph
+    * node set ever funnels through one task. Both paths produce
+    * IDENTICAL ids (global lexicographic rank). The probe counts rather
+    * than collects, so the small path still sorts in Spark: Spark
+    * orders strings by UTF-8 bytes, the JVM's `String` by UTF-16 units.
+    * `spark.graft.driverRows=0` forces the distributed ranking.
     */
-  def dictionary(df: DataFrame, keyCol: String, idCol: String = "id",
-      smallThreshold: Long = 1 << 16): DataFrame = {
+  def dictionary(df: DataFrame, keyCol: String, idCol: String = "id"): DataFrame = {
     val distinct = df.select(col(keyCol)).distinct()
-    if (smallThreshold > 0) {
+    val th = Session.driverRows(df.sparkSession)
+    if (th > 0) {
       // materialize the distinct ONCE before probing: without it the
       // probe's limit+count runs the full aggregation and the chosen
       // path re-runs the identical distinct from scratch — doubling the
       // dominant cost exactly in the large-input case
       val mat = distinct.localCheckpoint(true)
-      if (mat.limit(smallThreshold.toInt).count() < smallThreshold)
+      if (mat.limit(th).count() < th)
         mat.withColumn(idCol,
           row_number().over(Window.orderBy(col(keyCol))).cast("long"))
       else globalRowNumber(mat, keyCol, idCol)

@@ -124,17 +124,16 @@ object Bfs {
     * node lands there: truncated distances would silently fragment
     * every per-component stat downstream.
     *
-    * Small inputs (< `driverThreshold` edges) run [[kHopLocal]] on the
-    * driver instead: a bounded collect answers "is it small?" and
-    * already is the adjacency input, where the distributed walk pays a
-    * checkpoint per level (4 Spark jobs under AQE on a small graph). BFS
-    * distances depend only on id EQUALITY, so the string-cast round trip
-    * is type-safe. driverThreshold=0 forces the distributed walk (tests
-    * do).
+    * Small inputs (fewer than [[graft.core.Session.driverRows]] edges)
+    * run [[kHopLocal]] on the driver instead: a bounded collect answers
+    * "is it small?" and already is the adjacency input, where the
+    * distributed walk pays a checkpoint per level (4 Spark jobs under
+    * AQE on a small graph). BFS distances depend only on id EQUALITY, so
+    * the string-cast round trip is type-safe. `spark.graft.driverRows=0`
+    * forces the distributed walk.
     */
   def allPairsDistances(und: DataFrame, maxDepth: Int,
-      maxNodes: Int = 10000, driverThreshold: Long = 1 << 16,
-      requireConverged: Boolean = true): DataFrame = {
+      maxNodes: Int = 10000, requireConverged: Boolean = true): DataFrame = {
     def guard(nNodes: Long): Unit = require(nNodes <= maxNodes,
       s"allPairsDistances seeds a BFS from EVERY node (O(V*E)); refusing a graph " +
         s"with > $maxNodes nodes — raise maxNodes only for bounded stats subgraphs")
@@ -143,26 +142,23 @@ object Bfs {
         "— distances are truncated and downstream per-component stats would " +
         "silently fragment; raise maxDepth above the true diameter")
     val depth = if (requireConverged) maxDepth + 1 else maxDepth
-    if (driverThreshold > 0) {
-      val spark = und.sparkSession
+    val spark = und.sparkSession
+    val idType = und.schema(und.columns(0)).dataType
+    graft.core.Session.collectIfSmall(
+        und.select(col("src").cast("string"), col("dst").cast("string"))).foreach { rows =>
       import spark.implicits._
-      val idType = und.schema(und.columns(0)).dataType
-      val edges = und.select(col("src").cast("string"), col("dst").cast("string"))
-        .limit(driverThreshold.toInt).collect()
-        .map(r => (r.getString(0), r.getString(1)))
-      if (edges.length < driverThreshold) {
-        val adj = edges.groupBy(_._1).map { case (s, es) => (s, es.map(_._2)) }
-        val allNodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        guard(allNodes.length.toLong)
-        val out = allNodes.toSeq.flatMap { a =>
-          val dist = kHopLocal(adj, Seq(a), depth)
-          if (dist.valuesIterator.exists(_ > maxDepth)) failTruncated()
-          dist.map { case (n, d) => (a, n, d) }
-        }
-        return spark.createDataset(out).toDF("a", "node", "dist")
-          .select(col("a").cast(idType).as("a"),
-            col("node").cast(idType).as("node"), col("dist"))
+      val edges = rows.map(r => (r.getString(0), r.getString(1)))
+      val adj = edges.groupBy(_._1).map { case (s, es) => (s, es.map(_._2)) }
+      val allNodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      guard(allNodes.length.toLong)
+      val out = allNodes.toSeq.flatMap { a =>
+        val dist = kHopLocal(adj, Seq(a), depth)
+        if (dist.valuesIterator.exists(_ > maxDepth)) failTruncated()
+        dist.map { case (n, d) => (a, n, d) }
       }
+      return spark.createDataset(out).toDF("a", "node", "dist")
+        .select(col("a").cast(idType).as("a"),
+          col("node").cast(idType).as("node"), col("dist"))
     }
     val nodes = und.select(col("src").as("a"))
       .unionAll(und.select(col("dst").as("a"))).distinct()
@@ -184,10 +180,8 @@ object Bfs {
     * ConnectedComponents.run for component ids when the diameter is
     * unknown.
     */
-  def eccentricityStats(und: DataFrame, maxDepth: Int,
-      driverThreshold: Long = 1 << 16): DataFrame = {
-    val ecc = allPairsDistances(und, maxDepth, driverThreshold = driverThreshold,
-      requireConverged = true)
+  def eccentricityStats(und: DataFrame, maxDepth: Int): DataFrame = {
+    val ecc = allPairsDistances(und, maxDepth, requireConverged = true)
       .groupBy(col("a"))
       .agg(max(col("dist")).as("ecc"), min(col("node")).as("component"))
     ecc.groupBy(col("component"))

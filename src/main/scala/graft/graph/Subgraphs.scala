@@ -32,11 +32,12 @@ import org.apache.spark.sql.functions._
   * edges behind a per-candidate marker row, and label inside one beam
   * body per candidate ([[communityLabelBeam]]).
   *
-  * Small inputs (both under `driverThreshold` rows, read by one bounded
-  * collect each) run on the driver with the same walks and the same
-  * beam body: the distributed form costs a checkpoint per BFS level,
-  * pure overhead at dictionary-sized graphs. driverThreshold=0 forces the
-  * distributed form; GraphSpec asserts both emit identical rows.
+  * Small inputs (both under [[graft.core.Session.driverRows]] rows, read
+  * by one bounded collect each) run on the driver with the same walks
+  * and the same beam body: the distributed form costs a checkpoint per
+  * BFS level, pure overhead at dictionary-sized graphs.
+  * `spark.graft.driverRows=0` forces the distributed form; GraphSpec
+  * asserts both emit identical rows.
   */
 object Subgraphs {
 
@@ -76,16 +77,14 @@ object Subgraphs {
       candidates: DataFrame,
       h: Int,
       maxNodesPerHop: Option[Int] = None,
-      mode: String = "enclosing",
-      driverThreshold: Long = 1 << 16): DataFrame = {
+      mode: String = "enclosing"): DataFrame = {
     require(mode == "enclosing" || mode == "union",
       s"encloseAndLabel mode must be enclosing|union, got '$mode'")
     import org.apache.spark.sql.types.{LongType, StringType}
     val localShape = candidates.schema("edge_id").dataType == StringType &&
       Seq(candidates.schema("head"), candidates.schema("tail"),
         edges.schema("src"), edges.schema("dst")).forall(_.dataType == LongType)
-    label(edges, candidates, h, maxNodesPerHop, mode,
-      if (localShape) driverThreshold else 0)
+    label(edges, candidates, h, maxNodesPerHop, mode, localShape)
   }
 
   /** One gathered beam row: an induced edge of a candidate's h-hop
@@ -129,41 +128,34 @@ object Subgraphs {
       edges: DataFrame,
       candidates: DataFrame,
       h: Int,
-      maxNodesPerHop: Option[Int] = None,
-      driverThreshold: Long = 1 << 16): DataFrame =
-    label(edges, candidates, h, maxNodesPerHop, "community", driverThreshold)
+      maxNodesPerHop: Option[Int] = None): DataFrame =
+    label(edges, candidates, h, maxNodesPerHop, "community", tryLocal = true)
 
   private val (repeatedPrefix, repeatedSuffix) =
     ("Subgraphs: candidate edge_id ", " carries more than one (head, tail)")
 
   /** Dispatch for both entry points; mode is enclosing|union|community.
-    * The size probe IS the driver input: a bounded limit(th) collect
-    * answers "is it small?" and, when yes, is what the local walks run
-    * on — nothing is read twice. Null endpoints are dropped before the
-    * limit; they never contribute rows on either path.
+    * The size probe IS the driver input: a bounded collect answers "is
+    * it small?" and, when yes, is what the local walks run on — nothing
+    * is read twice. Null endpoints are dropped before the limit; they
+    * never contribute rows on either path.
     */
   private def label(edges: DataFrame, candidates: DataFrame, h: Int,
-      maxNodesPerHop: Option[Int], mode: String, driverThreshold: Long): DataFrame = {
-    if (driverThreshold > 0) {
-      val th = driverThreshold.toInt
-      val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .filter(col("src").isNotNull && col("dst").isNotNull)
-        .limit(th).collect()
-      if (e.length < th) {
-        val c = candidates.select(col("edge_id").cast("string"),
-          col("head").cast("long"), col("tail").cast("long"))
-          .limit(th).collect()
-        c.groupBy(_.getString(0)).collectFirst {
-          case (eid, rs) if rs.map(r => (r.get(1), r.get(2))).distinct.length > 1 => eid
-        }.foreach(eid => throw new IllegalArgumentException(repeatedPrefix + eid + repeatedSuffix))
-        if (c.length < th)
-          return labelLocal(edges.sparkSession,
-            e.map(r => (r.getLong(0), r.getLong(1))),
-            c.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
-            h, maxNodesPerHop, mode)
-      }
+      maxNodesPerHop: Option[Int], mode: String, tryLocal: Boolean): DataFrame = {
+    import graft.core.Session.collectIfSmall
+    val local = if (!tryLocal) None else for {
+      e <- collectIfSmall(edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .filter(col("src").isNotNull && col("dst").isNotNull))
+      c <- collectIfSmall(candidates.select(col("edge_id").cast("string"),
+        col("head").cast("long"), col("tail").cast("long")))
+    } yield {
+      c.groupBy(_.getString(0)).collectFirst {
+        case (eid, rs) if rs.map(r => (r.get(1), r.get(2))).distinct.length > 1 => eid
+      }.foreach(eid => throw new IllegalArgumentException(repeatedPrefix + eid + repeatedSuffix))
+      labelLocal(edges.sparkSession, e.map(r => (r.getLong(0), r.getLong(1))),
+        c.map(r => (r.getString(0), r.getLong(1), r.getLong(2))), h, maxNodesPerHop, mode)
     }
-    labelDistributed(edges, candidates, h, maxNodesPerHop, mode)
+    local.getOrElse(labelDistributed(edges, candidates, h, maxNodesPerHop, mode))
   }
 
   /** Driver path: the distributed walks per candidate over one

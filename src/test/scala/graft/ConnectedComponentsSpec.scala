@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.TestBus
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.canon.{Canonicalize, ConnectedComponents}
 import graft.core.Ids
 import graft.fixtures.Fixtures
+import graft.graph.Bfs
 
 class ConnectedComponentsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -27,8 +29,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   /** force the DISTRIBUTED large-star/small-star path */
   private def ccOf(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    ConnectedComponents.run(edges.toDF("src", "dst"), driverThreshold = 0)
-      .as[(Long, Long)].collect().toMap
+    TestSpark.withDriverRows(0) {
+      ConnectedComponents.run(edges.toDF("src", "dst")).as[(Long, Long)].collect().toMap
+    }
 
   test("chain, star, two components, self-loops") {
     val edges = Seq(
@@ -66,13 +69,31 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val sEdges = Seq("2" -> "10", "10" -> "3", "7" -> "8")
     val sFast = ConnectedComponents.run(sEdges.toDF("src", "dst"))
       .as[(String, String)].collect().toMap
-    val sDist = ConnectedComponents.run(sEdges.toDF("src", "dst"), driverThreshold = 0)
-      .as[(String, String)].collect().toMap
+    val sDist = TestSpark.withDriverRows(0) {
+      ConnectedComponents.run(sEdges.toDF("src", "dst")).as[(String, String)].collect().toMap
+    }
     assert(sFast == sDist)
     // orderings differ between the two id types, as they must
     assert(fast(2L) == 2L && fast(3L) == 2L)
     assert(sFast("2") == "10") // string min of {"2","10","3"} = "10"
     assert(sDist("3") == "10")
+  }
+
+  test("driver fast paths start as many Spark jobs as before the shared probe") {
+    // counts read before the size probe moved into graft.core.Session;
+    // the KG build reaches CC through Canonicalize and the dictionary
+    // through KgPipeline, and q27 reaches CC
+    def jobsOf(run: => Any): Int = TestBus.jobsDuring(spark.sparkContext)(run).size
+    val long = Seq(2L -> 10L, 10L -> 3L, 7L -> 8L).toDF("src", "dst").localCheckpoint(true)
+    val str = Seq("2" -> "10", "10" -> "3", "7" -> "8").toDF("src", "dst").localCheckpoint(true)
+    val und = Bfs.undirected(long).localCheckpoint(true)
+    val keys = Seq("b", "a", "c", "a").toDF("k").localCheckpoint(true)
+    val got = Map(
+      "cc/long" -> jobsOf(ConnectedComponents.run(long).collect()),
+      "cc/string" -> jobsOf(ConnectedComponents.run(str).collect()),
+      "allPairs" -> jobsOf(Bfs.allPairsDistances(und, 8).collect()),
+      "dictionary" -> jobsOf(Ids.dictionary(keys, "k").collect()))
+    assert(got == Map("cc/long" -> 2, "cc/string" -> 2, "allPairs" -> 1, "dictionary" -> 6))
   }
 
   test("driver fast path survives a deep chain processed in descending order") {

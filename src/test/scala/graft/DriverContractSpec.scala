@@ -122,10 +122,10 @@ class DriverContractSpec extends AnyFunSuite {
     "q89_dedup_ann_topk" -> "60:34fb5d336859b5d2",
     "q90_decontaminate" -> "494:cef13710bdc43670")
 
-  test("every registered query executes at sf0.001") {
-    // each query runs once: the full result is written, so every output
-    // column is computed, then read back (Tables.parquet: no schema job)
-    // and digested
+  // each query runs once: the full result is written, so every output
+  // column is computed, then read back (Tables.parquet: no schema job)
+  // and digested
+  private def checkPins(): Unit = {
     val got = TestSpark.withTempDir("graft-pinned") { dir =>
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (q, fn) =>
         fn(spark, sf).write.parquet(s"$dir/$q")
@@ -144,9 +144,22 @@ class DriverContractSpec extends AnyFunSuite {
       fail((moved ++ extra).mkString("answers differ from their pins:\n", "\n", ""))
   }
 
-  test("flagship entry returns rows") {
-    // the distinct kept triples of the pipeline at Fixtures.tiny,
-    // recorded at 029f93b
+  // the distinct kept triples of the pipeline at Fixtures.tiny,
+  // recorded at 029f93b
+  private def checkFlagship(): Unit =
     assert(TestSpark.digest(SparkEntry.entry(spark)) == "160:480dac30d85df2eb")
+
+  test("every registered query executes at sf0.001") { checkPins() }
+
+  test("flagship entry returns rows") { checkFlagship() }
+
+  // no shipped input reaches a size switch's distributed path, so the
+  // same pins run again with every switch forced onto it
+  test("every registered query executes at sf0.001 with driverRows = 0") {
+    TestSpark.withDriverRows(0)(checkPins())
+  }
+
+  test("flagship entry returns rows with driverRows = 0") {
+    TestSpark.withDriverRows(0)(checkFlagship())
   }
 }

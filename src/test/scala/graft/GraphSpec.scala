@@ -4,7 +4,8 @@ import org.apache.spark.TestBus
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark.digest
+import graft.TestSpark.{digest, withDriverRows}
+import graft.core.Session.DefaultDriverRows
 import graft.graph.{Bfs, Ppr, Subgraphs}
 
 class GraphSpec extends AnyFunSuite {
@@ -158,9 +159,8 @@ class GraphSpec extends AnyFunSuite {
     for (cap <- Seq(None, Some(2))) {
       val fast = Subgraphs.encloseAndLabelCommunity(edges, cands, 2, cap)
         .as[(String, Long, Int, Int)].collect().toSet
-      val dist = Subgraphs.encloseAndLabelCommunity(edges, cands, 2, cap,
-        driverThreshold = 0)
-        .as[(String, Long, Int, Int)].collect().toSet
+      val dist = withDriverRows(0)(Subgraphs.encloseAndLabelCommunity(edges, cands, 2, cap)
+        .as[(String, Long, Int, Int)].collect().toSet)
       assert(fast == dist, s"cap=$cap: fast ${fast.size} vs dist ${dist.size}\n" +
         s"only-fast=${fast.diff(dist)}\nonly-dist=${dist.diff(fast)}")
     }
@@ -173,11 +173,11 @@ class GraphSpec extends AnyFunSuite {
       (10L, 11L), (11L, 12L)).toDF("src", "dst"))
     val want = Map(1L -> ((2, 1, 4L)), 10L -> ((2, 1, 3L)))
     // driver fast path (default) and distributed rounds must agree
-    for (thr <- Seq(1L << 16, 0L)) {
-      val got = Bfs.eccentricityStats(e, 4, driverThreshold = thr)
-        .as[(Long, Int, Int, Long)].collect()
+    for (rows <- Seq(DefaultDriverRows, 0)) {
+      val got = withDriverRows(rows)(Bfs.eccentricityStats(e, 4)
+        .as[(Long, Int, Int, Long)].collect())
         .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      assert(got == want, s"driverThreshold=$thr: $got")
+      assert(got == want, s"driverRows=$rows: $got")
     }
   }
 
@@ -186,12 +186,10 @@ class GraphSpec extends AnyFunSuite {
     // BOTH paths; maxDepth=4 (== diameter exactly) must NOT throw.
     val e = Bfs.undirected(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("src", "dst"))
-    for (thr <- Seq(1L << 16, 0L)) {
-      assertThrows[IllegalStateException](
-        Bfs.eccentricityStats(e, 2, driverThreshold = thr).collect())
-      val ok = Bfs.eccentricityStats(e, 4, driverThreshold = thr)
-        .as[(Long, Int, Int, Long)].collect()
-      assert(ok.toSeq == Seq((1L, 4, 2, 5L)), s"thr=$thr: ${ok.toSeq}")
+    for (rows <- Seq(DefaultDriverRows, 0)) withDriverRows(rows) {
+      assertThrows[IllegalStateException](Bfs.eccentricityStats(e, 2).collect())
+      val ok = Bfs.eccentricityStats(e, 4).as[(Long, Int, Int, Long)].collect()
+      assert(ok.toSeq == Seq((1L, 4, 2, 5L)), s"driverRows=$rows: ${ok.toSeq}")
     }
   }
 
@@ -210,16 +208,15 @@ class GraphSpec extends AnyFunSuite {
   test("encloseAndLabel driver fast path == distributed path (modes x caps)") {
     // two candidates (one diamond, one bridge-spanning), both modes,
     // capped and uncapped: the sub-64k fast path must emit exactly the
-    // distributed rows (driverThreshold = 0 forces distributed — the
+    // distributed rows (driverRows = 0 forces distributed — the
     // encloseAndLabelCommunity test discipline)
     val cands = Seq(("e1", 10L, 13L), ("e2", 3L, 10L))
       .toDF("edge_id", "head", "tail")
     for (mode <- Seq("enclosing", "union"); cap <- Seq(None, Some(2))) {
       val fast = Subgraphs.encloseAndLabel(edges, cands, 2, cap, mode)
         .collect().map(_.toString).sorted.toSeq
-      val dist = Subgraphs
-        .encloseAndLabel(edges, cands, 2, cap, mode, driverThreshold = 0)
-        .collect().map(_.toString).sorted.toSeq
+      val dist = withDriverRows(0)(Subgraphs.encloseAndLabel(edges, cands, 2, cap, mode)
+        .collect().map(_.toString).sorted.toSeq)
       assert(fast == dist, s"mode=$mode cap=$cap")
       assert(fast.nonEmpty)
     }
@@ -259,19 +256,16 @@ class GraphSpec extends AnyFunSuite {
       "union/Some(3)/driver" -> "25:f1ee229e4d05bdcb")
     val e = hubEdges
     val cands = hubCands.toDF("edge_id", "head", "tail")
-    val cases: Seq[(String, Long => DataFrame)] =
+    val cases: Seq[(String, () => DataFrame)] =
       (for (mode <- Seq("enclosing", "union"); cap <- Seq(None, Some(3)))
-        yield s"$mode/$cap" -> ((thr: Long) =>
-          Subgraphs.encloseAndLabel(e, cands, 2, cap, mode, thr))) ++
-      Seq(None, Some(3)).map(cap => s"community/$cap" -> ((thr: Long) =>
-        Subgraphs.encloseAndLabelCommunity(e, cands, 2, cap, thr))) :+
-      ("eccentricity" -> ((thr: Long) =>
-        Bfs.eccentricityStats(e, 8, driverThreshold = thr))) :+
-      ("allPairs" -> ((thr: Long) =>
-        Bfs.allPairsDistances(e, 8, driverThreshold = thr)))
+        yield s"$mode/$cap" -> (() => Subgraphs.encloseAndLabel(e, cands, 2, cap, mode))) ++
+      Seq(None, Some(3)).map(cap => s"community/$cap" -> (() =>
+        Subgraphs.encloseAndLabelCommunity(e, cands, 2, cap))) :+
+      ("eccentricity" -> (() => Bfs.eccentricityStats(e, 8))) :+
+      ("allPairs" -> (() => Bfs.allPairsDistances(e, 8)))
     val got = cases.flatMap { case (name, run) =>
-      Seq(s"$name/driver" -> digest(run(1L << 16)),
-        s"$name/distributed" -> digest(run(0L)))
+      Seq(s"$name/driver" -> digest(run()),
+        s"$name/distributed" -> withDriverRows(0)(digest(run())))
     }.toMap + ("kHop" -> digest(Bfs.kHop(e, Seq(0L, 5L).toDF("node"), 3, Some(4))))
     assert(got == expected)
   }
@@ -282,6 +276,15 @@ class GraphSpec extends AnyFunSuite {
     val plain = jobsOf(Subgraphs.encloseAndLabel(edges, cands, 2))
     val community = jobsOf(Subgraphs.encloseAndLabelCommunity(edges, cands, 2))
     assert(plain > 0 && community == plain, s"plain=$plain community=$community")
+  }
+
+  test("with driverRows = 0, plain and community labelling start at most 17 and 26 Spark jobs") {
+    val cands = Seq(("e1", 11L, 12L), ("e2", 1L, 2L)).toDF("edge_id", "head", "tail")
+    def jobsOf(run: => DataFrame): Int =
+      withDriverRows(0)(TestBus.jobsDuring(spark.sparkContext)(run.collect()).size)
+    val plain = jobsOf(Subgraphs.encloseAndLabel(edges, cands, 2))
+    val community = jobsOf(Subgraphs.encloseAndLabelCommunity(edges, cands, 2))
+    assert(plain <= 17 && community <= 26, s"plain=$plain community=$community")
   }
 
   test("kHop runs one action per level: 1 + h checkpoints, no emptiness probes") {
@@ -298,30 +301,29 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("a candidate row repeated byte for byte is labelled once on both paths") {
-    def runs(cands: DataFrame): Seq[(String, Long => DataFrame)] =
-      Seq("enclosing", "union").map(m => m -> ((thr: Long) =>
-        Subgraphs.encloseAndLabel(edges, cands, 2, None, m, thr))) :+
-      ("community" -> ((thr: Long) =>
-        Subgraphs.encloseAndLabelCommunity(edges, cands, 2, None, thr)))
+    def runs(cands: DataFrame): Seq[(String, () => DataFrame)] =
+      Seq("enclosing", "union").map(m => m -> (() =>
+        Subgraphs.encloseAndLabel(edges, cands, 2, None, m))) :+
+      ("community" -> (() => Subgraphs.encloseAndLabelCommunity(edges, cands, 2)))
     val once = runs(Seq(("e", 10L, 13L)).toDF("edge_id", "head", "tail"))
     val twice = runs(Seq(("e", 10L, 13L), ("e", 10L, 13L)).toDF("edge_id", "head", "tail"))
-    for (((name, one), (_, two)) <- once.zip(twice); thr <- Seq(1L << 16, 0L)) {
-      val want = one(thr).collect().map(_.toString).sorted.toSeq
-      assert(want.nonEmpty && two(thr).collect().map(_.toString).sorted.toSeq == want, s"$name/$thr")
-    }
+    for (((name, one), (_, two)) <- once.zip(twice); rows <- Seq(DefaultDriverRows, 0))
+      withDriverRows(rows) {
+        val want = one().collect().map(_.toString).sorted.toSeq
+        assert(want.nonEmpty && two().collect().map(_.toString).sorted.toSeq == want, s"$name/$rows")
+      }
   }
 
   test("an edge_id repeated with different roots is rejected on both paths") {
     val cands = Seq(("e", 10L, 13L), ("e", 10L, 13L), ("e", 3L, 4L))
       .toDF("edge_id", "head", "tail")
-    val runs: Seq[(String, Long => DataFrame)] =
-      Seq("enclosing", "union").map(m => m -> ((thr: Long) =>
-        Subgraphs.encloseAndLabel(edges, cands, 2, None, m, thr))) :+
-      ("community" -> ((thr: Long) =>
-        Subgraphs.encloseAndLabelCommunity(edges, cands, 2, None, thr)))
-    for ((name, run) <- runs; thr <- Seq(1L << 16, 0L)) {
-      val ex = intercept[IllegalArgumentException](run(thr).collect())
-      assert(ex.getMessage.contains("edge_id e "), s"$name/$thr: ${ex.getMessage}")
+    val runs: Seq[(String, () => DataFrame)] =
+      Seq("enclosing", "union").map(m => m -> (() =>
+        Subgraphs.encloseAndLabel(edges, cands, 2, None, m))) :+
+      ("community" -> (() => Subgraphs.encloseAndLabelCommunity(edges, cands, 2)))
+    for ((name, run) <- runs; rows <- Seq(DefaultDriverRows, 0)) {
+      val ex = intercept[IllegalArgumentException](withDriverRows(rows)(run().collect()))
+      assert(ex.getMessage.contains("edge_id e "), s"$name/$rows: ${ex.getMessage}")
     }
   }
 }

@@ -90,9 +90,9 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     // enough keys that a one-task sort would be a real bottleneck shape
     val keys = (0 until 5000).map(i => f"K:${(i * 2654435761L) % 1000000}%07d").distinct
-    // smallThreshold=0 forces the distributed ranking (the adaptive
+    // driverRows = 0 forces the distributed ranking (the adaptive
     // default would window-sort a 5000-key set on one task, by design)
-    val dict = graft.core.Ids.dictionary(keys.toDF("k"), "k", smallThreshold = 0)
+    val dict = TestSpark.withDriverRows(0)(graft.core.Ids.dictionary(keys.toDF("k"), "k"))
     val plan = planOf(dict)
     assert(!plan.contains("SinglePartition"),
       s"dictionary ranking funnels through one task:\n$plan")

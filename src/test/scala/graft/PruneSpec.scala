@@ -155,7 +155,7 @@ class PruneSpec extends AnyFunSuite {
 
   // -------------------------------------------------------------- splits
 
-  test("seeded split: deterministic, ratios sane, leakage guard passes") {
+  test("seeded split: deterministic, 70/15/15 ratios within tolerance") {
     val triples = (0 until 2000).map(i => (s"s$i", "p", s"o$i"))
       .toDF("subject", "predicate", "object")
     // no separate leakage check: a triple's split is a function of the

@@ -17,6 +17,19 @@ object TestSpark {
     s
   }
 
+  /** Runs `body` with the driver-or-distributed switch
+    * (`graft.core.Session.driverRows`) at `n` rows, then restores the
+    * previous value, also when `body` throws. At 0 every size-switched
+    * operator takes its distributed path.
+    */
+  def withDriverRows[A](n: Int)(body: => A): A = {
+    val key = graft.core.Session.DriverRowsConf
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, n.toLong)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Runs `body` on a fresh directory under java.io.tmpdir and deletes
     * the directory tree when the block ends, also when it throws.
     */
