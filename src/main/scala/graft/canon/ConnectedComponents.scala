@@ -2,6 +2,7 @@ package graft.canon
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Connected components via alternating large-star / small-star rounds
   * implemented as iterative DataFrame self-joins under AQE — the exact
@@ -126,13 +127,15 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     // MIN ordering must match the column's native ordering, so the
     // union-find runs on the original type (numeric vs string), not on
-    // a lossy string cast ("10" < "2" but 2 < 10). The bounded probe's
-    // rows are the union-find input: one job, nothing read twice.
+    // a lossy string cast ("10" < "2" but 2 < 10), and strings compare
+    // as Spark compares them on the distributed path: by UTF-8 bytes,
+    // not by the UTF-16 units of `String.compareTo`, which order
+    // U+1F600 below U+FFFD. The bounded probe's rows are the union-find
+    // input: one job, nothing read twice.
     val (c0, c1) = (edges.columns(0), edges.columns(1))
     val idType = edges.schema(c0).dataType
     val isNumeric = idType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-    def unionFind[T: Ordering: scala.reflect.ClassTag](pairs: Array[(T, T)]): Array[(T, T)] = {
-      val ord = implicitly[Ordering[T]]
+    def unionFind[T: scala.reflect.ClassTag](pairs: Array[(T, T)], ord: Ordering[T]): Array[(T, T)] = {
       val parent = scala.collection.mutable.Map[T, T]()
       // iterative find (walk to root, then compress) — chain-shaped
       // inputs near the 64k threshold would overflow the stack with a
@@ -157,8 +160,10 @@ object ConnectedComponents {
       .fold(distributed(edges, maxIter)) { local =>
         import spark.implicits._
         val cc =
-          if (isNumeric) unionFind(local.map(r => (r.getLong(0), r.getLong(1)))).toSeq.toDF()
-          else unionFind(local.map(r => (r.getString(0), r.getString(1)))).toSeq.toDF()
+          if (isNumeric)
+            unionFind(local.map(r => (r.getLong(0), r.getLong(1))), Ordering.Long).toSeq.toDF()
+          else unionFind(local.map(r => (r.getString(0), r.getString(1))),
+            Ordering.by[String, UTF8String](UTF8String.fromString)).toSeq.toDF()
         cc.select(col("_1").cast(idType).as("id"), col("_2").cast(idType).as("component"))
       }
   }

@@ -58,21 +58,21 @@ object Ids {
     * broadcast, join) that dwarf a one-task sort of a few thousand keys
     * — while anything larger takes [[globalRowNumber]] so no full-graph
     * node set ever funnels through one task. Both paths produce
-    * IDENTICAL ids (global lexicographic rank). The probe counts rather
-    * than collects, so the small path still sorts in Spark: Spark
-    * orders strings by UTF-8 bytes, the JVM's `String` by UTF-16 units.
+    * IDENTICAL ids (global lexicographic rank). The probe is
+    * [[Session.collectIfSmall]], but only its verdict is used: the
+    * small path still sorts in Spark, which orders strings by UTF-8
+    * bytes, where the JVM's `String` orders by UTF-16 units.
     * `spark.graft.driverRows=0` forces the distributed ranking.
     */
   def dictionary(df: DataFrame, keyCol: String, idCol: String = "id"): DataFrame = {
     val distinct = df.select(col(keyCol)).distinct()
-    val th = Session.driverRows(df.sparkSession)
-    if (th > 0) {
+    if (Session.driverRows(df.sparkSession) > 0) {
       // materialize the distinct ONCE before probing: without it the
-      // probe's limit+count runs the full aggregation and the chosen
-      // path re-runs the identical distinct from scratch — doubling the
-      // dominant cost exactly in the large-input case
+      // probe runs the full aggregation and the chosen path runs the
+      // identical distinct a second time — doubling the dominant cost
+      // exactly in the large-input case
       val mat = distinct.localCheckpoint(true)
-      if (mat.limit(th).count() < th)
+      if (Session.collectIfSmall(mat).isDefined)
         mat.withColumn(idCol,
           row_number().over(Window.orderBy(col(keyCol))).cast("long"))
       else globalRowNumber(mat, keyCol, idCol)

@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.SQLExecution
 
 /** The one Spark session configuration of the engine's mains: the one
   * `graft.Bench` runs with, so a main measures or prints what the bench
@@ -25,13 +27,27 @@ object Session {
 
   /** The switch's bounded probe: `df`'s rows when it has fewer than
     * [[driverRows]] of them, else None. The probe reads at most that
-    * many rows in one job, and its answer already is the driver path's
-    * input; at 0 it starts no job.
+    * many rows, scanning partitions incrementally as
+    * `df.limit(th).collect()` does, and its answer already is the driver
+    * path's input; at 0 it starts no job.
+    *
+    * It runs `executeTake`, the call a collected limit makes, on `df`'s
+    * own plan rather than under a Limit node: Spark names a limit's
+    * generated counter from a sequence that grows across queries, so
+    * every limit compiles new classes, while `df`'s plan finds its
+    * compiled classes in the code-generation cache from the second call on.
     */
   def collectIfSmall(df: DataFrame): Option[Array[Row]] = {
     val th = driverRows(df.sparkSession)
     if (th <= 0) None
-    else Some(df.limit(th).collect()).filter(_.length < th)
+    else {
+      val qe = df.queryExecution
+      val rows = SQLExecution.withNewExecutionId(qe, Some("collectIfSmall")) {
+        qe.executedPlan.executeTake(th)
+      }
+      val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+      Some(rows.map(toRow)).filter(_.length < th)
+    }
   }
 
   /** `local[N]` parallelism: `SPARK_GRAFT_CPUS`, else every core. */

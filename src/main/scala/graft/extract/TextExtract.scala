@@ -1,7 +1,5 @@
 package graft.extract
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -9,11 +7,10 @@ import org.apache.spark.sql.functions._
   *
   * The north rule requires byte-identical extracted text per url, so the
   * transform is a pure function of the html bytes, defined ONCE as a
-  * regex pipeline and provided in two exactly-agreeing forms:
-  *
-  *  - [[extractTextCol]]: Catalyst Column (regexp_replace chain, fully
-  *    whole-stage-codegen'd — no UDF in the hot path);
-  *  - [[extractText]]: plain Scala (golden tests / oracle).
+  * regex pipeline over Catalyst Columns ([[extractTextCol]]: a
+  * regexp_replace chain, fully whole-stage-codegen'd — no UDF in the hot
+  * path). ExtractSpec runs the same patterns through `String.replaceAll`
+  * and checks both forms against the fixture's stored text.
   *
   * Semantics: take <body> content; drop <script>/<style> blocks; replace
   * every remaining tag with a space; decode the 6 standard entities;
@@ -21,11 +18,15 @@ import org.apache.spark.sql.functions._
   */
 object TextExtract {
 
-  private val bodyRe = "(?is).*<body[^>]*>(.*?)</body>.*"
-  private val scriptRe = "(?is)<script[^>]*>.*?</script>"
-  private val styleRe = "(?is)<style[^>]*>.*?</style>"
-  private val tagRe = "(?s)<[^>]*>"
-  private val wsRe = "\\s+"
+  private[graft] val bodyRe = "(?is).*<body[^>]*>(.*?)</body>.*"
+  private[graft] val scriptRe = "(?is)<script[^>]*>.*?</script>"
+  private[graft] val styleRe = "(?is)<style[^>]*>.*?</style>"
+  private[graft] val tagRe = "(?s)<[^>]*>"
+  private[graft] val wsRe = "\\s+"
+  /** Entity decodings in application order: &amp; LAST so &amp;lt; -> &lt; stays literal. */
+  private[graft] val entities = Seq(
+    ("&lt;", "<"), ("&gt;", ">"), ("&quot;", "\""), ("&#39;", "'"),
+    ("&apos;", "'"), ("&amp;", "&"))
 
   /** Column form — used by the pipeline; codegen-friendly. */
   def extractTextCol(html: Column): Column = {
@@ -33,23 +34,7 @@ object TextExtract {
     val body = regexp_replace(s, bodyRe, "$1")
     val noScript = regexp_replace(regexp_replace(body, scriptRe, " "), styleRe, " ")
     val noTags = regexp_replace(noScript, tagRe, " ")
-    val decoded = Seq(
-      ("&lt;", "<"), ("&gt;", ">"), ("&quot;", "\""), ("&#39;", "'"),
-      ("&apos;", "'"), ("&amp;", "&") // &amp; LAST so &amp;lt; -> &lt; stays literal
-    ).foldLeft(noTags) { case (c, (from, to)) => regexp_replace(c, from, to) }
+    val decoded = entities.foldLeft(noTags) { case (c, (from, to)) => regexp_replace(c, from, to) }
     trim(regexp_replace(decoded, wsRe, " "))
-  }
-
-  /** Scala form — must agree byte-for-byte with [[extractTextCol]]. */
-  def extractText(html: Array[Byte]): String = {
-    val s = new String(html, StandardCharsets.UTF_8)
-    val body = s.replaceAll(bodyRe, "$1")
-    val noScript = body.replaceAll(scriptRe, " ").replaceAll(styleRe, " ")
-    val noTags = noScript.replaceAll(tagRe, " ")
-    val decoded = Seq(
-      ("&lt;", "<"), ("&gt;", ">"), ("&quot;", "\""), ("&#39;", "'"),
-      ("&apos;", "'"), ("&amp;", "&")
-    ).foldLeft(noTags) { case (c, (from, to)) => c.replaceAll(from, to) }
-    decoded.replaceAll(wsRe, " ").trim
   }
 }

@@ -15,19 +15,19 @@ import graft.core.Ids
   * video through the JDK's multi-frame animated-GIF reader
   * ([[parseGif]]/[[encodeGif]] — the one moving-picture container
   * the JVM decodes; MP4/WebM have no JDK codec). Each codec has ONE
-  * parse, returning exact integer sums plus geometry ([[Pooled]]); the
-  * query operators emit those sums and [[featurize]]'s float features
-  * are normalized from them. Each round-trip is lossless (PNG over
-  * TYPE_INT_RGB; PCM; GIF over an indexed 256-gray palette), which is
-  * what lets the q83/q84/q85 DuckDB oracles hash-check the whole codec
-  * paths: each oracle recomputes the sums from its closed-form
-  * generator ([[synthGray]] / [[synthSample]] / [[synthFrameGray]]) —
-  * equality holds iff the engine's real round-trip preserved every
-  * sample. [[decodeStub]] survives only as the declared fallback for
-  * payload bytes no JVM codec can parse (deterministic fake features
-  * from the raw bytes). Every operator runs through one per-row decode
-  * step ([[decodeEach]]): rows balanced by `media_id` over the
-  * session's cores, each flat-mapped to its output rows.
+  * parse, returning exact integer sums plus geometry ([[Pooled]]), and
+  * the query operators emit those sums. Each round-trip is lossless
+  * (PNG over TYPE_INT_RGB; PCM; GIF over an indexed 256-gray palette),
+  * which is what lets the q83/q84/q85 DuckDB oracles hash-check the
+  * whole codec paths: each oracle recomputes the sums from its
+  * closed-form generator ([[synthGray]] / [[synthSample]] /
+  * [[synthFrameGray]]) — equality holds iff the engine's real
+  * round-trip preserved every sample. [[featurize]] maps every row
+  * through the declared stub [[decodeStub]] (deterministic fake
+  * features from the raw bytes), the seam q78 composes with the ANN
+  * index. Every operator runs through one per-row decode step
+  * ([[decodeEach]]): rows balanced by `media_id` over the session's
+  * cores, each flat-mapped to its output rows.
   */
 object Multimodal {
 
@@ -113,15 +113,9 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** PNG magic sniff — the featurize dispatch guard. */
-  def isPng(payload: Array[Byte]): Boolean =
-    payload.length > 8 &&
-      payload(0) == 0x89.toByte && payload(1) == 'P' &&
-      payload(2) == 'N' && payload(3) == 'G'
-
   /** REAL decode: JDK ImageIO → gray (blue channel) block sums. Loud on
-    * corrupt bytes: a payload that sniffed as PNG but fails to decode is
-    * broken input, never silently fake features.
+    * corrupt bytes: a payload that fails to decode is broken input,
+    * never silently fake features.
     */
   def parsePng(payload: Array[Byte]): Pooled = {
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
@@ -188,16 +182,9 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** RIFF/WAVE magic sniff — the featurize dispatch guard. */
-  def isWav(payload: Array[Byte]): Boolean =
-    payload.length > 12 &&
-      payload(0) == 'R' && payload(1) == 'I' && payload(2) == 'F' &&
-      payload(3) == 'F' && payload(8) == 'W' && payload(9) == 'A' &&
-      payload(10) == 'V' && payload(11) == 'E'
-
   /** REAL audio decode: JDK WAV parser → exact-integer sample sums over
-    * [[featureDim]] equal windows. Loud on corrupt bytes or a
-    * non-PCM-16/mono/LE stream.
+    * [[featureDim]] equal windows. Loud on corrupt bytes, on a
+    * non-PCM-16/mono/LE stream and on a clip with no samples.
     */
   def parseWav(payload: Array[Byte]): Pooled = {
     val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
@@ -209,7 +196,7 @@ object Multimodal {
       s"unsupported audio stream: $fmt")
     val bytes = in.readAllBytes()
     val n = bytes.length / 2
-    require(n % featureDim == 0, s"$n samples not divisible into $featureDim windows")
+    require(n > 0 && n % featureDim == 0, s"$n samples not divisible into $featureDim windows")
     val per = n / featureDim
     val out = new Array[Long](featureDim)
     var w = 0
@@ -281,12 +268,6 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** GIF magic sniff — the dispatch guard. */
-  def isGif(payload: Array[Byte]): Boolean =
-    payload.length > 6 &&
-      payload(0) == 'G' && payload(1) == 'I' && payload(2) == 'F' &&
-      payload(3) == '8'
-
   /** REAL video decode: JDK GIF reader → every frame in order, each
     * pooled like an image with its OWN geometry (delta-optimized GIFs
     * store later frames as smaller sub-rectangles). Loud on corrupt
@@ -307,39 +288,6 @@ object Multimodal {
     } finally { rd.dispose(); iis.close() }
   }
 
-  // ------------------------------------------- features from the parses
-
-  /** Float features on the [[MediaFeatures]] contract: each part's sums
-    * become means over that part's own sample count, the means are
-    * averaged across parts (GIF frames; one part otherwise), then mapped
-    * to `mean / range - center` — [-0.5, 0.5) for gray (range 255,
-    * center 0.5) and signed PCM (range 65536, center 0), the stub's
-    * shape and range, so the downstream similarity seam is
-    * path-agnostic. Loud on an empty part (0/0 would be silent all-NaN
-    * features).
-    */
-  private def normalize(parts: Seq[Pooled], range: Float, center: Float): Array[Float] = {
-    val acc = new Array[Float](featureDim)
-    parts.foreach { p =>
-      val per = p.width * p.height / featureDim
-      require(per > 0, s"empty media (${p.width}x${p.height} samples)")
-      var i = 0; while (i < featureDim) { acc(i) += p.sums(i).toFloat / per; i += 1 }
-    }
-    acc.map(v => v / parts.size / range - center)
-  }
-
-  /** Real features of a PNG image: 4×4 block means. */
-  def decodeImage(payload: Array[Byte]): Array[Float] =
-    normalize(Seq(parsePng(payload)), 255f, 0.5f)
-
-  /** Real features of a WAV clip: 16 window means. */
-  def decodeAudio(payload: Array[Byte]): Array[Float] =
-    normalize(Seq(parseWav(payload)), 65536f, 0f)
-
-  /** Real features of a GIF clip: per-frame 4×4 block means averaged across frames. */
-  def decodeVideo(payload: Array[Byte]): Array[Float] =
-    normalize(parseGif(payload), 255f, 0.5f)
-
   // ----------------------------------------------------- the operators
 
   // one counter per live SparkContext (this JVM only ever holds one;
@@ -348,10 +296,11 @@ object Multimodal {
   private val fallbackCounters = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.SparkContext, org.apache.spark.util.LongAccumulator]()
 
-  /** The session-wide codec-fallback accumulator [[featurize]]
-    * increments. Bench reads it after the query suite and records
-    * `stub_fallback_rows` (expected 0 on the fixtures — a nonzero value
-    * is a codec regression signal).
+  /** The session-wide codec-fallback accumulator. Nothing increments it
+    * now that [[featurize]] has no real-codec branch to fall back from;
+    * it stays because the frozen Bench and the perfbench harness read it
+    * (`stub_fallback_rows`, `multimodal.stub_fallback_rows`), which
+    * therefore read 0.
     */
   def stubFallbackCounter(sc: org.apache.spark.SparkContext)
       : org.apache.spark.util.LongAccumulator =
@@ -371,37 +320,15 @@ object Multimodal {
       .repartition(media.sparkSession.sparkContext.defaultParallelism, col("media_id"))
       .flatMap(f)
 
-  /** Bulk featurization. Dispatch: image rows whose payload really is a
-    * PNG, audio rows whose payload really is a RIFF/WAVE, and video rows
-    * whose payload really is a GIF go through the REAL JDK codecs;
-    * mismatched bytes — and valid-but-unsupported variants the real
-    * decoder rejects (stereo WAV, non-4-divisible geometry, empty clips)
-    * — keep the declared stub instead of failing the bulk job.
+  /** Bulk featurization through the declared stub: each row's features
+    * are [[decodeStub]] of its payload bytes, whatever its `kind`. The
+    * real codecs are reached through their parses, whose exact sums
+    * [[imageBlockSums]], [[audioWindowSums]] and [[videoFrameSums]] emit.
     */
   def featurize(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
-    // exception-path fallbacks are COUNTED on the session-wide
-    // [[stubFallbackCounter]]: a systematic codec regression in this bulk
-    // path would otherwise degrade every row to stub features silently.
-    // Counts are at-least-once under task retry/speculation
-    // (observability, not an exact metric). Declared stub dispatch
-    // (kind/magic-byte mismatch) is NOT counted — that path is the
-    // documented contract, not decay. The hash-gated query operators
-    // stay loud by calling the parses directly.
-    val stubFallbacks = stubFallbackCounter(media.sparkSession.sparkContext)
     decodeEach(media) { m =>
-      val feats =
-        try {
-          if (m.kind == "image" && isPng(m.payload)) decodeImage(m.payload)
-          else if (m.kind == "audio" && isWav(m.payload)) decodeAudio(m.payload)
-          else if (m.kind == "video" && isGif(m.payload)) decodeVideo(m.payload)
-          else decodeStub(m.payload)
-        } catch {
-          case scala.util.control.NonFatal(_) =>
-            stubFallbacks.add(1L)
-            decodeStub(m.payload)
-        }
-      Iterator.single(MediaFeatures(m.media_id, m.kind, m.payload.length, feats))
+      Iterator.single(MediaFeatures(m.media_id, m.kind, m.payload.length, decodeStub(m.payload)))
     }
   }
 

@@ -9,35 +9,23 @@ import org.apache.spark.sql.functions._
   * Semantics: key = (subject, object) pair. Original rows whose pair is
   * NOT present in the refilled set keep their original predicate; pairs
   * present in both take the refilled predicate. The reference asserts
-  * output row count == original row count (cell 20 l.81-85) — preserved
-  * here and surfaced via [[reconcileChecked]].
+  * output row count == original row count (cell 20 l.81-85).
   *
-  * The reference builds python sets of 's|||o' strings; here it is a
-  * left_anti + left_semi pair on the two-column key — equi-joins Catalyst
-  * can broadcast or shuffle-hash as sizes dictate.
+  * The reference builds python sets of 's|||o' strings and splits them
+  * into a left_anti part and a left_semi part; PruneSpec keeps that
+  * anti+semi form as the oracle this operator is checked against.
   */
 object AntiJoinReconcile {
 
-  def reconcile(original: DataFrame, refilled: DataFrame): DataFrame = {
-    val key = Seq("subject", "object")
-    val keepOriginal = original.join(refilled.select(key.map(col): _*).distinct(),
-      key, "left_anti")
-    val takeRefilled = refilled.join(original.select(key.map(col): _*).distinct(),
-      key, "left_semi")
-    keepOriginal.select("subject", "predicate", "object")
-      .unionAll(takeRefilled.select("subject", "predicate", "object"))
-  }
-
-  /** Single-join form of [[reconcile]] for KEY-UNIQUE inputs — both
-    * sides at most one row per (subject, object), which is q06's shape
-    * (original = a groupBy over the key, refilled = a distinct) and the
-    * reference's data guarantee. Algebra: with unique keys, "original
-    * rows not in refilled keep their predicate" + "pairs in both take
-    * the refilled predicate" is exactly one left outer join with
-    * coalesce — the anti+semi pair (which evaluates EACH input twice:
-    * once as a join probe, once as the other join's key set) collapses
-    * to a single join evaluating each input once. Identical multiset
-    * output (PruneSpec differential test); same row-count invariant.
+  /** Reconcile for KEY-UNIQUE inputs — both sides at most one row per
+    * (subject, object), which is q06's shape (original = a groupBy over
+    * the key, refilled = a distinct) and the reference's data
+    * guarantee. Algebra: with unique keys, "original rows not in
+    * refilled keep their predicate" + "pairs in both take the refilled
+    * predicate" is exactly one left outer join with coalesce, which
+    * evaluates each input once where the anti+semi pair evaluates each
+    * twice. The output has one row per original row, so the reference's
+    * row-count invariant holds by construction.
     */
   def reconcileUnique(original: DataFrame, refilled: DataFrame): DataFrame =
     original
@@ -45,17 +33,4 @@ object AntiJoinReconcile {
         col("predicate").as("__rp")), Seq("subject", "object"), "left")
       .select(col("subject"),
         coalesce(col("__rp"), col("predicate")).as("predicate"), col("object"))
-
-  /** Reconcile + the reference's row-count invariant. Throws
-    * IllegalStateException on violation (requires (s,o) to be unique per
-    * side, which the reference's data guarantees).
-    */
-  def reconcileChecked(original: DataFrame, refilled: DataFrame): DataFrame = {
-    val out = reconcile(original, refilled)
-    val (n0, n1) = (original.count(), out.count())
-    if (n0 != n1)
-      throw new IllegalStateException(
-        s"anti-join reconciliation changed row count: original=$n0 output=$n1")
-    out
-  }
 }

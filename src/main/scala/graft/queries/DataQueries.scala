@@ -870,7 +870,9 @@ object DataQueries {
     // -------------------------------------------------- similarity
     QueryDef("q42_cosine_topk",
       // brute-force cosine top-3 per query vector (native CosineSim —
-      // bit-equal to the HOF dot product, OpsSpec parity test)
+      // bit-equal to the HOF dot product, OpsSpec parity test). Ranks on
+      // the 6-place rounded cosine, as the oracle does, so it does not
+      // share Ann.rerank, which ranks on the raw cosine.
       (s, d) => {
         val emb = table(s, d, "embeddings")
           .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))

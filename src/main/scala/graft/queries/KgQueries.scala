@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,6 +19,20 @@ object KgQueries {
     * width bounds a task's sort. Results are exact for any width.
     */
   private val RankChunk = 1L << 26
+
+  /** q15 and q55's ranking base over the triples: the label `pos`
+    * (value > 100), `event_id`, its score bucket `__b` = event_id % 100
+    * and its chunk `__g` = event_id DIV [[RankChunk]] (see q15).
+    */
+  private def rankBase(s: SparkSession, d: String): DataFrame =
+    triples(s, d).select(
+      (col("value") > 100.0).cast("int").as("pos"),
+      col("event_id"),
+      expr("event_id % 100").as("__b"),
+      expr(s"event_id DIV ${RankChunk}L").as("__g"))
+
+  /** The local rank order inside one (__b, __g) group of [[rankBase]]. */
+  private def inGroup = Window.partitionBy(col("__b"), col("__g")).orderBy(col("event_id"))
 
   /** Width of the event_id buckets whose counts q64 collects to the
     * driver; exact for any width.
@@ -254,14 +269,8 @@ object KgQueries {
         // (__b,__g), window + partial agg in the same stage), then a
         // metadata-sized single-partition window over the per-group
         // totals (#groups = 100 * ceil(max_id / RankChunk) rows of longs).
-        val base = triples(s, d).select(
-          (col("value") > 100.0).cast("int").as("pos"),
-          col("event_id"),
-          expr("event_id % 100").as("__b"),
-          expr(s"event_id DIV ${RankChunk}L").as("__g"))
-        val w = Window.partitionBy(col("__b"), col("__g")).orderBy(col("event_id"))
-        val grp = base
-          .withColumn("__rk", row_number().over(w).cast("long"))
+        val grp = rankBase(s, d)
+          .withColumn("__rk", row_number().over(inGroup).cast("long"))
           .groupBy(col("__b"), col("__g"))
           .agg(count(lit(1)).as("__cnt"),
             sum(col("pos")).cast("long").as("__pcnt"),
@@ -317,11 +326,7 @@ object KgQueries {
         // needed because the bucketing is deterministic), computes local
         // rank + local running positive count per group in one window,
         // and a broadcast join shifts both by the group offsets.
-        val base = triples(s, d).select(
-          (col("value") > 100.0).cast("int").as("pos"),
-          col("event_id"),
-          expr("event_id % 100").as("__b"),
-          expr(s"event_id DIV ${RankChunk}L").as("__g"))
+        val base = rankBase(s, d)
         val offW = Window.orderBy(col("__b").desc, col("__g"))
           .rowsBetween(Window.unboundedPreceding, -1)
         val offs = base.groupBy(col("__b"), col("__g"))
@@ -329,10 +334,9 @@ object KgQueries {
           .withColumn("__off", coalesce(sum(col("__cnt")).over(offW), lit(0L)))
           .withColumn("__poff", coalesce(sum(col("__pcnt")).over(offW), lit(0L)))
           .select(col("__b"), col("__g"), col("__off"), col("__poff"))
-        val w = Window.partitionBy(col("__b"), col("__g")).orderBy(col("event_id"))
-        val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val cum = inGroup.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         base
-          .withColumn("__rk", row_number().over(w).cast("long"))
+          .withColumn("__rk", row_number().over(inGroup).cast("long"))
           .withColumn("__cp", sum(col("pos")).over(cum).cast("long"))
           .filter(col("pos") === 1)
           .join(broadcast(offs), Seq("__b", "__g"))

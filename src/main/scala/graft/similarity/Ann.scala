@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 
 /** Approximate nearest neighbor over embedding columns.
   *
-  * Baseline: brute-force cosine top-k (also exposed as driver query
-  * q42). Scale path: random-hyperplane LSH — L hash tables of P
-  * Rademacher hyperplanes each; vectors sharing a bucket in ANY table
-  * are candidates; exact cosine reranks candidates. All hyperplanes are
+  * Baseline: brute-force cosine top-k, the driver query q42 (AnnSpec
+  * measures recall against [[rerank]] over the full cross join). Scale
+  * path: random-hyperplane LSH — L hash tables of P Rademacher
+  * hyperplanes each; vectors sharing a bucket in ANY table are
+  * candidates; exact cosine reranks candidates. All hyperplanes are
   * derived from splitmix64, so signatures are deterministic across
   * retries and engines.
   *
@@ -63,15 +64,13 @@ object Ann {
     rerank(Banding.pairs(sig(queries, "qv"), sig(emb, "v"), "keys", tables, probes), k)
   }
 
-  /** Brute-force cosine top-k (exact baseline). */
-  def bruteTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    rerank(queries.crossJoin(emb), k)
-
   /** The shared top-k tail: candidate (qid, qv, id, v) rows minus
     * self-matches, exact cosine, the k best per query (ties by id).
-    * Returns (qid, nn_id, cos, rn).
+    * Returns (qid, nn_id, cos, rn). Ranks on the raw cosine; q42 keeps
+    * its own brute force because it ranks on the 6-place rounded cosine,
+    * as its oracle does.
     */
-  private def rerank(cands: DataFrame, k: Int): DataFrame =
+  private[graft] def rerank(cands: DataFrame, k: Int): DataFrame =
     cands.filter(col("qid") =!= col("id"))
       .withColumn("cos", graft.functions.VectorOps.cosine(col("qv"), col("v")))
       .withColumn("rn", row_number().over(

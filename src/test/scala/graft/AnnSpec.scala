@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +19,10 @@ class AnnSpec extends AnyFunSuite {
   lazy val queries = emb.filter(col("id") < 10)
     .select(col("id").as("qid"), col("v").as("qv"))
 
+  /** Exact top-k baseline: the ANN paths' own rerank over every pair. */
+  private def bruteTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    Ann.rerank(queries.crossJoin(emb), k)
+
   test("LSH top-k returns valid, deterministic, cosine-ordered results") {
     val a = Ann.lshTopK(emb, queries, 3).collect()
     val b = Ann.lshTopK(emb, queries, 3).collect()
@@ -33,7 +38,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("LSH candidates are a subset of brute-force domain and recall is sane") {
-    val brute = Ann.bruteTopK(emb, queries, 3).collect()
+    val brute = bruteTopK(emb, queries, 3).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"))).toSet
     val lsh = Ann.lshTopK(emb, queries, 3).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"))).toSet
@@ -57,7 +62,7 @@ class AnnSpec extends AnyFunSuite {
       assert(sorted.map(_.getAs[Double]("cos")).toSeq ==
         sorted.map(_.getAs[Double]("cos")).sortBy(-(_: Double)).toSeq)
     }
-    val brute = Ann.bruteTopK(emb, queries, 3).collect()
+    val brute = bruteTopK(emb, queries, 3).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"))).toSet
     val ivf = a.map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"))).toSet
     val recall = (brute intersect ivf).size.toDouble / brute.size
@@ -88,7 +93,7 @@ class AnnSpec extends AnyFunSuite {
       (1L, Seq(0.0, 0.0)), (2L, Seq(1.0, 0.0)), (3L, Seq(0.6, 0.8)))
       .toDF("id", "v")
     val q = Seq((10L, Seq(1.0, 0.0))).toDF("qid", "qv")
-    val rows = Ann.bruteTopK(corpus, q, 3).collect()
+    val rows = bruteTopK(corpus, q, 3).collect()
       .sortBy(_.getAs[Int]("rn"))
     // NaN would sort FIRST under desc; the guard emits 0.0 so the
     // degenerate vector lands last
@@ -96,7 +101,7 @@ class AnnSpec extends AnyFunSuite {
     assert(rows.last.getAs[Double]("cos") == 0.0)
     // zero-norm QUERY: all cosines 0.0, no NaN anywhere
     val qz = Seq((11L, Seq(0.0, 0.0))).toDF("qid", "qv")
-    val zr = Ann.bruteTopK(corpus, qz, 3).collect()
+    val zr = bruteTopK(corpus, qz, 3).collect()
     assert(zr.forall(r => r.getAs[Double]("cos") == 0.0))
   }
 
@@ -140,7 +145,7 @@ class AnnSpec extends AnyFunSuite {
     val qs = big.filter(col("id") < 10)
       .select(col("id").as("qid"), col("v").as("qv"))
     val a = Ann.ivfTopK(big, qs, 3, c = 64, nprobe = 16).collect()
-    val brute = Ann.bruteTopK(big, qs, 3).collect()
+    val brute = bruteTopK(big, qs, 3).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"))).toSet
     val got = a.map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"))).toSet
     val recall = (brute intersect got).size.toDouble / brute.size
@@ -157,7 +162,7 @@ class AnnSpec extends AnyFunSuite {
       .filter(col("qid") < 10)
       .select(col("qid"), col("nn_id"), col("rn"))
       .as[(Long, Long, Int)].collect().toSet
-    val brute = Ann.bruteTopK(emb, queries, 3)
+    val brute = bruteTopK(emb, queries, 3)
       .select(col("qid"), col("nn_id"), col("rn"))
       .as[(Long, Long, Int)].collect().toSet
     assert(q42 == brute)

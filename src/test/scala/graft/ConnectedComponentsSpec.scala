@@ -79,10 +79,22 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(sDist("3") == "10")
   }
 
+  test("driver union-find orders string ids by UTF-8 bytes, as the distributed path does") {
+    // U+1F600 is a surrogate pair, so it sorts below U+FFFD in UTF-16
+    // units but above it in UTF-8 bytes, the order Spark's min uses
+    val edges = Seq("\uFFFD" -> "\uD83D\uDE00").toDF("src", "dst")
+    val want = Map("\uFFFD" -> "\uFFFD", "\uD83D\uDE00" -> "\uFFFD")
+    def roots = ConnectedComponents.run(edges).as[(String, String)].collect().toMap
+    assert(roots == want)
+    assert(TestSpark.withDriverRows(0)(roots) == want)
+  }
+
   test("driver fast paths start as many Spark jobs as before the shared probe") {
     // counts read before the size probe moved into graft.core.Session;
     // the KG build reaches CC through Canonicalize and the dictionary
-    // through KgPipeline, and q27 reaches CC
+    // through KgPipeline, and q27 reaches CC. The dictionary's count
+    // went from 6 to 5 when its limit-and-count probe became
+    // collectIfSmall
     def jobsOf(run: => Any): Int = TestBus.jobsDuring(spark.sparkContext)(run).size
     val long = Seq(2L -> 10L, 10L -> 3L, 7L -> 8L).toDF("src", "dst").localCheckpoint(true)
     val str = Seq("2" -> "10", "10" -> "3", "7" -> "8").toDF("src", "dst").localCheckpoint(true)
@@ -93,7 +105,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       "cc/string" -> jobsOf(ConnectedComponents.run(str).collect()),
       "allPairs" -> jobsOf(Bfs.allPairsDistances(und, 8).collect()),
       "dictionary" -> jobsOf(Ids.dictionary(keys, "k").collect()))
-    assert(got == Map("cc/long" -> 2, "cc/string" -> 2, "allPairs" -> 1, "dictionary" -> 6))
+    assert(got == Map("cc/long" -> 2, "cc/string" -> 2, "allPairs" -> 1, "dictionary" -> 5))
   }
 
   test("driver fast path survives a deep chain processed in descending order") {

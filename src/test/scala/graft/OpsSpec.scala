@@ -129,6 +129,9 @@ class OpsSpec extends AnyFunSuite {
       again.map(f => f.media_id -> f.features.toSeq).toMap)
     // kinds assigned
     assert(feats.map(_.kind).toSet == Set("image", "audio", "video"))
+    // every row takes the declared stub, whatever its kind
+    val payloads = media.collect().map(m => m.media_id -> m.payload).toMap
+    assert(feats.forall(f => f.features.toSeq == Multimodal.decodeStub(payloads(f.media_id)).toSeq))
   }
 
   test("multimodal features compose into the IVF ANN index end-to-end") {
@@ -160,30 +163,10 @@ class OpsSpec extends AnyFunSuite {
       for (y <- 0 until 16; x <- 0 until 16)
         expected((y / 4) * 4 + (x / 4)) += (id * 31 + x * 7 + y * 13) % 256
       val png = Multimodal.encodePng(id, 16, 16)
-      assert(Multimodal.isPng(png))
       val p = Multimodal.parsePng(png)
       assert((p.width, p.height) == (16, 16))
       assert(p.sums.toSeq == expected.toSeq, s"codec round-trip diverged for id=$id")
     }
-  }
-
-  test("featurize dispatch: real decode for PNG image rows, stub for the rest") {
-    val png = Multimodal.encodePng(42L, 16, 16)
-    val textBytes = "not an image".getBytes("UTF-8")
-    val media = Seq(
-      Multimodal.MediaRow(1L, "image", png, 16, 16), // real decoder
-      Multimodal.MediaRow(2L, "image", textBytes, 16, 16), // not PNG -> stub
-      Multimodal.MediaRow(3L, "audio", png, 16, 16) // kind gate -> stub
-    ).toDS()
-    val feats = Multimodal.featurize(media).collect()
-      .map(f => f.media_id -> f.features.toSeq).toMap
-    assert(feats(1L) == Multimodal.decodeImage(png).toSeq)
-    assert(feats(1L) != Multimodal.decodeStub(png).toSeq)
-    assert(feats(2L) == Multimodal.decodeStub(textBytes).toSeq)
-    assert(feats(3L) == Multimodal.decodeStub(png).toSeq)
-    // real features share the stub contract: dim 16, centered range
-    assert(feats(1L).length == Multimodal.featureDim)
-    assert(feats(1L).forall(v => v >= -0.5f && v < 0.5f))
   }
 
   test("corrupt image payload fails loud, never silently fake features") {
@@ -197,19 +180,21 @@ class OpsSpec extends AnyFunSuite {
       for (j <- 0 until 256)
         expected(j / 16) += (id * 131 + j * 17) % 65536 - 32768
       val wav = Multimodal.encodeWav(id, 256)
-      assert(Multimodal.isWav(wav))
       assert(Multimodal.parseWav(wav).sums.toSeq == expected.toSeq,
         s"audio codec round-trip diverged for id=$id")
     }
     // corrupt: RIFF magic but truncated body
     intercept[Exception](
       Multimodal.parseWav(Multimodal.encodeWav(1L, 256).take(24)))
+    // a header-only WAV is well formed but holds 0 samples: loud too,
+    // never 16 windows of 0/0
+    intercept[IllegalArgumentException](
+      Multimodal.parseWav(Multimodal.encodeWav(3L, 0)))
   }
 
   test("real GIF codec round-trip: per-frame block sums equal the formula") {
     for (id <- Seq(0L, 1L, 499L, 123456L)) {
       val gif = Multimodal.encodeGif(id, 4, 16, 16)
-      assert(Multimodal.isGif(gif))
       val frames = Multimodal.parseGif(gif)
       assert(frames.length == 4)
       for ((Multimodal.Pooled(w, h, sums), f) <- frames.zipWithIndex) {
@@ -225,30 +210,10 @@ class OpsSpec extends AnyFunSuite {
       Multimodal.parseGif("GIF89a-garbage".getBytes("UTF-8")))
   }
 
-  test("featurize dispatch: real audio decode for WAV rows, stub otherwise") {
-    val wav = Multimodal.encodeWav(9L, 256)
-    val gif = Multimodal.encodeGif(9L, 4, 16, 16)
-    val media = Seq(
-      Multimodal.MediaRow(1L, "audio", wav, 256, 1), // real decoder
-      Multimodal.MediaRow(2L, "audio", "noise".getBytes("UTF-8"), 0, 0), // stub
-      Multimodal.MediaRow(3L, "video", wav, 256, 1), // magic gate -> stub
-      Multimodal.MediaRow(4L, "video", gif, 16, 16) // real video decoder
-    ).toDS()
-    val feats = Multimodal.featurize(media).collect()
-      .map(f => f.media_id -> f.features.toSeq).toMap
-    assert(feats(1L) == Multimodal.decodeAudio(wav).toSeq)
-    assert(feats(2L) == Multimodal.decodeStub("noise".getBytes("UTF-8")).toSeq)
-    assert(feats(3L) == Multimodal.decodeStub(wav).toSeq)
-    assert(feats(4L) == Multimodal.decodeVideo(gif).toSeq)
-    assert(feats(4L).forall(v => v >= -0.5f && v < 0.5f))
-    assert(feats(1L).length == Multimodal.featureDim)
-    assert(feats(1L).forall(v => v >= -0.5f && v < 0.5f))
-  }
-
-  test("decodeVideo normalizes each GIF frame by its OWN geometry (delta-frame shape)") {
+  test("parseGif pools each GIF frame by its OWN geometry (delta-frame shape)") {
     // hand-build a 2-frame GIF whose second frame is a smaller
-    // sub-rectangle (the delta-optimized layout): a frame-0-sized
-    // divisor would mis-scale frame 1 by 4x
+    // sub-rectangle (the delta-optimized layout): pooling frame 1 with
+    // frame 0's 16x16 geometry would read past its 8x8 pixels
     val wr = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
     val bos = new java.io.ByteArrayOutputStream()
     val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
@@ -270,40 +235,12 @@ class OpsSpec extends AnyFunSuite {
       wr.writeToSequence(new javax.imageio.IIOImage(flat(8, 8, 200), null, null), null)
       wr.endWriteSequence()
     } finally { ios.close(); wr.dispose() }
-    val gif = bos.toByteArray
-    assert(Multimodal.isGif(gif))
-    // each flat frame's block mean equals its pixel value regardless of
-    // frame size, so the average of per-frame means is exactly 150
-    val feats = Multimodal.decodeVideo(gif)
-    val want = (150f / 2f / 255f) * 2f - 0.5f // (100/255 + 200/255)/2 - 0.5
-    assert(feats.length == Multimodal.featureDim)
-    feats.foreach(v => assert(math.abs(v - want) < 1e-6f,
-      s"per-frame normalization broken: $v vs $want"))
-  }
-
-  test("featurize degrades to the stub on decoder-rejected payloads instead of failing") {
-    // a header-only WAV passes the RIFF/WAVE sniff but decodeAudio
-    // rejects it loud (0 samples); featurize must not fail the job
-    val emptyWav = Multimodal.encodeWav(3L, 0)
-    assert(Multimodal.isWav(emptyWav))
-    intercept[Exception](Multimodal.decodeAudio(emptyWav))
-    val media = Seq(Multimodal.MediaRow(1L, "audio", emptyWav, 0, 1)).toDS()
-    // the degradation must be OBSERVABLE on the SESSION-WIDE counter
-    // (the one Bench reads into stub_fallback_rows): the exception-path
-    // fallback increments it, declared stub dispatch must not
-    val session = Multimodal.stubFallbackCounter(spark.sparkContext)
-    val before = session.value
-    val feats = Multimodal.featurize(media).collect()
-    assert(feats.length == 1)
-    assert(feats.head.features.toSeq == Multimodal.decodeStub(emptyWav).toSeq)
-    assert(session.value == before + 1L,
-      s"exception-path fallback not counted: $before -> ${session.value}")
-    val declared = Seq(Multimodal.MediaRow(2L, "image",
-      "not a png".getBytes("UTF-8"), 0, 0)).toDS()
-    Multimodal.featurize(declared).collect()
-    assert(session.value == before + 1L, "declared stub dispatch was counted")
-    assert(Multimodal.stubFallbackCounter(spark.sparkContext) eq session,
-      "counter must be one per SparkContext, not one per call")
+    // q85's path: one row per frame, each block of a flat frame sums
+    // its pixel value times that frame's own block area
+    val frames = Multimodal.parseGif(bos.toByteArray)
+    assert(frames.map(p => (p.width, p.height)) == Seq((16, 16), (8, 8)))
+    assert(frames(0).sums.toSeq == Seq.fill(16)(100L * 4 * 4))
+    assert(frames(1).sums.toSeq == Seq.fill(16)(200L * 2 * 2))
   }
 
   test("Md5MinHash == built-in split/shingle/md5/min form, incl. edge tokenization") {

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Session
 import graft.extract.TripleExtract
 import graft.fixtures.Fixtures
 import graft.link.EntityLink
@@ -223,5 +225,16 @@ class PlanSpec extends AnyFunSuite {
       s"benchmark overlap is not a broadcast semi join:\n$plan")
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
+  }
+
+  test("the size probe compiles no class on a second call over q27's input") {
+    // a limit names its generated counter from a sequence that grows
+    // across queries, so probing under a Limit compiled anew every call
+    def edges = graft.queries.Q.graphEdges(spark, sf)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    assert(Session.collectIfSmall(edges).exists(_.length == 175))
+    val before = compiles.getCount
+    assert(Session.collectIfSmall(edges).exists(_.length == 175))
+    assert(compiles.getCount - before == 0L)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -103,8 +104,6 @@ class PruneSpec extends AnyFunSuite {
       AssertionPruning.score(linked, ontology, degJoin = "bogus"))
   }
 
-  // ------------------------------------------------- anti-join reconcile
-
   test("hashSample boundary fractions: 1.0 keeps all rows, 0.0 keeps none") {
     // ADVICE r1: bound "10000" (5 chars) compared lexicographically against
     // 4-char prefixes excluded high-hash rows at fraction 1.0
@@ -116,6 +115,34 @@ class PruneSpec extends AnyFunSuite {
     assert(half > 200 && half < 300)
   }
 
+  // ------------------------------------------------- anti-join reconcile
+
+  /** The reference's own anti+semi form (Edge_Assignor.ipynb cell 20):
+    * original rows whose (subject, object) pair is not refilled, plus the
+    * refilled rows whose pair is original. It is the oracle that
+    * [[AntiJoinReconcile.reconcileUnique]] must match on key-unique
+    * inputs.
+    */
+  private def reconcileAntiSemi(original: DataFrame, refilled: DataFrame): DataFrame = {
+    val key = Seq("subject", "object")
+    val keepOriginal = original.join(refilled.select(key.map(col): _*).distinct(),
+      key, "left_anti")
+    val takeRefilled = refilled.join(original.select(key.map(col): _*).distinct(),
+      key, "left_semi")
+    keepOriginal.select("subject", "predicate", "object")
+      .unionAll(takeRefilled.select("subject", "predicate", "object"))
+  }
+
+  /** q06's reconcile plus the reference's row-count invariant (cell 20
+    * l.81-85): the output has exactly as many rows as the original.
+    */
+  private def reconcileChecked(original: DataFrame, refilled: DataFrame): DataFrame = {
+    val out = AntiJoinReconcile.reconcileUnique(original, refilled)
+    val (n0, n1) = (original.count(), out.count())
+    assert(n0 == n1, s"anti-join reconciliation changed row count: original=$n0 output=$n1")
+    out
+  }
+
   test("anti-join reconciliation: row count conserved, refilled pairs win") {
     val orig = Seq(
       ("s1", "orig_p", "o1"), ("s2", "orig_p", "o2"), ("s3", "orig_p", "o3"))
@@ -123,7 +150,7 @@ class PruneSpec extends AnyFunSuite {
     val refilled = Seq(
       ("s2", "new_p", "o2"), ("s9", "new_p", "o9")) // s9 not in orig: dropped
       .toDF("subject", "predicate", "object")
-    val out = AntiJoinReconcile.reconcileChecked(orig, refilled)
+    val out = reconcileChecked(orig, refilled)
     val rows = out.as[(String, String, String)].collect().toSet
     assert(rows == Set(
       ("s1", "orig_p", "o1"), ("s2", "new_p", "o2"), ("s3", "orig_p", "o3")))
@@ -139,7 +166,7 @@ class PruneSpec extends AnyFunSuite {
         val h = Ids.mix64(trial * 991L + i + 7)
         (s"s${math.abs(h % 20)}", "p1", s"o${math.abs(Ids.mix64(h) % 20)}")
       }.distinct.toDF("subject", "predicate", "object")
-      val out = AntiJoinReconcile.reconcile(orig, refilled)
+      val out = reconcileAntiSemi(orig, refilled)
       // key multiset of output == key multiset of original
       val k0 = orig.select("subject", "object").as[(String, String)].collect().sorted.toSeq
       val k1 = out.select("subject", "object").as[(String, String)].collect().sorted.toSeq
