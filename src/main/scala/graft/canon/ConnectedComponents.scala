@@ -123,7 +123,7 @@ object ConnectedComponents {
     * same adaptivity Catalyst applies when it broadcasts a small join
     * side. `spark.graft.driverRows=0` forces the distributed algorithm.
     */
-  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+  def run(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     // MIN ordering must match the column's native ordering, so the
     // union-find runs on the original type (numeric vs string), not on
@@ -157,7 +157,7 @@ object ConnectedComponents {
     }
     val as = if (isNumeric) "long" else "string"
     graft.core.Session.collectIfSmall(edges.select(col(c0).cast(as), col(c1).cast(as)))
-      .fold(distributed(edges, maxIter)) { local =>
+      .fold(distributed(edges)) { local =>
         import spark.implicits._
         val cc =
           if (isNumeric)
@@ -168,8 +168,8 @@ object ConnectedComponents {
       }
   }
 
-  /** [[run]]'s star rounds, whatever the input's size. */
-  private def distributed(edges: DataFrame, maxIter: Int): DataFrame = {
+  /** [[run]]'s star rounds, whatever the input's size, at most 50. */
+  private def distributed(edges: DataFrame): DataFrame = {
     // Distributed path over STRING ids: dictionary-encode to dense longs
     // first (the file's own scale note, r1 VERDICT item 10). ~6 star
     // rounds x 3 shuffles each move every id; 8-byte longs instead of
@@ -180,7 +180,7 @@ object ConnectedComponents {
     if (edges.schema(edges.columns(0)).dataType ==
         org.apache.spark.sql.types.StringType) {
       val (encoded, dict) = encodeEdges(edges)
-      return distributed(encoded, maxIter)
+      return distributed(encoded)
         .join(dict.select(col("k").as("__ik"), col("id")), Seq("id"))
         .join(dict.select(col("k").as("__ck"), col("id").as("component")),
           Seq("component"))
@@ -190,7 +190,7 @@ object ConnectedComponents {
     var prev = checksum(e)
     var converged = false
     var it = 0
-    while (!converged && it < maxIter) {
+    while (!converged && it < 50) {
       val next = canonical(smallStar(largeStar(e))).localCheckpoint(true)
       val cur = checksum(next)
       converged = cur == prev

@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   * search cost scale with DISTINCT contents instead of quadratically
   * in copy multiplicity (measured: q48 emitted 100.5x more pairs for
   * 10x data on the exact-dup-heavy ScaleUp corpus; q88 stayed flat).
+  *
+  * Every operator reads a corpus `docs(doc_id, text)`.
   */
 object DupAware {
 
@@ -24,30 +26,29 @@ object DupAware {
     * it into several consumers (band self-joins, attachment joins) and
     * the corpus text must be scanned once, not once per consumer.
     */
-  def classes(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
+  def classes(docs: DataFrame): DataFrame =
     docs
-      .select(col(idCol), md5(col(textCol)).as("fp"))
+      .select(col("doc_id"), md5(col("text")).as("fp"))
       .groupBy("fp")
-      .agg(min(idCol).as("rep_id"), count(lit(1)).as("copies"))
+      .agg(min("doc_id").as("rep_id"), count(lit(1)).as("copies"))
       .localCheckpoint(true)
 
   /** Rep-level SimHash near-dup pairs with multiplicities (q88 core):
     * (id1, id2, hamming, copies1, copies2, expanded_pairs) where each
     * rep pair stands for copies1*copies2 raw pairs. The raw pair set is
     * losslessly recoverable by expansion + each class's internal
-    * c*(c-1)/2 hamming-0 pairs (DedupSpec theorem test).
+    * c*(c-1)/2 hamming-0 pairs (DedupSpec theorem test). Pairs are
+    * within hamming 3, [[graft.functions.SimHash.bandedPairs]]' bound.
     */
-  def nearDupRepPairs(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", maxHamming: Int = 3): DataFrame = {
-    val cls = classes(docs, idCol, textCol)
+  def nearDupRepPairs(docs: DataFrame): DataFrame = {
+    val cls = classes(docs)
     val reps = docs.join(
-      cls.select(col("rep_id").as(idCol)), Seq(idCol), "left_semi")
-    val fps = reps.select(col(idCol),
-      graft.functions.Md5SimHash.of(col(textCol)).as("sh"))
+      cls.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
+    val fps = reps.select(col("doc_id"),
+      graft.functions.Md5SimHash.of(col("text")).as("sh"))
       .localCheckpoint(true)
     val copies = cls.select(col("rep_id"), col("copies"))
-    graft.functions.SimHash.bandedPairs(fps, maxHamming)
+    graft.functions.SimHash.bandedPairs(fps)
       .join(copies.select(col("rep_id").as("id1"),
         col("copies").as("copies1")), Seq("id1"))
       .join(copies.select(col("rep_id").as("id2"),
@@ -59,8 +60,8 @@ object DupAware {
 
   /** Benchmark decontamination (q90 core, GPT-3 appx C / The Pile):
     * for every doc NOT in the benchmark split, count its DISTINCT
-    * n-gram shingles appearing anywhere in the benchmark side;
-    * `contaminated` = overlap >= minOverlap. Asymmetric scale shape:
+    * 5-gram shingles appearing anywhere in the benchmark side;
+    * `contaminated` = any overlap. Asymmetric scale shape:
     * the benchmark shingle set feeds a LeftSemi join and the training
     * side stays a narrow explode -> semi-join -> keyed count — no pair
     * materialization. The semi join is planner-chosen: under
@@ -68,25 +69,22 @@ object DupAware {
     * (PlanSpec asserts this regime, the one the bench fixtures run in);
     * a benchmark shingle set larger than the threshold falls back to a
     * shuffled LeftSemi — still no pair set, but the benchmark side then
-    * costs one exchange. Sub-n-token docs have no shingles and report 0.
+    * costs one exchange. Sub-5-token docs have no shingles and report 0.
     */
-  def decontaminate(docs: DataFrame, isBench: Column, n: Int = 5,
-      minOverlap: Long = 1L, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    require(n >= 1, s"shingle size must be positive, got $n")
-    val toks = docs.select(col(idCol), isBench.as("__bench"),
-      split(col(textCol), " ").as("t"))
-    val withSh = toks.filter(size(col("t")) >= n)
-      .select(col(idCol), col("__bench"),
-        explode(array_distinct(NgramJaccard.shingles(col("t"), n))).as("sh"))
+  def decontaminate(docs: DataFrame, isBench: Column): DataFrame = {
+    val toks = docs.select(col("doc_id"), isBench.as("__bench"),
+      split(col("text"), " ").as("t"))
+    val withSh = toks.filter(size(col("t")) >= 5)
+      .select(col("doc_id"), col("__bench"),
+        explode(array_distinct(NgramJaccard.shingles(col("t"), 5))).as("sh"))
     val bench = withSh.filter(col("__bench")).select(col("sh")).distinct()
     val overlap = withSh.filter(!col("__bench"))
       .join(bench, Seq("sh"), "left_semi")
-      .groupBy(idCol).agg(count(lit(1)).as("n_overlap"))
-    toks.filter(!col("__bench")).select(col(idCol))
-      .join(overlap, Seq(idCol), "left")
-      .select(col(idCol),
+      .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
+    toks.filter(!col("__bench")).select(col("doc_id"))
+      .join(overlap, Seq("doc_id"), "left")
+      .select(col("doc_id"),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        (coalesce(col("n_overlap"), lit(0L)) >= minOverlap).as("contaminated"))
+        (coalesce(col("n_overlap"), lit(0L)) >= 1L).as("contaminated"))
   }
 }

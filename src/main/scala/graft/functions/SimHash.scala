@@ -23,22 +23,20 @@ object SimHash {
     * (each pair once, in its first shared band), Hamming-verify only
     * bucket collisions. With 4 bands, any pair within Hamming distance 3
     * shares at least one untouched band (pigeonhole), so the result is
-    * EXACTLY the all-pairs result for maxHamming <= 3 — with
-    * O(collisions) comparisons instead of O(N^2). Skewed buckets split
-    * under AQE.
+    * EXACTLY the all-pairs result at hamming <= 3, the one bound used —
+    * with O(collisions) comparisons instead of O(N^2). Skewed buckets
+    * split under AQE.
     *
     * fps: (id, sh), ids unique. Returns (id1, id2, hamming), id1 < id2.
     */
-  def bandedPairs(fps: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3,
-      s"4 byte-bands guarantee completeness only for hamming <= 3, got $maxHamming")
+  def bandedPairs(fps: DataFrame): DataFrame = {
     val bytes = (0 until 4).map(bd => shiftright(col("sh"), 8 * bd).bitwiseAND(lit(255L)))
     val banded = fps.select(col(fps.columns(0)).as("id1"), col("sh"), array(bytes: _*).as("keys"))
     val right = banded.select(col("id1").as("id2"), col("sh").as("sh2"), col("keys"))
     graft.similarity.Banding.pairs(banded, right, "keys", bands = 4)
       .filter(col("id1") < col("id2"))
       .withColumn("hamming", hamming(col("sh"), col("sh2")))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
       .select("id1", "id2", "hamming")
   }
 }

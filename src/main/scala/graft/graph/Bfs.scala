@@ -3,20 +3,16 @@ package graft.graph
 import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The graph layer's one BFS: level-synchronous k-hop walks
   * (reference code: src/gnn/lcilp/utils/dgl_utils.py:8-31),
   * as frontier joins over Spark ([[kHop]]) and as its driver twin over
   * an adjacency map ([[kHopLocal]]). Every walk in `Bfs` and
-  * [[Subgraphs]] is one of these two with its own keys, cap and blocked
+  * [[Subgraphs]] is one of these two with its own keys and blocked
   * node, so the two forms reach the same nodes at the same levels.
-  *
-  * `maxNodesPerHop` reproduces the reference's per-level down-sampling
-  * (dgl_utils.py:26-27) — the supernode/skew guard — but keeps the
-  * md5(node)-smallest nodes instead of np.random.choice, so results are
-  * retry-stable (SURVEY.md §7.4).
+  * Walks are uncapped: [[Subgraphs]] states why the reference's per-level
+  * down-sampling (dgl_utils.py:26-27) is not reproduced.
   */
 object Bfs {
 
@@ -28,17 +24,14 @@ object Bfs {
     * distinct rows are the level-0 nodes. Returns those columns plus
     * `dist` (the BFS level, seeds at 0) for every node within h hops of
     * its key's seeds — the first level that reaches a node is its
-    * shortest distance, enforced by the visited anti-join.
-    *  - `maxNodesPerHop` keeps, per key and level, the nodes with the
-    *    smallest md5(node);
-    *  - `blocked` names a seed column holding a node the walk never
-    *    enters (the enclosing subgraph's "other root removed" rule).
+    * shortest distance, enforced by the visited anti-join. `blocked`
+    * names a seed column holding a node the walk never enters (the
+    * enclosing subgraph's "other root removed" rule).
     */
   def kHop(
       edges: DataFrame,
       seeds: DataFrame,
       h: Int,
-      maxNodesPerHop: Option[Int] = None,
       keys: Seq[String] = Nil,
       blocked: Option[String] = None): DataFrame = {
     val carried = (keys ++ blocked).map(col)
@@ -56,18 +49,12 @@ object Bfs {
     while (level < h && nonEmpty) {
       level += 1
       val stepped = frontier.join(edges, frontier("node") === edges("src"))
-      var next = blocked.fold(stepped)(b => stepped.filter(col("dst") =!= col(b)))
+      val next = blocked.fold(stepped)(b => stepped.filter(col("dst") =!= col(b)))
         .select(carried :+ col("dst").as("node"): _*)
         .distinct()
         .join(visited.select((keys :+ "node").map(c => col(c).as(s"__v_$c")): _*),
           (keys :+ "node").map(c => col(c) === col(s"__v_$c")).reduce(_ && _),
           "left_anti")
-      maxNodesPerHop.foreach { cap =>
-        next = next.withColumn("__rn", row_number().over(
-          Window.partitionBy(keys.map(col): _*).orderBy(md5(col("node").cast("string")))))
-          .filter(col("__rn") <= cap)
-          .drop("__rn")
-      }
       val (cp, more) = checkpointNonEmpty(next.withColumn("dist", lit(level)))
       frontier = cp
       nonEmpty = more
@@ -78,34 +65,30 @@ object Bfs {
     visited
   }
 
-  /** Driver twin of [[kHop]] for one key: the same levels, md5 cap
-    * (over `node.toString`, as the distributed cast to string) and
-    * blocked node, over an in-memory adjacency map. Returns node -> dist.
+  /** Driver twin of [[kHop]] for one key: the same levels and blocked
+    * node, over an in-memory adjacency map. Returns node -> dist.
     */
   def kHopLocal[N: ClassTag](
       adj: Map[N, Array[N]],
       seeds: Seq[N],
       h: Int,
-      maxNodesPerHop: Option[Int] = None,
       blocked: Option[N] = None): Map[N, Int] = {
-    lazy val md = java.security.MessageDigest.getInstance("MD5")
-    def md5hex(n: N): String =
-      java.util.HexFormat.of().formatHex(md.digest(n.toString.getBytes("UTF-8")))
     val dist = scala.collection.mutable.Map.empty[N, Int]
     var frontier = seeds.distinct
     frontier.foreach(dist(_) = 0)
     var level = 0
     while (level < h && frontier.nonEmpty) {
       level += 1
-      val next = frontier
+      frontier = frontier
         .flatMap(n => adj.getOrElse(n, Array.empty[N]))
         .filter(n => !blocked.contains(n) && !dist.contains(n))
         .distinct
-      frontier = maxNodesPerHop.fold(next)(cap => next.sortBy(md5hex).take(cap))
       frontier.foreach(dist(_) = level)
     }
     dist.toMap
   }
+
+  private val MaxAllPairsNodes = 10000
 
   /** All-pairs shortest-path distances within components, bounded by
     * maxDepth (the reference's eccentricity/diameter/radius stats,
@@ -117,12 +100,12 @@ object Bfs {
     *
     * This op is inherently O(V*E): every node seeds a BFS. It is a
     * STATS op for dictionary-sized graphs (the reference runs networkx
-    * eccentricity on subgraphs), NOT a full-graph operator — `maxNodes`
-    * makes misapplication a hard error instead of a runaway job.
+    * eccentricity on subgraphs), NOT a full-graph operator — a graph
+    * of more than 10,000 nodes is a hard error instead of a runaway job.
     *
-    * `requireConverged` walks one level past maxDepth and throws if any
-    * node lands there: truncated distances would silently fragment
-    * every per-component stat downstream.
+    * The walk goes one level past maxDepth and throws if any node lands
+    * there: truncated distances would silently fragment every
+    * per-component stat downstream.
     *
     * Small inputs (fewer than [[graft.core.Session.driverRows]] edges)
     * run [[kHopLocal]] on the driver instead: a bounded collect answers
@@ -132,16 +115,15 @@ object Bfs {
     * the string-cast round trip is type-safe. `spark.graft.driverRows=0`
     * forces the distributed walk.
     */
-  def allPairsDistances(und: DataFrame, maxDepth: Int,
-      maxNodes: Int = 10000, requireConverged: Boolean = true): DataFrame = {
-    def guard(nNodes: Long): Unit = require(nNodes <= maxNodes,
+  def allPairsDistances(und: DataFrame, maxDepth: Int): DataFrame = {
+    def guard(nNodes: Long): Unit = require(nNodes <= MaxAllPairsNodes,
       s"allPairsDistances seeds a BFS from EVERY node (O(V*E)); refusing a graph " +
-        s"with > $maxNodes nodes — raise maxNodes only for bounded stats subgraphs")
+        s"with > $MaxAllPairsNodes nodes — it is a stats op for bounded subgraphs")
     def failTruncated(): Nothing = throw new IllegalStateException(
       s"allPairsDistances: BFS still had a non-empty frontier at maxDepth=$maxDepth " +
         "— distances are truncated and downstream per-component stats would " +
         "silently fragment; raise maxDepth above the true diameter")
-    val depth = if (requireConverged) maxDepth + 1 else maxDepth
+    val depth = maxDepth + 1
     val spark = und.sparkSession
     val idType = und.schema(und.columns(0)).dataType
     graft.core.Session.collectIfSmall(
@@ -162,9 +144,9 @@ object Bfs {
     }
     val nodes = und.select(col("src").as("a"))
       .unionAll(und.select(col("dst").as("a"))).distinct()
-    guard(nodes.limit(maxNodes + 1).count())
+    guard(nodes.limit(MaxAllPairsNodes + 1).count())
     val dist = kHop(und, nodes.withColumn("node", col("a")), depth, keys = Seq("a"))
-    if (requireConverged && dist.filter(col("dist") > maxDepth).limit(1).count() > 0)
+    if (dist.filter(col("dist") > maxDepth).limit(1).count() > 0)
       failTruncated()
     dist
   }
@@ -181,7 +163,7 @@ object Bfs {
     * unknown.
     */
   def eccentricityStats(und: DataFrame, maxDepth: Int): DataFrame = {
-    val ecc = allPairsDistances(und, maxDepth, requireConverged = true)
+    val ecc = allPairsDistances(und, maxDepth)
       .groupBy(col("a"))
       .agg(max(col("dist")).as("ecc"), min(col("node")).as("component"))
     ecc.groupBy(col("component"))

@@ -14,23 +14,30 @@ import org.apache.spark.sql.functions._
   * input is small).
   *
   * Semantics reproduced exactly:
-  *  - nodes = {head, tail} ∪ (N_h(head) ∩ N_h(tail))   (enclosing mode)
+  *  - nodes = {head, tail} ∪ (N_h(head) ∩ N_h(tail))   (enclosing)
   *  - d(v, head) is computed with tail REMOVED from the graph, and
   *    d(v, tail) with head removed (graph_sampler.py:365-391) — the
   *    walk's blocked node;
   *  - roots keep labels (0,1)/(1,0);
-  *  - only nodes within h of both roots are kept;
-  *  - optional per-level frontier cap `maxNodesPerHop` mirroring the
-  *    reference's down-sampling knob (utils/dgl_utils.py:26-27) with a
-  *    deterministic md5 order instead of np.random.choice — without it a
-  *    hub entity in the candidate set grows the frontier by
-  *    candidates x hub-degree rows per level.
+  *  - only nodes within h of both roots are kept.
   *
-  * Union mode and [[encloseAndLabelCommunity]] (the reference's
-  * ALWAYS-ON multicom community pruning, graph_sampler.py:319-325) share
-  * one assembly: gather the union neighborhood, collect its induced
-  * edges behind a per-candidate marker row, and label inside one beam
-  * body per candidate ([[communityLabelBeam]]).
+  * The reference's other two knobs are not reproduced, because neither
+  * changes an answer the reference recorded. Its run was "hop=3,
+  * enclosing, no per-hop cap" (SURVEY.md:499), so the per-level
+  * down-sampling (utils/dgl_utils.py:26-27) is left out. Without that
+  * cap the `enclosing_sub_graph = False` union mode
+  * (graph_sampler.py:327-331) emits exactly the enclosing rows: any
+  * <= h root-removed path from a kept node to a root consists of nodes
+  * that are themselves within h of that root, hence inside the union
+  * neighborhood, so union-induced distances equal full-graph
+  * root-removed distances and the max(d) <= h prune collapses the union
+  * set to the intersection set. q87 checks this on data.
+  *
+  * [[encloseAndLabelCommunity]] (the reference's ALWAYS-ON multicom
+  * community pruning, graph_sampler.py:319-325) gathers the union
+  * neighborhood, collects its induced edges behind a per-candidate
+  * marker row, and labels inside one beam body per candidate
+  * ([[communityLabelBeam]]).
   *
   * Small inputs (both under [[graft.core.Session.driverRows]] rows, read
   * by one bounded collect each) run on the driver with the same walks
@@ -42,49 +49,22 @@ import org.apache.spark.sql.functions._
 object Subgraphs {
 
   /** edges(src,dst) symmetric; candidates(edge_id, head, tail), where
-    * one edge_id names one (head, tail): an edge_id carrying two throws
-    * IllegalArgumentException on both paths (the distributed walks and
-    * beam key by edge_id alone); a candidate row repeated byte for byte
-    * is labelled once. Returns one row per kept subgraph node:
-    * (edge_id, node, d_head, d_tail).
-    *
-    * `mode` mirrors the reference's `enclosing_sub_graph` switch
-    * (graph_sampler.py:327-331): "enclosing" (default) intersects the
-    * per-root root-removed neighborhoods; "union" takes roots +
-    * N_h(head) ∪ N_h(tail) gathered WITHOUT root removal
-    * (get_neighbor_nodes, graph_sampler.py:283-297 removes no roots)
-    * and then labels within the induced subgraph with the other root
-    * removed (node_label, graph_sampler.py:365-391).
-    *
-    * Equivalence note (proved in GraphSpec "uncapped modes coincide"):
-    * with NO per-hop cap the two modes emit identical rows — any ≤ h
-    * root-removed path from a kept node to a root consists of nodes
-    * that are themselves within h of that root, hence inside the union
-    * neighborhood, so union-induced distances equal full-graph
-    * root-removed distances, and the pruned union set collapses to the
-    * intersection set. The modes genuinely diverge once
-    * `maxNodesPerHop` caps bind: enclosing samples per root-removed
-    * frontier, union per unremoved frontier (the reference's
-    * np.random.choice domains differ the same way), so different nodes
-    * survive the cap.
+    * one edge_id names one (head, tail): an edge_id carrying two, or a
+    * null head or tail, throws IllegalArgumentException on both paths
+    * (the distributed walks and beam key by edge_id alone); a candidate
+    * row repeated byte for byte is labelled once. Returns one row per
+    * kept subgraph node: (edge_id, node, d_head, d_tail).
     *
     * The driver path engages only for BIGINT node ids and a string
     * edge_id: the local body reads them without casts, and a cast would
     * silently canonicalize "0123"-style string ids.
     */
-  def encloseAndLabel(
-      edges: DataFrame,
-      candidates: DataFrame,
-      h: Int,
-      maxNodesPerHop: Option[Int] = None,
-      mode: String = "enclosing"): DataFrame = {
-    require(mode == "enclosing" || mode == "union",
-      s"encloseAndLabel mode must be enclosing|union, got '$mode'")
+  def encloseAndLabel(edges: DataFrame, candidates: DataFrame, h: Int): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType}
     val localShape = candidates.schema("edge_id").dataType == StringType &&
       Seq(candidates.schema("head"), candidates.schema("tail"),
         edges.schema("src"), edges.schema("dst")).forall(_.dataType == LongType)
-    label(edges, candidates, h, maxNodesPerHop, mode, localShape)
+    label(edges, candidates, h, community = false, tryLocal = localShape)
   }
 
   /** One gathered beam row: an induced edge of a candidate's h-hop
@@ -102,8 +82,7 @@ object Subgraphs {
   /** Community-pruned enclosing subgraphs — the reference's ALWAYS-ON
     * flow (graph_sampler.py:319-325):
     *
-    *   1. union neighborhood U = N_h(head) ∪ N_h(tail) (per-level caps
-    *      over the joint frontier of both roots);
+    *   1. union neighborhood U = N_h(head) ∪ N_h(tail);
     *   2. multicom: approximate PPR from seeds {head, tail} + conductance
     *      sweep cut -> community C (multicom.py:52-141);
     *   3. nodes = {head, tail} ∪ ((C \ roots) ∩ U);
@@ -112,8 +91,8 @@ object Subgraphs {
     *      (node_label, graph_sampler.py:365-391);
     *   5. prune to max(d_head, d_tail) <= h.
     *
-    * Steps 2-5 run in the per-candidate beam over the gathered (small,
-    * capped) subgraph — the reference runs the same per-link computation
+    * Steps 2-5 run in the per-candidate beam over the gathered h-hop
+    * subgraph — the reference runs the same per-link computation
     * in an mp.Pool worker. Deviation (documented): the reference
     * evaluates PPR on the full graph; the beam evaluates it on the
     * gathered h-hop neighborhood — the push algorithm's mass outside the
@@ -124,24 +103,22 @@ object Subgraphs {
     * candidates(edge_id, head, tail).
     * Returns (edge_id, node, d_head, d_tail).
     */
-  def encloseAndLabelCommunity(
-      edges: DataFrame,
-      candidates: DataFrame,
-      h: Int,
-      maxNodesPerHop: Option[Int] = None): DataFrame =
-    label(edges, candidates, h, maxNodesPerHop, "community", tryLocal = true)
+  def encloseAndLabelCommunity(edges: DataFrame, candidates: DataFrame, h: Int): DataFrame =
+    label(edges, candidates, h, community = true, tryLocal = true)
 
-  private val (repeatedPrefix, repeatedSuffix) =
-    ("Subgraphs: candidate edge_id ", " carries more than one (head, tail)")
+  // both candidate errors share the prefix the distributed catch maps
+  private val (candidatePrefix, repeatedSuffix, nullSuffix) =
+    ("Subgraphs: candidate edge_id ", " carries more than one (head, tail)",
+      " has a null head or tail")
 
-  /** Dispatch for both entry points; mode is enclosing|union|community.
-    * The size probe IS the driver input: a bounded collect answers "is
-    * it small?" and, when yes, is what the local walks run on — nothing
-    * is read twice. Null endpoints are dropped before the limit; they
-    * never contribute rows on either path.
+  /** Dispatch for both entry points. The size probe IS the driver
+    * input: a bounded collect answers "is it small?" and, when yes, is
+    * what the local walks run on — nothing is read twice. Edges with a
+    * null endpoint are dropped before the limit; they never contribute
+    * rows on either path.
     */
   private def label(edges: DataFrame, candidates: DataFrame, h: Int,
-      maxNodesPerHop: Option[Int], mode: String, tryLocal: Boolean): DataFrame = {
+      community: Boolean, tryLocal: Boolean): DataFrame = {
     import graft.core.Session.collectIfSmall
     val local = if (!tryLocal) None else for {
       e <- collectIfSmall(edges.select(col("src").cast("long"), col("dst").cast("long"))
@@ -149,13 +126,16 @@ object Subgraphs {
       c <- collectIfSmall(candidates.select(col("edge_id").cast("string"),
         col("head").cast("long"), col("tail").cast("long")))
     } yield {
+      def reject(eid: String, suffix: String) =
+        throw new IllegalArgumentException(candidatePrefix + eid + suffix)
+      c.find(r => r.isNullAt(1) || r.isNullAt(2)).foreach(r => reject(r.getString(0), nullSuffix))
       c.groupBy(_.getString(0)).collectFirst {
         case (eid, rs) if rs.map(r => (r.get(1), r.get(2))).distinct.length > 1 => eid
-      }.foreach(eid => throw new IllegalArgumentException(repeatedPrefix + eid + repeatedSuffix))
+      }.foreach(reject(_, repeatedSuffix))
       labelLocal(edges.sparkSession, e.map(r => (r.getLong(0), r.getLong(1))),
-        c.map(r => (r.getString(0), r.getLong(1), r.getLong(2))), h, maxNodesPerHop, mode)
+        c.map(r => (r.getString(0), r.getLong(1), r.getLong(2))), h, community)
     }
-    local.getOrElse(labelDistributed(edges, candidates, h, maxNodesPerHop, mode))
+    local.getOrElse(labelDistributed(edges, candidates, h, community))
   }
 
   /** Driver path: the distributed walks per candidate over one
@@ -163,32 +143,27 @@ object Subgraphs {
     * beam body, so both paths emit identical rows.
     */
   private def labelLocal(spark: SparkSession, e: Array[(Long, Long)],
-      cands: Array[(String, Long, Long)], h: Int,
-      maxNodesPerHop: Option[Int], mode: String): DataFrame = {
+      cands: Array[(String, Long, Long)], h: Int, community: Boolean): DataFrame = {
     import spark.implicits._
     val adj: Map[Long, Array[Long]] = e.groupBy(_._1)
       .map { case (k, v) => k -> v.map(_._2) }
     // full-graph degrees; only the community sweep reads them
     def deg(n: Long): Int = adj.get(n).fold(0)(_.length)
     val out = cands.distinct.toSeq.flatMap { case (eid, head, tail) =>
-      def reach(seeds: Long*) = Bfs.kHopLocal(adj, seeds, h, maxNodesPerHop).keySet
-      if (mode == "enclosing") {
-        val dh = Bfs.kHopLocal(adj, Seq(head), h, maxNodesPerHop, Some(tail))
-        val dt = Bfs.kHopLocal(adj, Seq(tail), h, maxNodesPerHop, Some(head))
+      if (!community) {
+        val dh = Bfs.kHopLocal(adj, Seq(head), h, Some(tail))
+        val dt = Bfs.kHopLocal(adj, Seq(tail), h, Some(head))
         Iterator(LabeledNode(eid, head, 0, 1), LabeledNode(eid, tail, 1, 0)) ++
           dh.iterator.collect { case (n, a) if n != head && n != tail && dt.contains(n) =>
             LabeledNode(eid, n, a, dt(n))
           }
       } else {
-        val u =
-          if (mode == "union" && maxNodesPerHop.nonEmpty) reach(head) ++ reach(tail)
-          else reach(head, tail)
+        val u = Bfs.kHopLocal(adj, Seq(head, tail), h).keySet
         val induced = Iterator((head, head, deg(head))) ++
           u.iterator.flatMap { a =>
             adj.getOrElse(a, Array.empty[Long]).iterator.filter(u).map(b => (a, b, deg(a)))
           }
-        communityLabelBeam(eid, head, tail, induced, e.length.toDouble, h,
-          mode == "community")
+        communityLabelBeam(eid, head, tail, induced, e.length.toDouble, h)
       }
     }
     spark.createDataset(out).toDF()
@@ -199,40 +174,40 @@ object Subgraphs {
     * the reverse.
     *  - enclosing: keyed by (edge_id, side), other root blocked; keep
     *    the nodes both sides reach.
-    *  - union with a cap: keyed by (edge_id, side), nothing blocked —
-    *    the reference samples each root's frontier separately.
-    *  - union uncapped and community: keyed by edge_id, both roots in
-    *    one frontier (a multi-seed BFS reaches the union of the per-seed
-    *    reaches) and the community cap over that joint frontier.
+    *  - community: keyed by edge_id, both roots in one frontier (a
+    *    multi-seed BFS reaches the union of the per-seed reaches).
     */
   private def labelDistributed(edges: DataFrame, rawCandidates: DataFrame, h: Int,
-      maxNodesPerHop: Option[Int], mode: String): DataFrame = {
+      community: Boolean): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val candidates = rawCandidates.select("edge_id", "head", "tail").distinct()
-    // one edge_id names one (head, tail): the guard rides on a window
-    // over edge_id whose partitioning the walk's seed distinct reuses,
-    // so the walk's first checkpoint job raises it and no job is added
+    // one edge_id names one non-null (head, tail): the guard rides on a
+    // window over edge_id whose partitioning the walk's seed distinct
+    // reuses, so the walk's first checkpoint job raises it and no job
+    // is added
     val ends = struct(col("head"), col("tail"))
     val byEdge = Window.partitionBy(col("edge_id"))
+    def reject(suffix: String) = raise_error(concat(lit(candidatePrefix),
+      coalesce(col("edge_id").cast("string"), lit("null")), lit(suffix)))
     val seeds = candidates
       .select(col("edge_id"), explode(array(
           struct(lit(0).as("side"), col("tail").as("other"), col("head").as("node")),
           struct(lit(1).as("side"), col("head").as("other"), col("tail").as("node")))).as("__s"),
         (min(ends).over(byEdge) =!= max(ends).over(byEdge)).as("__repeated"))
       .select(col("edge_id"), col("__s.side").as("side"), col("__s.other").as("other"),
-        when(col("__repeated"), raise_error(concat(lit(repeatedPrefix),
-          coalesce(col("edge_id").cast("string"), lit("null")), lit(repeatedSuffix))))
+        when(col("__s.node").isNull || col("__s.other").isNull, reject(nullSuffix))
+          .when(col("__repeated"), reject(repeatedSuffix))
           .otherwise(col("__s.node")).as("node"))
     def walk(keys: Seq[String], blocked: Option[String] = None): DataFrame =
-      try Bfs.kHop(edges, seeds, h, maxNodesPerHop, keys, blocked)
+      try Bfs.kHop(edges, seeds, h, keys, blocked)
       catch {
         case e: RuntimeException with SparkThrowable if e.getCondition == "USER_RAISED_EXCEPTION" &&
-            e.getMessageParameters.get("errorMessage").startsWith(repeatedPrefix) =>
+            e.getMessageParameters.get("errorMessage").startsWith(candidatePrefix) =>
           throw new IllegalArgumentException(e.getMessageParameters.get("errorMessage"), e)
       }
 
-    if (mode == "enclosing") {
+    if (!community) {
       val walked = walk(Seq("edge_id", "side"), Some("other"))
       def side(s: Int, d: String) = walked.filter(col("side") === s)
         .select(col("edge_id"), col("node"), col("dist").as(d))
@@ -247,10 +222,7 @@ object Subgraphs {
       return roots.unionAll(nonRoots)
     }
 
-    val keys = if (mode == "union" && maxNodesPerHop.nonEmpty) Seq("edge_id", "side")
-      else Seq("edge_id")
-    val u = walk(keys)
-      .select("edge_id", "node").distinct()
+    val u = walk(Seq("edge_id")).select("edge_id", "node").distinct()
     // induced edges per candidate (both endpoints in U) plus one marker
     // row per candidate, so every candidate forms a group even when its
     // beam has no induced edges (the beam's adjacency build drops it)
@@ -263,25 +235,19 @@ object Subgraphs {
     val markers = candidates.select(col("edge_id"),
       col("head").as("src"), col("head").as("dst"))
     val beam = induced.unionAll(markers).join(candidates, Seq("edge_id"))
-    // community needs full-graph degrees and the total volume
-    // (symmetric edge list: out-degree == degree, row count == volume),
-    // over the non-null rows the driver path collects
-    val community = mode == "community"
-    val (withDeg, totalVol) =
-      if (!community) (beam.withColumn("__deg", lit(0L)), 0.0)
-      else {
-        val clean = edges.filter(col("src").isNotNull && col("dst").isNotNull)
-        (beam.join(clean.groupBy(col("src")).agg(count(lit(1)).as("__deg")),
-          Seq("src"), "left"), clean.count().toDouble)
-      }
-    withDeg.select(col("edge_id"), col("head"), col("tail"), col("src"), col("dst"),
+    // full-graph degrees and the total volume (symmetric edge list:
+    // out-degree == degree, row count == volume), over the non-null
+    // rows the driver path collects
+    val clean = edges.filter(col("src").isNotNull && col("dst").isNotNull)
+    val totalVol = clean.count().toDouble
+    beam.join(clean.groupBy(col("src")).agg(count(lit(1)).as("__deg")), Seq("src"), "left")
+      .select(col("edge_id"), col("head"), col("tail"), col("src"), col("dst"),
         coalesce(col("__deg"), lit(0L)).as("src_deg"))
       .as[BeamEdge]
       .groupByKey(_.edge_id).flatMapGroups { (eid, rows) =>
         val buf = rows.toArray
         communityLabelBeam(eid, buf.head.head, buf.head.tail,
-          buf.iterator.map(r => (r.src, r.dst, r.src_deg.toInt)), totalVol, h,
-          community)
+          buf.iterator.map(r => (r.src, r.dst, r.src_deg.toInt)), totalVol, h)
       }.toDF()
   }
 
@@ -292,8 +258,7 @@ object Subgraphs {
     * (self-loop marker rows tolerated: dropped by the adjacency build).
     */
   private def communityLabelBeam(eid: String, head: Long, tail: Long,
-      edges: Iterator[(Long, Long, Int)], totalVol: Double,
-      h: Int, community: Boolean): Iterator[LabeledNode] = {
+      edges: Iterator[(Long, Long, Int)], totalVol: Double, h: Int): Iterator[LabeledNode] = {
     val buf = edges.toArray
     val fullDeg: Map[Long, Int] = buf.iterator.map(r => r._1 -> r._3).toMap
     val adj: Map[Long, Array[Long]] = buf.iterator
@@ -301,16 +266,10 @@ object Subgraphs {
       .map(r => r._1 -> r._2) // edges arrive symmetric
       .toSeq.groupBy(_._1)
       .map { case (k, v) => k -> v.map(_._2).distinct.sorted.toArray }
-    // union mode skips multicom: cluster = all gathered non-root nodes
-    // (graph_sampler.py:331 list(ind) + list(subgraph_nei_nodes_un))
-    val cluster =
-      if (!community) (adj.keySet ++ adj.valuesIterator.flatten) - head - tail
-      else {
-        val ppr = Ppr.approximatePpr(adj, Seq(head, tail), fullDeg = fullDeg)
-        val comm = Ppr.sweepCut(adj, ppr, fullDeg, Some(totalVol))
-        (comm - head - tail)
-          .intersect(adj.keySet ++ adj.valuesIterator.flatten) // C ∩ U
-      }
+    val ppr = Ppr.approximatePpr(adj, Seq(head, tail), fullDeg = fullDeg)
+    val comm = Ppr.sweepCut(adj, ppr, fullDeg, Some(totalVol))
+    val cluster = (comm - head - tail)
+      .intersect(adj.keySet ++ adj.valuesIterator.flatten) // C ∩ U
     val subNodes = Set(head, tail) ++ cluster
     val subAdj: Map[Long, Array[Long]] = adj.collect {
       case (k, vs) if subNodes(k) => k -> vs.filter(subNodes)

@@ -845,10 +845,9 @@ object DataQueries {
               concat(col("text"),
                 lit(" leaked benchmark passage alpha beta gamma delta")))
               .otherwise(col("text")).as("text"))
-        // operator core (shingle size / benchmark predicate / overlap
-        // threshold all parameters) lives in dedup.DupAware
-        graft.dedup.DupAware.decontaminate(docs,
-          isBench = pmod(col("doc_id"), lit(97)) === 0, n = 5, minOverlap = 1L)
+        // operator core (5-gram shingles, any overlap contaminates)
+        // lives in dedup.DupAware; the benchmark predicate is this query's
+        graft.dedup.DupAware.decontaminate(docs, isBench = pmod(col("doc_id"), lit(97)) === 0)
       },
       Some("""WITH docs AS (SELECT doc_id, string_split(
              |         CASE WHEN doc_id % 50 = 0
@@ -945,7 +944,7 @@ object DataQueries {
         val fp = table(s, d, "documents").select(col("doc_id"),
           graft.functions.Md5SimHash.of(col("text")).as("sh"))
           .localCheckpoint(true)
-        graft.functions.SimHash.bandedPairs(fp, maxHamming = 3)
+        graft.functions.SimHash.bandedPairs(fp)
       },
       Some("""WITH tok AS (
              |  SELECT doc_id, md5(t) AS h
@@ -997,7 +996,7 @@ object DataQueries {
             .select((col("doc_id") + lit(10000000L)).as("doc_id"), col("text")))
         // operator core lives in dedup.DupAware (checkpointed class
         // table + rep fingerprints — text scanned once per frame)
-        graft.dedup.DupAware.nearDupRepPairs(corpus, maxHamming = 3)
+        graft.dedup.DupAware.nearDupRepPairs(corpus)
       },
       Some("""WITH corpus AS (
              |  SELECT doc_id, text FROM documents
@@ -1039,7 +1038,7 @@ object DataQueries {
 
     QueryDef("q49_ann_lsh_topk",
       // LSH-bucketed approximate top-3 neighbors (scale path for q42's
-      // brute force; r5 defaults: 8 tables x 6 planes with full 1-bit
+      // brute force; 8 tables x 6 planes with full 1-bit
       // multiprobe on the query side — fixture recall 0.93).
       // Pair-level semi-oracle: the approximate CANDIDATE
       // SELECTION stays unoracled (AnnSpec checks determinism + recall

@@ -922,10 +922,10 @@ object KgQueries {
       // engines). Expected per candidate: the nation (1,1) plus every
       // same-nation customer (2,2) — other nations/regions prune on the
       // root-removed distances. Both modes are emitted with a mode
-      // column; UNCAPPED the two provably coincide (Subgraphs scaladoc
-      // theorem), so the oracle computes ONE root-removed BFS and
-      // cross-joins both labels — the driver gate hash-checks the
-      // theorem itself on real data.
+      // column; uncapped, union provably emits the enclosing rows
+      // (Subgraphs scaladoc), so both labels carry the one enclosing
+      // extraction, and the oracle, which computes ONE root-removed BFS
+      // and cross-joins both labels, checks that on data.
       (s, d) => {
         val cust = table(s, d, "customer")
         val nat = table(s, d, "nation")
@@ -943,11 +943,8 @@ object KgQueries {
             (col("c_custkey").cast("long") * 8 + 1).as("head"),
             (col("n_regionkey").cast("long") * 8 + 3).as("tail"))
         val enc = graft.graph.Subgraphs.encloseAndLabel(edges, cands, 2)
-          .withColumn("mode", lit("enclosing"))
-        val uni = graft.graph.Subgraphs
-          .encloseAndLabel(edges, cands, 2, None, "union")
-          .withColumn("mode", lit("union"))
-        enc.unionByName(uni)
+        enc.withColumn("mode", lit("enclosing"))
+          .unionByName(enc.withColumn("mode", lit("union")))
       },
       Some("""WITH RECURSIVE
              |und AS (

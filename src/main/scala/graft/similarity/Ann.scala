@@ -22,44 +22,36 @@ import org.apache.spark.sql.functions._
 object Ann {
 
   /** LSH-bucketed top-k: queries x corpus restricted to shared buckets,
-    * exact cosine rerank, deterministic tiebreak. All `tables` bucket ids
-    * of a vector come from one native [[graft.functions.LshBuckets]] pass
-    * per row and are the band keys of [[Banding.pairs]], so a pair that
-    * shares buckets in several tables is a candidate once.
+    * exact cosine rerank, deterministic tiebreak. 8 tables of 6
+    * hyperplanes each: all 8 bucket ids of a vector come from one native
+    * [[graft.functions.LshBuckets]] pass per row and are the band keys
+    * of [[Banding.pairs]], so a pair that shares buckets in several
+    * tables is a candidate once.
     *
-    * `multiprobe` > 0 additionally probes, per table, the `multiprobe`
-    * buckets at Hamming distance 1 from the query's bucket (one
-    * hyperplane bit flipped). Probing happens ONLY on the query side —
-    * the corpus keeps exactly `tables` signature rows per vector — so
-    * the extra recall is paid by the small side of the join, not by
-    * corpus shuffle volume: 8 tables with full 1-bit multiprobe reaches
-    * the recall of ~3x the tables at a third of the corpus-side index.
+    * Full 1-bit multiprobe: per table, the query also probes the 6
+    * buckets at Hamming distance 1 from its own (one hyperplane bit
+    * flipped). Probing happens ONLY on the query side — the corpus
+    * keeps exactly 8 signature rows per vector — so the extra recall is
+    * paid by the small side of the join, not by corpus shuffle volume.
+    *
+    * Sized on weakly-clustered data. Fixture sweep (sf0.001, recall@3 vs
+    * brute force): exact-bucket 8x6 -> 0.33, 16x6 -> 0.57, 24x6 -> 0.67;
+    * with full 1-bit multiprobe 8x6 -> 0.93 (chosen: the recall of >3x
+    * the tables at 1/3 the corpus-side index; AnnSpec floor 0.7),
+    * 12x6 -> 1.00. The probe fan-out costs ~2.3x the candidate rerank of
+    * 24x6-exact but only on the query side; corpus signature memory and
+    * shuffle — the 10^9-vector cost — stay at 8 rows per vector.
     */
   def lshTopK(
       emb: DataFrame, // (id, v: array<double>)
       queries: DataFrame, // (qid, qv: array<double>)
-      k: Int,
-      // defaults tuned for weakly-clustered data. Fixture sweep
-      // (sf0.001, recall@3 vs brute force): exact-bucket 8x6 -> 0.33,
-      // 16x6 -> 0.57, 24x6 -> 0.67; with full 1-bit multiprobe
-      // 8x6 -> 0.93 (chosen: the recall of >3x the tables at 1/3 the
-      // corpus-side index; AnnSpec floor 0.7), 12x6 -> 1.00. The probe
-      // fan-out costs ~2.3x the candidate rerank of 24x6-exact but
-      // only on the query side; corpus signature memory and shuffle —
-      // the 10^9-vector cost — stay at 8 rows per vector.
-      tables: Int = 8,
-      planes: Int = 6,
-      multiprobe: Int = 6): DataFrame = {
-    require(multiprobe >= 0, s"multiprobe must be >= 0, got $multiprobe")
-    // clamp, don't throw: probing more bits than there are planes is
-    // meaningless, and a fixed default must not break explicit
-    // shorter-signature calls (planes < 6)
-    val mp = math.min(multiprobe, planes)
+      k: Int): DataFrame = {
+    val (tables, planes) = (8, 6)
     def sig(df: DataFrame, v: String) = df.withColumn("keys",
       graft.functions.VectorOps.lshBuckets(col(v), tables, planes))
     // table t matches when xor(query bucket, corpus bucket) is 0 or one
-    // of the mp probed bits; the probes of one bucket are distinct
-    val probes = identity[Column] _ +: (0 until mp).map(b =>
+    // of the probed bits; the probes of one bucket are distinct
+    val probes = identity[Column] _ +: (0 until planes).map(b =>
       (c: Column) => c.bitwiseXOR(lit(1 << b)))
     rerank(Banding.pairs(sig(queries, "qv"), sig(emb, "v"), "keys", tables, probes), k)
   }
@@ -108,7 +100,7 @@ object Ann {
     *
     * Seeding: the C corpus vectors with the smallest xxhash64(id) — a
     * pure hash choice (no rand(); retry-stable), evaluated as a
-    * TakeOrdered of C rows, never a full sort. Then `iters` Lloyd
+    * TakeOrdered of C rows, never a full sort. Then 2 Lloyd
     * rounds, each a single narrow pass over the corpus: the centroid
     * matrix (C x dim doubles — bounded metadata, like the ranking
     * offsets collect) is embedded in a native
@@ -128,8 +120,7 @@ object Ann {
     * against that same matrix and reuse the source, so a broadcast
     * matrix ships once, not twice.
     */
-  private[graft] def ivfIndexWithSource(emb: DataFrame, c: Int,
-      iters: Int = 2)
+  private[graft] def ivfIndexWithSource(emb: DataFrame, c: Int)
       : (Array[Array[Double]], DataFrame, graft.functions.CentroidSource) = {
     var centroids: Array[Array[Double]] = emb
       .orderBy(pmod(xxhash64(col("id")), lit(Int.MaxValue.toLong)), col("id"))
@@ -140,8 +131,7 @@ object Ann {
     val dim = centroids.head.length
     require(centroids.forall(_.length == dim),
       s"IVF index: mixed vector dimensionality in seed sample (expected $dim)")
-    var it = 0
-    while (it < iters) {
+    for (_ <- 1 to 2) {
       val src = centroidSource(emb, centroids)
       val cid = element_at(
         graft.functions.VectorOps.centroidRanks(col("v"), src), 1)
@@ -159,7 +149,6 @@ object Ann {
       }
       centroids = centroids.indices
         .map(i => means.getOrElse(i, centroids(i))).toArray
-      it += 1
     }
     val src = centroidSource(emb, centroids)
     val cid = element_at(
@@ -183,10 +172,9 @@ object Ann {
       // over-fragments the 1k-vector fixture). These literal defaults
       // fit the registry queries' tables; larger corpora want c ~ sqrt(N).
       c: Int = 32,
-      nprobe: Int = 8,
-      iters: Int = 2): DataFrame = {
+      nprobe: Int = 8): DataFrame = {
     require(c >= 1, s"ivfTopK: c must be >= 1, got $c")
-    val (_, index, src) = ivfIndexWithSource(emb, c, iters)
+    val (_, index, src) = ivfIndexWithSource(emb, c)
     // probes rank against the SAME final matrix as the index assignment
     // — reuse its transport (one broadcast total, not one per use site)
     val probes = queries.select(col("qid"), col("qv"),

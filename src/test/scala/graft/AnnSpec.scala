@@ -45,7 +45,7 @@ class AnnSpec extends AnyFunSuite {
     val recall = (brute intersect lsh).size.toDouble / brute.size
     info(f"recall@3 = $recall%.2f (lsh pairs=${lsh.size}, brute=${brute.size})")
     // floor pinned at ~75% of the measured fixture recall (0.93 at the
-    // r5 default 8 tables x 6 planes with full 1-bit multiprobe, fully
+    // fixed 8 tables x 6 planes with full 1-bit multiprobe, fully
     // deterministic: hash-seeded planes, no rand) — a broken index
     // fails loudly instead of slipping under a vacuous 0.1 bar
     assert(recall >= 0.7, f"recall collapsed: $recall%.2f (fixture measures 0.93)")
@@ -74,7 +74,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("IVF index: every vector assigned to its true max-cosine centroid") {
-    val (centroids, index, _) = Ann.ivfIndexWithSource(emb, c = 8, iters = 2)
+    val (centroids, index, _) = Ann.ivfIndexWithSource(emb, c = 8)
     assert(centroids.length == 8)
     val rows = index.as[(Long, Seq[Double], Int)].collect()
     assert(rows.length == emb.count())
